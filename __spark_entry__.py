@@ -935,8 +935,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q_frontier_oplog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frontier op-log fold (swspark.driver.fold_frontier_ops — the
-    resume-reconstruction semantics behind the delta-log commits):
+    """Frontier op-log fold (swspark.driver.fold_frontier_ops — how
+    every wave, and resume, rebuilds the frontier from its commits):
     base ⊳ (adds, dels) with last-del-wins per key, same-wave del
     beating its add, earliest-discovered row winning among survivors.
     Base/ops are synthesized deterministically from the events table;

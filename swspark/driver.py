@@ -6,14 +6,19 @@ Reimagines the reference's concurrent pipeline
 (SURVEY.md §1.3, §3.1):
 
     seeds -> expand (A21) ->:  per wave:
+        frontier (the committed op log folded over the bucketed base)
         schedule (window-rank under politeness budgets, A23-A25)
         fetch    (frontier |x| pages, A1)
         extract  (Arrow UDF: records + sendUrl discovery, A32/A22)
-        commit   (snapshot frontier/seen/records + lineage, A30 flush)
+        commit   (snapshot seen/records + lineage, frontier op-log
+                  delta; every K waves a new bucketed base, A30 flush)
     until the schedulable frontier is empty (quiescence, A28) or a
     wave/URL budget is hit.
 
 Invariants:
+- one frontier path: a live wave schedules from exactly the frontier
+  resume rebuilds (both fold the committed state), so no wave's plan
+  carries an earlier wave's lineage;
 - no URL is fetched twice across waves/resume (engine-introduced
   seen-set; the reference lacks one — SURVEY.md §2 Part B);
 - scheduling order is deterministic: (priority DESC, last_fetch_ts
@@ -26,10 +31,10 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -108,11 +113,6 @@ class CrawlConfig:
     robot_url: str | None = None  # explicit robots override (config.rs:44-46)
     salt_buckets: int = 8
     shuffle_partitions: int | None = None
-    # broadcast the wave's seen-delta keys into the frontier anti-join
-    # while the wave is below this many URLs (a 10^6-URL delta is
-    # ~16 MB of (hash, canon) — cheap vs shuffling a 10^10 frontier);
-    # larger waves fall back to a shuffle join automatically
-    delta_broadcast_max: int = 4_000_000
     # recrawl aging: a URL fetched in wave w becomes schedulable again
     # in wave w + recrawl_after_waves (None = fetch-once, the
     # reference's semantics). Resurrected rows carry a synthetic
@@ -272,7 +272,6 @@ def crawl(
         for tbl in (state.records, state.trace, state.errors, state.seen,
                     state.shards, state.discovered):
             tbl.rollback_to_wave_before(wave)
-        frontier = _reconstruct_frontier(spark, state.frontier)
         seen_df = (
             state.seen.read(spark)
             if state.seen.exists()
@@ -286,16 +285,14 @@ def crawl(
         frontier, xml_errors, expand_cleanup = init_frontier(
             spark, config, seeds, sitemaps, rules_table, accept
         )
-        frontier = robots_filter(frontier)
         wave = 0
         # the seeded frontier IS the first compacted base (bucketed):
-        # wave-0's anti-joins and every later reconstruction anchor on it
+        # every wave's frontier fold anchors on it until a compaction
         state.frontier.commit(
-            frontier, mode="overwrite", bucket=key_bucket,
+            robots_filter(frontier), mode="overwrite", bucket=key_bucket,
             lineage={"next_wave": 0, "phase": "seeded",
                      "compacted_through": -1},
         )
-        frontier = state.frontier.read_bucketed(spark)
         blooms: dict[int, BloomFilter] = {}
         if xml_errors is not None:
             state.errors.commit(
@@ -310,16 +307,15 @@ def crawl(
         expand_cleanup()  # frontier + errors are committed: release caches
 
     totals = {"waves": 0, "fetched": 0, "records": 0, "discovered": 0, "errors": 0}
-    # iterative-loop cache handles: cur_handle backs the current
-    # frontier (None when it is disk-backed), prev_frontier is the
-    # parent awaiting unpersist once the child materializes
-    cur_handle: DataFrame | None = None
-    prev_frontier: DataFrame | None = None
     shards_synced = False  # mmap transport: full shard-file refresh once
     rank_bounds = None  # hot-host bucket boundaries, resampled every K
     bounds_age = 0
 
     while wave < config.max_waves:
+        # every wave, live or resumed, schedules from the committed
+        # state (bucketed base ⊳ op log): the plan is one base scan
+        # plus one op-log scan whatever the wave index
+        frontier = _reconstruct_frontier(spark, state.frontier)
         ttl = config.recrawl_after_waves
         resurrected = None
         if ttl is not None and wave >= ttl:
@@ -399,24 +395,16 @@ def crawl(
             config.salt_buckets,
         ).cache()
         n_sched = scheduled.count()
-        # the count above materialized THIS wave's frontier (persisted
-        # or freshly read); its parent's cache is now dead weight
-        if prev_frontier is not None:
-            prev_frontier.unpersist()
-            prev_frontier = None
         if n_sched == 0:
             scheduled.unpersist()
             if resurrected is not None:
                 # an idle (fully-throttled) wave still changed the
                 # frontier: commit the resurrected rows as add-only
-                # op-log deltas, or a crash after later waves advance
-                # next_wave would rebuild a frontier silently missing
-                # them (read_wave consults wave w-ttl exactly once)
+                # op-log deltas, or the next wave's fold (and any
+                # resume) would miss them (read_wave consults wave
+                # w-ttl exactly once)
                 state.frontier.commit(
-                    _frontier_delta(
-                        resurrected.limit(0), resurrected.limit(0),
-                        resurrected, wave,
-                    ),
+                    _frontier_delta(None, None, resurrected, wave),
                     mode="append",
                     lineage={"next_wave": wave + 1, "wave": wave,
                              "scheduled": 0},
@@ -533,12 +521,6 @@ def crawl(
             lineage={"wave": wave},
         )
 
-        # --- next frontier: remove attempted, add discovered ----------
-        next_frontier = build_next_frontier(
-            frontier, seen_delta, disc_new,
-            broadcast_delta=n_sched <= config.delta_broadcast_max,
-        )
-
         m = obs.get
         lineage = {
             "next_wave": wave + 1,
@@ -549,38 +531,22 @@ def crawl(
             "errors": n_errors,
             "seen_version": state.seen.current_version(),
         }
+        # --- next frontier: wave-sized DELTA commit (op log: del =
+        # scheduled keys, add = discovered + resurrected rows), never
+        # an O(|frontier|) rewrite; the next wave folds it in ---------
+        state.frontier.commit(
+            _frontier_delta(seen_delta, disc_new, resurrected, wave),
+            mode="append", lineage=lineage,
+        )
         if compaction_due:
-            # every K waves: materialize the frontier as a fresh
-            # bucketed base (full rewrite, amortized O(|frontier|/K)
-            # per wave) — also resets the iterative plan lineage
-            lineage["compacted_through"] = wave
+            # every K waves: fold base + K deltas into a fresh bucketed
+            # base (amortized O(|frontier|/K) per wave), as seen does
             state.frontier.commit(
-                next_frontier, mode="overwrite", bucket=key_bucket,
-                lineage=lineage,
+                _reconstruct_frontier(spark, state.frontier),
+                mode="overwrite", bucket=key_bucket,
+                lineage=dict(lineage, compacted_through=wave),
             )
             state.frontier.expire_snapshots(config.snapshot_keep_last)
-            if cur_handle is not None:
-                cur_handle.unpersist()
-                cur_handle = None
-            frontier = state.frontier.read_bucketed(spark)
-        else:
-            # wave-sized DELTA commit (op log: del = scheduled keys,
-            # add = discovered + resurrected rows) — never the
-            # O(|frontier|)-rewrite the r2 loop paid every wave.
-            # Resume reconstructs base ⊳ deltas (_reconstruct_frontier).
-            state.frontier.commit(
-                _frontier_delta(seen_delta, disc_new, resurrected, wave),
-                mode="append", lineage=lineage,
-            )
-            # iterative-loop caching (the Pregel pattern): the next
-            # frontier persists; its parent unpersists right after the
-            # next wave's first action materializes this one
-            next_frontier = next_frontier.persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            prev_frontier = cur_handle
-            cur_handle = next_frontier
-            frontier = next_frontier
         scheduled.unpersist()
 
         totals["waves"] += 1
@@ -602,113 +568,63 @@ def crawl(
 _FRONTIER_KEYS = ["url_hash", "url_canon"]
 
 
-def build_next_frontier(
-    frontier: DataFrame,
-    seen_delta: DataFrame,
-    disc_new: DataFrame,
-    broadcast_delta: bool = True,
-) -> DataFrame:
-    """One wave's frontier update, shaped for 10^10-row frontiers.
-
-    Anti-join against THIS WAVE's seen delta only: prior waves' seen
-    ∩ frontier is empty by induction, so the O(|seen|) shuffle of the
-    accumulated table is unnecessary. The delta is wave-sized —
-    broadcast it (broadcast_delta) so the frontier side never shuffles
-    for the anti-join at all; oversized waves fall back to a shuffle
-    join.
-
-    Pending + newly-discovered rows then merge via a FULL OUTER join
-    on the keys with 'pending wins' (a pending row was discovered
-    strictly earlier: any frontier row has discovered_wave <= wave,
-    every disc_new row carries wave+1 — so this reproduces the
-    min_by(discovered_wave) semantics). A join, not union+groupBy,
-    because the big side already satisfies the key clustering — it is
-    either the previous wave's merge output (persisted, hash-
-    partitioned on the keys) or the bucketed compaction base — so
-    only the wave-sized disc_new side shuffles. Plan shape is pinned
-    by tests/test_plans.py.
-    """
-    delta_keys = seen_delta.select(*_FRONTIER_KEYS)
-    if broadcast_delta:
-        delta_keys = F.broadcast(delta_keys)
-    remaining = frontier.join(delta_keys, _FRONTIER_KEYS, "left_anti")
-    val_cols = [
-        f.name for f in FRONTIER_SCHEMA.fields if f.name not in _FRONTIER_KEYS
-    ]
-    merged = remaining.alias("f").join(
-        disc_new.alias("d"), _FRONTIER_KEYS, "full_outer"
-    )
-    pending_wins = F.col("f.url").isNotNull()
-    return merged.select(
-        *_FRONTIER_KEYS,
-        *[
-            F.when(pending_wins, F.col(f"f.{c}"))
-            .otherwise(F.col(f"d.{c}"))
-            .alias(c)
-            for c in val_cols
-        ],
-    ).select([f.name for f in FRONTIER_SCHEMA.fields])
-
-
 def _frontier_delta(
-    seen_delta: DataFrame,
-    disc_new: DataFrame,
+    seen_delta: DataFrame | None,
+    disc_new: DataFrame | None,
     resurrected: DataFrame | None,
     wave: int,
 ) -> DataFrame:
     """One wave's frontier op-log rows: del = this wave's scheduled
     keys, add = discovered (wave+1) and resurrected (wave) rows. The
     commit is wave-sized; `_reconstruct_frontier` folds the log over
-    the bucketed base on resume.
+    the bucketed base at the top of every wave.
 
     CONTRACT: only the _FRONTIER_KEYS columns of ``seen_delta`` are
-    read (everything else is projected to NULL) — the idle-wave
-    resurrection commit relies on this by passing an empty
-    frontier-schema frame where the seen-schema frame normally goes
-    (driver.py idle-wave path). Reading any other seen column here
-    would silently break that call site."""
+    read (everything else is projected to NULL); ``None`` for any of
+    the three frames contributes no rows, so the idle-wave
+    resurrection commit passes no dels and no discoveries."""
     val_fields = [
         f for f in FRONTIER_SCHEMA.fields if f.name not in _FRONTIER_KEYS
     ]
-    adds = disc_new
-    if resurrected is not None:
-        adds = adds.unionByName(resurrected)
-    add_rows = adds.select(
-        *[f.name for f in FRONTIER_SCHEMA.fields],
-        F.lit("add").alias("op"),
-        F.lit(wave).alias("delta_wave"),
-    )
-    del_rows = seen_delta.select(
-        *_FRONTIER_KEYS,
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in val_fields],
-        F.lit("del").alias("op"),
-        F.lit(wave).alias("delta_wave"),
-    )
-    return add_rows.unionByName(del_rows.select(add_rows.columns))
+    parts = [
+        adds.select(
+            *[f.name for f in FRONTIER_SCHEMA.fields],
+            F.lit("add").alias("op"),
+            F.lit(wave).alias("delta_wave"),
+        )
+        for adds in (disc_new, resurrected)
+        if adds is not None
+    ]
+    if seen_delta is not None:
+        parts.append(seen_delta.select(
+            *_FRONTIER_KEYS,
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in val_fields],
+            F.lit("del").alias("op"),
+            F.lit(wave).alias("delta_wave"),
+        ))
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _reconstruct_frontier(spark: SparkSession, table) -> DataFrame:
-    """Resume: fold the frontier op-log over the bucketed base.
-
-    present(key): latest op wins — del at wave D kills the base row
-    and every add with wave <= D (a resurrected row scheduled in its
-    own wave is add+del at the SAME wave: del wins, matching the live
-    loop). Among surviving adds the EARLIEST discovered_wave wins,
-    and a base row (never deleted) always predates any add — the same
-    'pending wins' rule build_next_frontier applies per wave. The
-    base side joins shuffle-free (bucketed on the keys)."""
+    """The frontier as committed: the bucketed base with the op log
+    since it folded in (fold_frontier_ops). Every wave schedules from
+    this read, so the live loop and resume share one path, and its
+    plan is one base scan plus one op-log scan at any wave index."""
     m = table.manifest()
     bv = table.base_version()
     if bv is None:  # legacy layout (pre-bucketed seed): plain read
         return table.read(spark)
     base = table.read_bucketed(spark, bv)
-    base_dirs = set(table.manifest(bv)["data_dirs"])
+    base_m = table.manifest(bv)
+    base_dirs = set(base_m["data_dirs"])
     delta_dirs = [d for d in m["data_dirs"] if d not in base_dirs]
     if not delta_dirs:
         return base
+    # the op log's one shuffle lands it in the base's bucket layout,
+    # so the fold's join reads the base as stored
     ops = spark.read.parquet(
         *[os.path.join(table.root, d) for d in delta_dirs]
-    )
+    ).repartition(base_m["bucket"]["n"], *_FRONTIER_KEYS)
     return fold_frontier_ops(base, ops)
 
 
@@ -721,35 +637,45 @@ def fold_frontier_ops(base: DataFrame, ops: DataFrame) -> DataFrame:
       add+del: del wins — a resurrected row scheduled in its own
       wave is gone);
     - among surviving adds the EARLIEST discovered_wave wins, and a
-      base row (never deleted) predates any add — the per-wave
-      'pending wins' rule of build_next_frontier, replayed.
+      base row (never deleted) predates any add ('pending wins').
 
-    No broadcast hints: the base side is bucketed on the keys in the
-    resume path, so its anti-join shuffles only the op-log side
-    whatever its size; AQE may still pick broadcast when the log is
-    small."""
-    dels = (
-        ops.where(F.col("op") == "del")
-        .groupBy(*_FRONTIER_KEYS)
-        .agg(F.max("delta_wave").alias("_last_del"))
+    Plan shape, pinned by tests/test_plans.py: the op log reduces to
+    one row per key (its last del + its earliest surviving add) in a
+    single aggregate, which full-outer-joins the base on the keys. An
+    op log already hash-partitioned like a bucketed base
+    (_reconstruct_frontier) shuffles nothing more, and the base
+    streams from its bucket files."""
+    val_cols = [
+        f.name for f in FRONTIER_SCHEMA.fields if f.name not in _FRONTIER_KEYS
+    ]
+    is_del = F.col("op") == "del"
+    last_del = F.col("last_del")
+    per_key = ops.groupBy(*_FRONTIER_KEYS).agg(
+        F.max(F.when(is_del, F.col("delta_wave"))).alias("last_del"),
+        # discovered_wave leads the struct, so array_min picks the
+        # earliest-discovered add
+        F.collect_list(F.when(~is_del, F.struct(
+            "discovered_wave", "delta_wave",
+            *[c for c in val_cols if c != "discovered_wave"],
+        ))).alias("adds"),
+    ).select(
+        *_FRONTIER_KEYS,
+        "last_del",
+        F.array_min(F.filter(
+            "adds", lambda a: last_del.isNull() | (a["delta_wave"] > last_del)
+        )).alias("add"),
     )
-    base_live = base.join(dels, _FRONTIER_KEYS, "left_anti")
-    adds = ops.where(F.col("op") == "add")
-    adds_live = (
-        adds.join(dels, _FRONTIER_KEYS, "left")
-        .where(
-            F.col("_last_del").isNull()
-            | (F.col("delta_wave") > F.col("_last_del"))
-        )
-        .select([f.name for f in FRONTIER_SCHEMA.fields])
-    )
-    row = F.struct(*[F.col(f.name) for f in FRONTIER_SCHEMA.fields])
-    return (
-        base_live.select([f.name for f in FRONTIER_SCHEMA.fields])
-        .unionByName(adds_live)
-        .groupBy(*_FRONTIER_KEYS)
-        .agg(F.min_by(row, F.col("discovered_wave")).alias("r"))
-        .select("r.*")
+    merged = base.alias("f").join(per_key.alias("o"), _FRONTIER_KEYS, "full_outer")
+    pending_wins = F.col("f.url").isNotNull() & F.col("o.last_del").isNull()
+    return merged.select(
+        *_FRONTIER_KEYS,
+        *[
+            F.when(pending_wins, F.col(f"f.{c}")).otherwise(F.col(f"o.add.{c}"))
+            .alias(c)
+            for c in val_cols
+        ],
+    ).where(F.col("url").isNotNull()).select(
+        [f.name for f in FRONTIER_SCHEMA.fields]
     )
 
 

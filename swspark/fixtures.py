@@ -19,6 +19,7 @@ import gzip
 import hashlib
 import os
 import random
+import shutil
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
@@ -515,6 +516,11 @@ def write_corpus(corpus: Corpus, out_dir: str) -> None:
                 # Spark can't scan nano-precision parquet timestamps
                 df[col] = df[col].astype("datetime64[us]")
         path = os.path.join(out_dir, f"{name}.parquet")
+        # either layout below replaces whatever an earlier write left
+        if os.path.isfile(path):
+            os.remove(path)
+        elif os.path.isdir(path):
+            shutil.rmtree(path)
         if name == "pages" and len(df) > 1024:
             # Write the pages table as a DIRECTORY of ~32 part files:
             # pandas' single-file parquet has one row group, which
@@ -525,12 +531,6 @@ def write_corpus(corpus: Corpus, out_dir: str) -> None:
             # elsewhere don't shatter into empty tasks). Readers are
             # unchanged: both Spark and pandas/pyarrow read a parquet
             # directory transparently.
-            import shutil
-
-            if os.path.isfile(path):
-                os.remove(path)
-            elif os.path.isdir(path):
-                shutil.rmtree(path)
             os.makedirs(path)
             n_parts = 32
             step = (len(df) + n_parts - 1) // n_parts

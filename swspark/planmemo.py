@@ -57,14 +57,16 @@ def memoize_plan(fn):
     def wrapper(*args, **kwargs):
         if os.environ.get("SPARK_GRAFT_PLAN_MEMO", "1") == "0":
             return fn(*args, **kwargs)
+        key = (
+            tuple(_key_part(a) for a in args),
+            tuple(sorted((k, _key_part(v)) for k, v in kwargs.items())),
+        )
         try:
-            key = (
-                tuple(_key_part(a) for a in args),
-                tuple(sorted((k, _key_part(v)) for k, v in kwargs.items())),
-            )
+            # hashing happens here: a tuple argument holding a list
+            # (or any other unhashable part) falls back to a plain call
+            hit = memo.get(key)
         except TypeError:
             return fn(*args, **kwargs)
-        hit = memo.get(key)
         if hit is not None:
             memo.move_to_end(key)
             return hit[1]

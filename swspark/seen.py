@@ -438,7 +438,6 @@ def make_maybe_seen_udf(
     return maybe_seen
 
 
-@memoize_plan
 def filter_new_urls(
     spark: SparkSession,
     candidates: DataFrame,

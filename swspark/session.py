@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """A quarter of physical memory, at most 8 GiB: the heap must fit
+    in RAM beside the Python workers and other processes."""
+    with open("/proc/meminfo") as fh:
+        total_kb = int(next(l for l in fh if l.startswith("MemTotal")).split()[1])
+    return f"{min(8192, total_kb // 4096)}m"
+
+
 def get_spark(
     app_name: str = "swspark",
     cores: int | None = None,
@@ -33,7 +41,7 @@ def get_spark(
     # local mode = one JVM: spark.driver.memory is the whole heap.
     # Must be sized for the task count (32 concurrent tasks x sort/
     # shuffle buffers overflow the 1g default instantly).
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     # Shuffle spill dir. On a real cluster every executor brings its
     # own local SSDs, so shuffle bandwidth scales with the node count;
     # a single-box local[N] run shares ONE disk across all task

@@ -447,3 +447,31 @@ def test_idle_resurrection_committed_to_oplog(spark, corpus, tables, tmp_path):
     trace = state.trace.read(spark).toPandas()
     per_url = trace.groupby("url").wave.apply(lambda s: sorted(s.tolist()))
     assert all(v == [0, 3] for v in per_url), per_url.to_dict()
+
+
+def test_frontier_plan_bounded_across_waves(
+    spark, corpus, tables, tmp_path, monkeypatch
+):
+    """Every wave schedules from the committed base ⊳ op log, so the
+    frontier's analyzed plan does not grow with the wave index: 35
+    wiki URLs at 4 per wave run 9 fetch waves across the default
+    wave-7 compaction, and no wave's plan outgrows wave 1's (wave 0
+    is a bare base scan)."""
+    from swspark import driver
+    from swspark.scheduler import Throttle
+
+    sizes = []
+    real = driver.schedule_wave
+
+    def spy(frontier, *args, **kwargs):
+        tree = frontier._jdf.queryExecution().analyzed().treeString()
+        sizes.append(len(tree.splitlines()))
+        return real(frontier, *args, **kwargs)
+
+    monkeypatch.setattr(driver, "schedule_wave", spy)
+    _, totals = run_crawl(
+        spark, tables, "wiki_pages", tmp_path / "wbound", "fandom",
+        throttle=Throttle("PER_SECOND", 0.4),
+    )
+    assert totals["waves"] >= 9, totals
+    assert max(sizes[1:]) <= sizes[1], sizes

@@ -53,3 +53,18 @@ def test_small_pages_stay_single_file(tmp_path):
     p = os.path.join(d, "pages.parquet")
     assert os.path.isfile(p)
     assert len(pd.read_parquet(p)) == 200
+
+
+def test_rewrite_replaces_either_layout(tmp_path):
+    """A corpus written over another one in the same directory replaces
+    its pages table whatever layout each write used."""
+    d = str(tmp_path / "reuse")
+    p = os.path.join(d, "pages.parquet")
+    write_corpus(_corpus(3000), d)
+    assert os.path.isdir(p)
+    write_corpus(_corpus(200), d)
+    assert os.path.isfile(p)
+    assert len(pd.read_parquet(p)) == 200
+    write_corpus(_corpus(3000), d)
+    assert os.path.isdir(p)
+    assert len(pd.read_parquet(p)) == 3000

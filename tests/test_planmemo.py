@@ -67,3 +67,18 @@ def test_kill_switch(spark):
         assert with_url_identity(f) is not with_url_identity(f)
     finally:
         os.environ.pop("SPARK_GRAFT_PLAN_MEMO", None)
+
+
+def test_unhashable_argument_falls_back_to_plain_call():
+    from swspark.planmemo import memoize_plan
+
+    calls = []
+
+    @memoize_plan
+    def build(arg):
+        calls.append(arg)
+        return object()
+
+    # a tuple is keyed by value, but one holding a list cannot hash
+    assert build((1, [2])) is not build((1, [2]))
+    assert len(calls) == 2

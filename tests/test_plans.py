@@ -121,14 +121,15 @@ def test_brute_force_topk_take_ordered(spark):
 
 
 def test_driver_frontier_update_plan(spark, pages_parquet, tmp_path):
-    """The per-wave frontier update must (a) anti-join against the
-    wave DELTA via broadcast — the big frontier side never shuffles
-    for it — and (b) merge pending + discovered via a full-outer join
-    whose BIG side reuses the frontier's existing clustering (here the
-    bucketed compaction base; in steady state the persisted previous
-    merge), so the only hash exchange in the whole update is the
-    wave-sized discovery side."""
-    from swspark.driver import FRONTIER_SCHEMA, _frontier_rows, build_next_frontier
+    """Every wave's frontier is the op log folded over the bucketed
+    base (_reconstruct_frontier): (a) the base drops the keys the log
+    deletes and (b) merges the log's surviving adds via one full-outer
+    join whose BIG side streams from its bucket files, so the only
+    hash exchange in the whole fold is the op-log side, keyed once."""
+    from swspark.driver import (
+        FRONTIER_SCHEMA, _frontier_delta, _frontier_rows,
+        _reconstruct_frontier,
+    )
     from swspark.tables import SnapshotTable
 
     rows = _frontier_rows(
@@ -141,27 +142,33 @@ def test_driver_frontier_update_plan(spark, pages_parquet, tmp_path):
                 "sort": ["url_hash", "url_canon"]},
         lineage={"next_wave": 0, "compacted_through": -1},
     )
-    frontier = t.read_bucketed(spark)
-    seen_delta = frontier.limit(10).select(
-        "url_hash", "url_canon", F.lit(0).alias("wave")
+    seen_delta = rows.limit(10).select(
+        "url_hash", "url_canon", "url", F.lit(0).alias("wave")
     )
     disc_new = _frontier_rows(
         spark.read.parquet(pages_parquet).select("url").limit(5), wave=1
     )
-    out = build_next_frontier(frontier, seen_delta, disc_new,
-                              broadcast_delta=True)
+    t.commit(_frontier_delta(seen_delta, disc_new, None, 0),
+             mode="append", lineage={"next_wave": 1, "wave": 0})
+    out = _reconstruct_frontier(spark, t)
     assert [f.name for f in out.schema.fields] == [
         f.name for f in FRONTIER_SCHEMA.fields
     ]
     plan = plan_of(out)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    # full-outer merge runs as a sort-merge join on the keys
+    # one full-outer join merges base and op log; it also carries the
+    # deletes (a deleted key keeps no base row)
     assert "FullOuter" in plan
-    # the ONLY hash exchange is the wave-sized disc_new side: the
-    # bucketed frontier scan satisfies the join clustering as-is
-    # (formatted mode lists exchange arguments in the details section)
-    n_exchanges = plan.count("Arguments: hashpartitioning(url_hash")
-    assert n_exchanges == 1, plan
+    assert out.count() == rows.count() - 10
+    # the ONLY hash exchange is the op-log side: the bucketed base
+    # scan satisfies the join clustering as-is (formatted mode lists
+    # exchange arguments in the details section)
+    assert "Bucketed: true" in plan
+    exchanges = [
+        blk for blk in plan.split("\n\n")
+        if "Arguments: hashpartitioning(url_hash" in blk
+    ]
+    assert len(exchanges) == 1, plan
+    assert "delta_wave" in exchanges[0], plan
 
 
 def test_reconstruct_frontier_base_side_no_shuffle(spark, pages_parquet, tmp_path):

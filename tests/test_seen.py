@@ -262,3 +262,45 @@ def test_write_shard_files_touched_only(tmp_path):
     os.remove(meta2[1][2])
     meta3 = write_shard_files(blooms, d, buckets={2})
     assert os.path.exists(meta3[1][2])
+
+
+def test_filter_new_urls_rebuilt_after_bloom_merge(spark, seen_tables, tmp_path):
+    """filter_new_urls has eager side effects (it broadcasts the Bloom
+    bytes and writes the shard files) and reads a blooms dict that the
+    driver's per-wave merge mutates in place: a repeat call with the
+    same inputs after a merge must build a new plan and rewrite the
+    shard files, never hand back the first call's plan."""
+    import os
+
+    from swspark.driver import _merge_bloom_shards
+    from swspark.seen import (
+        build_filter_shards, filter_new_urls, load_shards, with_url_identity,
+    )
+
+    seen, _blooms, urls = seen_tables
+    geometry = {"fixed_bits": 1 << 13, "fixed_k": 7}
+    blooms = load_shards(build_filter_shards(seen, N_BUCKETS, **geometry))
+    cand = with_url_identity(
+        spark.createDataFrame([(u,) for u in urls[:20]], "url string")
+    )
+    shard_dir = str(tmp_path / "shards")
+
+    def stamps():
+        return {f: os.stat(os.path.join(shard_dir, f)).st_mtime_ns
+                for f in os.listdir(shard_dir)}
+
+    first = filter_new_urls(spark, cand, seen, blooms, N_BUCKETS,
+                            shard_dir=shard_dir)
+    before = stamps()
+    fresh = with_url_identity(spark.createDataFrame(
+        [(f"https://fresh.example.test/{i}",) for i in range(50)], "url string"
+    ))
+    assert _merge_bloom_shards(
+        blooms, build_filter_shards(fresh, N_BUCKETS, **geometry)
+    )
+    second = filter_new_urls(spark, cand, seen, blooms, N_BUCKETS,
+                             shard_dir=shard_dir)
+    assert second is not first
+    after = stamps()
+    assert after.keys() == before.keys()
+    assert all(after[f] != before[f] for f in before), (before, after)

@@ -325,9 +325,12 @@ def crawl(
             # new seen row, so the cycle repeats every ttl waves).
             # frontier ∩ resurrected = ∅: a pending URL has no fresh
             # seen row, so it cannot be expiring now.
-            # read_wave prunes the read to wave w-ttl's own data dirs
-            # (or the base's wave=w-ttl partition) — never a full scan
-            expired = state.seen.read_wave(spark, wave - ttl)
+            # read_wave_range prunes the read to wave w-ttl's own data
+            # dirs (or the base's wave=w-ttl partition) — never a full
+            # scan
+            expired = state.seen.read_wave_range(
+                spark, wave - ttl, wave - ttl + 1
+            )
             if expired is not None:
                 # resurrect the RAW url (seen carries it for exactly
                 # this): fetch_pages joins the pages source on the
@@ -401,8 +404,8 @@ def crawl(
                 # an idle (fully-throttled) wave still changed the
                 # frontier: commit the resurrected rows as add-only
                 # op-log deltas, or the next wave's fold (and any
-                # resume) would miss them (read_wave consults wave
-                # w-ttl exactly once)
+                # resume) would miss them (the expiry read consults
+                # wave w-ttl exactly once)
                 state.frontier.commit(
                     _frontier_delta(None, None, resurrected, wave),
                     mode="append",
@@ -473,9 +476,9 @@ def crawl(
                 lineage={"wave": wave, "compacted_through": wave},
             )
             # retention floor K+2: every post-compaction wave's delta
-            # manifest must outlive the next cycle (read_wave walks
-            # them for recrawl expiry, and crash-rollback needs the
-            # previous wave's manifest as its anchor)
+            # manifest must outlive the next cycle (read_wave_range
+            # walks them for recrawl expiry, and crash-rollback needs
+            # the previous wave's manifest as its anchor)
             state.seen.expire_snapshots(
                 max(config.snapshot_keep_last, config.compact_every_waves + 2)
             )
@@ -609,23 +612,18 @@ def _reconstruct_frontier(spark: SparkSession, table) -> DataFrame:
     """The frontier as committed: the bucketed base with the op log
     since it folded in (fold_frontier_ops). Every wave schedules from
     this read, so the live loop and resume share one path, and its
-    plan is one base scan plus one op-log scan at any wave index."""
-    m = table.manifest()
-    bv = table.base_version()
-    if bv is None:  # legacy layout (pre-bucketed seed): plain read
-        return table.read(spark)
-    base = table.read_bucketed(spark, bv)
-    base_m = table.manifest(bv)
-    base_dirs = set(base_m["data_dirs"])
-    delta_dirs = [d for d in m["data_dirs"] if d not in base_dirs]
-    if not delta_dirs:
+    plan is one base scan plus one op-log scan at any wave index.
+    The seed commit is a bucketed base, so read_split always returns
+    [base] or [base, op log]."""
+    base, *ops = table.read_split(spark)
+    if not ops:
         return base
     # the op log's one shuffle lands it in the base's bucket layout,
     # so the fold's join reads the base as stored
-    ops = spark.read.parquet(
-        *[os.path.join(table.root, d) for d in delta_dirs]
-    ).repartition(base_m["bucket"]["n"], *_FRONTIER_KEYS)
-    return fold_frontier_ops(base, ops)
+    n = table.manifest(table.base_version())["bucket"]["n"]
+    return fold_frontier_ops(
+        base, ops[0].repartition(n, *_FRONTIER_KEYS)
+    )
 
 
 def fold_frontier_ops(base: DataFrame, ops: DataFrame) -> DataFrame:

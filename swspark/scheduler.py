@@ -24,8 +24,6 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from swspark.planmemo import memoize_plan
-
 
 @dataclass(frozen=True)
 class Throttle:
@@ -447,7 +445,6 @@ def rank_frontier(frontier: DataFrame, host_col: str = "host") -> DataFrame:
     return frontier.withColumn("rank", F.row_number().over(w))
 
 
-@memoize_plan
 def schedule_wave(
     frontier: DataFrame,
     host_budgets: DataFrame,
@@ -551,7 +548,6 @@ def schedule_wave(
     return picked
 
 
-@memoize_plan
 def salted_repartition(
     df: DataFrame,
     num_partitions: int,

@@ -1,5 +1,4 @@
-"""URL-seen set: partitioned Bloom + cuckoo filters over an exact
-seen table.
+"""URL-seen set: partitioned Bloom filters over an exact seen table.
 
 The reference has **no** seen structure — sws happily fetches a URL
 twice if two sitemaps or sendUrl repeat it (verified absence in
@@ -11,12 +10,14 @@ one for 10^10-URL scale:
   anti-join never shuffles the big side);
 - fast path: one Bloom filter per bucket (no false negatives ->
   a candidate that misses is **definitely new** and skips the join);
-- deletion/compaction path: a cuckoo filter per bucket (supports
-  delete; used when URLs are evicted for re-crawl);
+- no deletion path: the seen table and its filters are append-only;
+  re-crawl resurrects the rows a past wave committed (read back per
+  wave through ``SnapshotTable.read_wave_range``) without removing
+  them from the set;
 - only Bloom-positive candidates reach the exact ``left_anti`` join,
   so at steady state the join input is ~fpp x |candidates| + true dups.
 
-Filters are numpy bit/bucket arrays serialized to bytes, stored as
+Filters are numpy bit arrays serialized to bytes, stored as
 checkpoint artifacts keyed by (bucket, version) and rebuilt
 incrementally: a wave only rebuilds the buckets it inserted into
 (SURVEY.md §4, §7 risk 3). All per-row work is vectorized numpy
@@ -41,7 +42,6 @@ from pyspark.sql.types import (
 )
 
 from swspark import urlnorm
-from swspark.planmemo import memoize_plan
 
 # --- hashing ----------------------------------------------------------
 
@@ -115,113 +115,6 @@ class BloomFilter:
         np.bitwise_or(self.bits, other.bits, out=self.bits)
 
 
-# --- Cuckoo filter --------------------------------------------------------
-
-
-class CuckooFilter:
-    """Cuckoo filter: 4-slot buckets, 16-bit fingerprints, 2 candidate
-    buckets (partial-key cuckoo hashing). Supports delete — the
-    compaction/re-crawl path Bloom can't serve."""
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int, table: np.ndarray | None = None):
-        # power-of-two bucket count for cheap alt-bucket XOR math
-        self.n_buckets = 1 << (int(n_buckets) - 1).bit_length()
-        self.table = (
-            table
-            if table is not None
-            else np.zeros((self.n_buckets, self.SLOTS), dtype=np.uint16)
-        )
-        self._rng = np.random.default_rng(42)
-
-    @classmethod
-    def sized_for(cls, n: int, load: float = 0.84) -> "CuckooFilter":
-        return cls(max(1, int(math.ceil(n / (cls.SLOTS * load)))))
-
-    def _fp_and_index(self, url_hash: np.ndarray):
-        h1, h2 = _hash_pair(np.asarray(url_hash))
-        fp = (h2 & np.uint64(0xFFFF)).astype(np.uint16)
-        fp = np.where(fp == 0, np.uint16(1), fp)  # 0 = empty slot
-        i1 = (h1 % np.uint64(self.n_buckets)).astype(np.int64)
-        return fp, i1
-
-    def _alt_index(self, i: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        salt = _splitmix64(fp.astype(np.uint64))
-        return ((i.astype(np.uint64) ^ salt) % np.uint64(self.n_buckets)).astype(
-            np.int64
-        )
-
-    def insert_many(self, url_hash: np.ndarray) -> int:
-        """Insert; returns number of items that failed (filter full)."""
-        fp, i1 = self._fp_and_index(url_hash)
-        failed = 0
-        for f, i in zip(fp, i1):
-            if not self._insert_one(int(f), int(i)):
-                failed += 1
-        return failed
-
-    def _insert_one(self, fp: int, i1: int) -> bool:
-        i2 = int(self._alt_index(np.array([i1]), np.array([fp], dtype=np.uint16))[0])
-        for i in (i1, i2):
-            row = self.table[i]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        i = i1 if self._rng.integers(2) else i2
-        cur = np.uint16(fp)
-        for _ in range(self.MAX_KICKS):
-            slot = int(self._rng.integers(self.SLOTS))
-            cur, self.table[i, slot] = self.table[i, slot], cur
-            i = int(
-                self._alt_index(np.array([i]), np.array([cur], dtype=np.uint16))[0]
-            )
-            row = self.table[i]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = cur
-                return True
-        return False
-
-    def contains_many(self, url_hash: np.ndarray) -> np.ndarray:
-        if len(url_hash) == 0:
-            return np.zeros(0, dtype=bool)
-        fp, i1 = self._fp_and_index(url_hash)
-        i2 = self._alt_index(i1, fp)
-        in1 = (self.table[i1] == fp[:, None]).any(axis=1)
-        in2 = (self.table[i2] == fp[:, None]).any(axis=1)
-        return in1 | in2
-
-    def delete_many(self, url_hash: np.ndarray) -> int:
-        """Delete one copy of each; returns count actually deleted."""
-        fp, i1 = self._fp_and_index(url_hash)
-        i2 = self._alt_index(i1, fp)
-        deleted = 0
-        for f, a, b in zip(fp, i1, i2):
-            done = False
-            for i in (int(a), int(b)):
-                row = self.table[i]
-                hit = np.nonzero(row == f)[0]
-                if len(hit):
-                    row[hit[0]] = 0
-                    deleted += 1
-                    done = True
-                    break
-            if not done:
-                pass
-        return deleted
-
-    def to_bytes(self) -> bytes:
-        return self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, n_buckets: int, data: bytes) -> "CuckooFilter":
-        t = np.frombuffer(data, dtype=np.uint16).copy().reshape(-1, cls.SLOTS)
-        return cls(n_buckets, t)
-
-
 # --- distributed seen-set ---------------------------------------------------
 
 SHARD_SCHEMA = StructType(
@@ -231,13 +124,10 @@ SHARD_SCHEMA = StructType(
         StructField("m_bits", LongType()),
         StructField("k", IntegerType()),
         StructField("bloom", BinaryType()),
-        StructField("cuckoo_buckets", LongType()),
-        StructField("cuckoo", BinaryType()),
     ]
 )
 
 
-@memoize_plan
 def with_url_identity(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Attach canonical url_hash + bucket-ready identity columns."""
     canon = urlnorm.canonicalize(F.col(url_col))
@@ -254,7 +144,7 @@ def build_filter_shards(
     seen: DataFrame, n_buckets: int, fpp: float = 0.01,
     fixed_bits: int | None = None, fixed_k: int | None = None,
 ) -> DataFrame:
-    """Build per-bucket Bloom+cuckoo shards from the exact seen table.
+    """Build per-bucket Bloom shards from the exact seen table.
 
     With ``fixed_bits``/``fixed_k`` the Bloom geometry is pinned so
     per-wave delta shards are OR-mergeable with prior shards (the
@@ -275,8 +165,6 @@ def build_filter_shards(
         else:
             bf = BloomFilter.sized_for(len(h), fpp)
         bf.add_many(h)
-        cf = CuckooFilter.sized_for(len(h))
-        cf.insert_many(h)
         return pd.DataFrame(
             {
                 "bucket": [key[0]],
@@ -284,8 +172,6 @@ def build_filter_shards(
                 "m_bits": [bf.m],
                 "k": [bf.k],
                 "bloom": [bf.to_bytes()],
-                "cuckoo_buckets": [cf.n_buckets],
-                "cuckoo": [cf.to_bytes()],
             }
         )
 
@@ -295,9 +181,9 @@ def build_filter_shards(
 def load_shards(shards_df: DataFrame) -> dict[int, BloomFilter]:
     """Collect shard rows into a {bucket: BloomFilter} dict, OR-merging
     rows of the same bucket (per-wave delta shards with identical
-    geometry). Total size ~ 1.2 bytes/URL at fpp=0.01 — for truly
-    10^10-scale runs the UDF would mmap shard files instead of
-    broadcasting; interface unchanged."""
+    geometry). Total size ~ 1.2 bytes/URL at fpp=0.01; at 10^10
+    scale the probe reads them from mmap files instead of a broadcast
+    (``write_shard_files`` / ``make_maybe_seen_udf(shard_dir=...)``)."""
     out: dict[int, BloomFilter] = {}
     for r in shards_df.collect():
         bf = BloomFilter.from_bytes(r.m_bits, r.k, bytes(r.bloom))

@@ -258,9 +258,11 @@ def embedding_neardup_pairs(
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
+    # one vector per id: a repeated id would re-join once per copy
+    # and emit its (doc_a, doc_b) pair twice
     vecs = vectors.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    )
+    ).dropDuplicates(["id"])
     cand = (
         cand.join(vecs.withColumnsRenamed({"id": "doc_a", "v": "va"}),
                   "doc_a")

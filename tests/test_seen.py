@@ -1,13 +1,13 @@
 """Seen-set law tests (SURVEY.md §5 item 4): Bloom has no false
-negatives and bounded FPR; cuckoo supports delete; the distributed
-filter_new_urls never drops a new URL and never passes a seen one."""
+negatives and bounded FPR; the distributed filter_new_urls never
+drops a new URL and never passes a seen one."""
 
 import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from swspark.seen import BloomFilter, CuckooFilter
+from swspark.seen import BloomFilter
 
 
 @given(st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), max_size=500))
@@ -49,39 +49,6 @@ def test_bloom_merge():
     b.add_many(xb)
     a.merge(b)
     assert a.contains_many(np.arange(100, dtype=np.int64)).all()
-
-
-def test_cuckoo_insert_contains_delete():
-    cf = CuckooFilter.sized_for(1000)
-    arr = (np.arange(1000, dtype=np.int64) * 104729) % (2**31)
-    failed = cf.insert_many(arr)
-    assert failed == 0
-    assert cf.contains_many(arr).all()
-    # delete half, they must disappear; other half must remain
-    cf.delete_many(arr[:500])
-    assert not cf.contains_many(arr[:500]).any() or (
-        # fingerprint collisions can keep a few "present"; bound it
-        cf.contains_many(arr[:500]).mean() < 0.05
-    )
-    assert cf.contains_many(arr[500:]).all()
-
-
-def test_cuckoo_fpr_small():
-    cf = CuckooFilter.sized_for(10_000)
-    rng = np.random.default_rng(7)
-    members = rng.integers(0, 2**62, 10_000, dtype=np.int64)
-    cf.insert_many(members)
-    probes = rng.integers(0, 2**62, 50_000, dtype=np.int64)
-    probes = np.setdiff1d(probes, members)
-    assert cf.contains_many(probes).mean() < 0.01
-
-
-def test_cuckoo_serialization_roundtrip():
-    cf = CuckooFilter.sized_for(100)
-    arr = np.arange(100, dtype=np.int64)
-    cf.insert_many(arr)
-    cf2 = CuckooFilter.from_bytes(cf.n_buckets, cf.to_bytes())
-    assert cf2.contains_many(arr).all()
 
 
 N_BUCKETS = 8

@@ -69,10 +69,11 @@ def test_rollback_after_overwrite_keeps_other_chain_dirs(spark, tmp_path):
 
 
 def test_read_wave_pruning_and_split(spark, tmp_path):
-    """read_wave must touch ONLY the requested wave's data (VERDICT r2
-    #4): a delta wave reads its own dir; a compacted wave reads the
-    base with a partition-pruned filter. read_split returns
-    [bucketed base, deltas] for split-strategy joins."""
+    """A one-wave read_wave_range (the recrawl-expiry read) must touch
+    ONLY the requested wave's data (VERDICT r2 #4): a delta wave reads
+    its own dir; a compacted wave reads the base with a
+    partition-pruned filter. read_split returns [bucketed base,
+    deltas] for split-strategy joins."""
     from pyspark.sql import functions as F
 
     t = SnapshotTable(str(tmp_path / "t"))
@@ -84,7 +85,7 @@ def test_read_wave_pruning_and_split(spark, tmp_path):
     _commit(spark, t, [40, 41], 4)
 
     # post-compaction wave: exactly its own dir
-    w4 = t.read_wave(spark, 4)
+    w4 = t.read_wave_range(spark, 4, 5)
     assert sorted(r.x for r in w4.collect()) == [40, 41]
     plan = w4._sc._jvm.PythonSQLUtils.explainString(
         w4._jdf.queryExecution(), "formatted"
@@ -92,7 +93,7 @@ def test_read_wave_pruning_and_split(spark, tmp_path):
     assert "swsnap_" not in plan  # not the base: the delta dir alone
 
     # compacted wave: base read with a wave partition filter
-    w1 = t.read_wave(spark, 1)
+    w1 = t.read_wave_range(spark, 1, 2)
     assert sorted(r.x for r in w1.collect()) == [10, 11]
     plan1 = w1._sc._jvm.PythonSQLUtils.explainString(
         w1._jdf.queryExecution(), "formatted"
@@ -100,7 +101,7 @@ def test_read_wave_pruning_and_split(spark, tmp_path):
     assert "PartitionFilters" in plan1
 
     # unknown wave
-    assert t.read_wave(spark, 99) is None
+    assert t.read_wave_range(spark, 99, 100) is None
 
     parts = t.read_split(spark)
     assert len(parts) == 2

@@ -253,6 +253,15 @@ def test_embedding_neardup_pairs(spark, vectors):
         if sims[i, j] >= 0.999
     }
     assert got == exp
+    # a repeated id (the same row read twice) must not repeat a pair
+    again = df.unionByName(df.where(df.vec_id.isin(3, 7)))
+    rows = [
+        (r.doc_a, r.doc_b) for r in simsearch.embedding_neardup_pairs(
+            again, threshold=0.999, bits=6
+        ).collect()
+    ]
+    assert len(rows) == len(set(rows))
+    assert set(rows) == exp
 
 
 def test_ivf_topk(spark, vectors):

@@ -119,7 +119,7 @@ def cmd_crawl(args) -> int:
 
 
 def cmd_scrap(args) -> int:
-    from swspark.extract.udf import apply_extraction
+    from swspark.extract.udf import apply_extraction, with_extraction
     from swspark.session import get_spark
     from swspark.sources import read_html_glob, read_pages_parquet, single_page
 
@@ -137,15 +137,20 @@ def cmd_scrap(args) -> int:
         print("one of --glob / --pages / --file is required", file=sys.stderr)
         return 2
     spec = _resolve_spec(args)
-    rec, _urls, errs = apply_extraction(pages, spec)
-    n_err = errs.count()
-    scrap_policy = args.on_scrap_error or (
-        (getattr(spec, "config", None) or {}).get("on_scrap_error", "skip")
-    )
-    if n_err and scrap_policy == "fail":
-        print(f"{n_err} scrape errors (on-scrap-error=fail)", file=sys.stderr)
-        return 1
-    _sink_records(rec, args)
+    # one extraction pass: the error count and the sink read this cache
+    extracted = with_extraction(pages, spec).drop("html").persist()
+    try:
+        rec, _urls, errs = apply_extraction(extracted, spec)
+        n_err = errs.count()
+        scrap_policy = args.on_scrap_error or (
+            (getattr(spec, "config", None) or {}).get("on_scrap_error", "skip")
+        )
+        if n_err and scrap_policy == "fail":
+            print(f"{n_err} scrape errors (on-scrap-error=fail)", file=sys.stderr)
+            return 1
+        _sink_records(rec, args)
+    finally:
+        extracted.unpersist()
     print(f"scrap done: errors={n_err}; csv={args.output or '<stdout>'}",
           file=sys.stderr)
     return 0

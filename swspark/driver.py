@@ -9,7 +9,8 @@ Reimagines the reference's concurrent pipeline
         frontier (the committed op log folded over the bucketed base)
         schedule (window-rank under politeness budgets, A23-A25)
         fetch    (frontier |x| pages, A1)
-        extract  (Arrow UDF: records + sendUrl discovery, A32/A22)
+        extract  (Arrow UDF: records + sendUrl discovery, A32/A22;
+                  persisted, so it runs once per page)
         commit   (snapshot seen/records + lineage, frontier op-log
                   delta; every K waves a new bucketed base, A30 flush)
     until the schedulable frontier is empty (quiescence, A28) or a
@@ -46,7 +47,11 @@ from pyspark.sql.types import (
 
 from swspark import urlnorm
 from swspark.extract.specs import SPECS, ExtractionSpec
-from swspark.extract.udf import apply_extraction, spec_wants_context
+from swspark.extract.udf import (
+    apply_extraction,
+    spec_wants_context,
+    with_extraction,
+)
 from swspark.fetch import fetch_pages
 from swspark.robots import build_robots_rules_table, robots_filter_distributed
 from swspark.scheduler import Throttle, salted_repartition, schedule_wave
@@ -237,13 +242,6 @@ def crawl(
         # the spec's acceptUrl always gates sitemap URLs, like
         # `sws crawl -s script.lua` (crawler.rs:92-96,123-125)
         accept = spec.accept_url
-    # distributed robots: rules stay a by-host DataFrame, matching runs
-    # in a pandas UDF over the joined rules column — no driver collect
-    rules_table = build_robots_rules_table(robots, config.user_agent).persist()
-
-    def robots_filter(df: DataFrame) -> DataFrame:
-        return robots_filter_distributed(df, rules_table)
-
     # effective Bloom geometry: derived from expected cardinality when
     # given (seen.bloom_geometry), else the fixed test-scale default
     if config.expected_total_urls is not None:
@@ -264,300 +262,322 @@ def crawl(
     }
     seen_bucket = dict(key_bucket, partition=["wave"])
 
-    if resume and state.frontier.exists():
-        wave = state.frontier.manifest()["lineage"]["next_wave"]
-        # cross-table reconciliation: a crash between a wave's table
-        # commits and the frontier pointer leaves orphan wave>=next
-        # snapshots that the replayed wave would double-append
-        for tbl in (state.records, state.trace, state.errors, state.seen,
-                    state.shards, state.discovered):
-            tbl.rollback_to_wave_before(wave)
-        seen_df = (
-            state.seen.read(spark)
-            if state.seen.exists()
-            else spark.createDataFrame(
-                [], "url_hash long, url_canon string, url string, wave int"
-            )
-        )
-        blooms = _rebuild_blooms(spark, state, seen_df, config,
-                                 bloom_bits, bloom_k)
-    else:
-        frontier, xml_errors, expand_cleanup = init_frontier(
-            spark, config, seeds, sitemaps, rules_table, accept
-        )
-        wave = 0
-        # the seeded frontier IS the first compacted base (bucketed):
-        # every wave's frontier fold anchors on it until a compaction
-        state.frontier.commit(
-            robots_filter(frontier), mode="overwrite", bucket=key_bucket,
-            lineage={"next_wave": 0, "phase": "seeded",
-                     "compacted_through": -1},
-        )
-        blooms: dict[int, BloomFilter] = {}
-        if xml_errors is not None:
-            state.errors.commit(
-                xml_errors.select(
-                    F.lit(-1).alias("wave"),
-                    F.col("sitemap_url").alias("url"),
-                    F.lit("xml").alias("stage"),
-                    "error",
-                ),
-                mode="overwrite",
-            )
-        expand_cleanup()  # frontier + errors are committed: release caches
+    # distributed robots: rules stay a by-host DataFrame, matching runs
+    # in a pandas UDF over the joined rules column — no driver collect
+    rules_table = build_robots_rules_table(robots, config.user_agent).persist()
 
-    totals = {"waves": 0, "fetched": 0, "records": 0, "discovered": 0, "errors": 0}
-    shards_synced = False  # mmap transport: full shard-file refresh once
-    rank_bounds = None  # hot-host bucket boundaries, resampled every K
-    bounds_age = 0
+    def robots_filter(df: DataFrame) -> DataFrame:
+        return robots_filter_distributed(df, rules_table)
 
-    while wave < config.max_waves:
-        # every wave, live or resumed, schedules from the committed
-        # state (bucketed base ⊳ op log): the plan is one base scan
-        # plus one op-log scan whatever the wave index
-        frontier = _reconstruct_frontier(spark, state.frontier)
-        ttl = config.recrawl_after_waves
-        resurrected = None
-        if ttl is not None and wave >= ttl:
-            # resurrection: rows fetched exactly ttl waves ago age out
-            # of the seen set's "fresh" window and rejoin the frontier
-            # (each seen row expires exactly once; a refetch appends a
-            # new seen row, so the cycle repeats every ttl waves).
-            # frontier ∩ resurrected = ∅: a pending URL has no fresh
-            # seen row, so it cannot be expiring now.
-            # read_wave_range prunes the read to wave w-ttl's own data
-            # dirs (or the base's wave=w-ttl partition) — never a full
-            # scan
-            expired = state.seen.read_wave_range(
-                spark, wave - ttl, wave - ttl + 1
-            )
-            if expired is not None:
-                # resurrect the RAW url (seen carries it for exactly
-                # this): fetch_pages joins the pages source on the
-                # exact string, so a canonical-form resurrection would
-                # silently miss any URL whose raw form differs
-                # (uppercase host, :80, fragment)
-                resurrected = _frontier_rows(
-                    expired.select("url"), wave
-                ).withColumn(
-                    "last_fetch_ts",
-                    F.timestamp_seconds(
-                        F.lit(float((wave - ttl) * config.wave_period))
-                    ),
-                ).select([f.name for f in FRONTIER_SCHEMA.fields])
-                frontier = frontier.unionByName(resurrected)
-
-        budgets_dim = rules_table.select(F.col("host"), "crawl_delay")
-        if config.error_backoff_window is not None and state.errors.exists():
-            # hosts that erred recently yield budget (AIMD-style):
-            # k = #error-waves in the window, budget -> budget / 2^k.
-            # read_wave_range prunes the read to the window's data dirs
-            # via commit lineage — at 10^4 waves the old whole-table
-            # read globbed every per-wave error dir every wave
-            w0 = wave - config.error_backoff_window
-            err_window = state.errors.read_wave_range(spark, w0, wave)
-            if err_window is not None:
-                err_hosts = (
-                    err_window
-                    .where(F.col("stage") == "download")
-                    .select(
-                        urlnorm.url_host(F.col("url")).alias("host"), "wave"
-                    )
-                    .distinct()
-                    .groupBy("host")
-                    .agg(
-                        F.least(F.count(F.lit(1)), F.lit(4))
-                        .cast("int")
-                        .alias("backoff_k")
-                    )
+    # the wave's caches: a raising wave (a fail policy) leaves them to
+    # the finally below
+    scheduled = extracted = delta_shards = None
+    try:
+        if resume and state.frontier.exists():
+            wave = state.frontier.manifest()["lineage"]["next_wave"]
+            # cross-table reconciliation: a crash between a wave's table
+            # commits and the frontier pointer leaves orphan wave>=next
+            # snapshots that the replayed wave would double-append
+            for tbl in (state.records, state.trace, state.errors, state.seen,
+                        state.shards, state.discovered):
+                tbl.rollback_to_wave_before(wave)
+            seen_df = (
+                state.seen.read(spark)
+                if state.seen.exists()
+                else spark.createDataFrame(
+                    [], "url_hash long, url_canon string, url string, wave int"
                 )
-                # full outer: hosts with errors but no robots entry
-                # still back off
-                budgets_dim = budgets_dim.join(err_hosts, "host", "full")
-        if rank_bounds is None or bounds_age >= max(
-            1, config.resample_bounds_waves
-        ):
-            from swspark.scheduler import default_n_buckets, sample_order_bounds
-
-            rank_bounds = sample_order_bounds(
-                frontier, default_n_buckets(spark)
             )
-            bounds_age = 0
-        bounds_age += 1
-        scheduled = schedule_wave(
-            frontier,
-            budgets_dim,
-            config.wave_period,
-            config.throttle,
-            config.max_urls_per_wave,
-            bounds=rank_bounds,
-        )
-        scheduled = salted_repartition(
-            scheduled,
-            spark.sparkContext.defaultParallelism,
-            config.salt_buckets,
-        ).cache()
-        n_sched = scheduled.count()
-        if n_sched == 0:
-            scheduled.unpersist()
-            if resurrected is not None:
-                # an idle (fully-throttled) wave still changed the
-                # frontier: commit the resurrected rows as add-only
-                # op-log deltas, or the next wave's fold (and any
-                # resume) would miss them (the expiry read consults
-                # wave w-ttl exactly once)
+            blooms = _rebuild_blooms(spark, state, seen_df, config,
+                                     bloom_bits, bloom_k)
+        else:
+            frontier, xml_errors, expand_cleanup = init_frontier(
+                spark, config, seeds, sitemaps, rules_table, accept
+            )
+            wave = 0
+            try:
+                # the seeded frontier IS the first compacted base
+                # (bucketed): every wave's frontier fold anchors on it
+                # until a compaction
                 state.frontier.commit(
-                    _frontier_delta(None, None, resurrected, wave),
-                    mode="append",
-                    lineage={"next_wave": wave + 1, "wave": wave,
-                             "scheduled": 0},
+                    robots_filter(frontier), mode="overwrite",
+                    bucket=key_bucket,
+                    lineage={"next_wave": 0, "phase": "seeded",
+                             "compacted_through": -1},
                 )
-            if ttl is None:
-                break  # quiescence (A28)
-            # last fetch wave straight from commit lineage — no scan
-            last = (
-                state.seen.manifest()["lineage"].get("wave")
-                if state.seen.exists() else None
-            )
-            if last is None or wave >= last + ttl:
-                break  # nothing pending and nothing left to expire
-            wave += 1  # idle wave: wall-clock passes until next expiry
-            continue
+                if xml_errors is not None:
+                    state.errors.commit(
+                        xml_errors.select(
+                            F.lit(-1).alias("wave"),
+                            F.col("sitemap_url").alias("url"),
+                            F.lit("xml").alias("stage"),
+                            "error",
+                        ),
+                        mode="overwrite",
+                    )
+            finally:
+                expand_cleanup()  # the expansion's parse caches
+            blooms: dict[int, BloomFilter] = {}
 
-        fetched, dl_errs, obs = fetch_pages(
-            scheduled, pages, on_dl_error=config.on_dl_error
-        )
-        if spec_wants_context(spec):
-            # ctx.robot() support: ride the host's rules-as-data onto
-            # the pages (broadcast-joined; same table politeness uses)
-            fetched = fetched.join(
-                rules_table.select("host", "rules"), "host", "left"
-            )
-        rec, disc, scrap_errs = apply_extraction(fetched, spec)
-        rec = rec.withColumn("wave", F.lit(wave))
+        totals = {"waves": 0, "fetched": 0, "records": 0, "discovered": 0, "errors": 0}
+        shards_synced = False  # mmap transport: full shard-file refresh once
+        rank_bounds = None  # hot-host bucket boundaries, resampled every K
+        bounds_age = 0
 
-        # --- commit records + trace + errors --------------------------
-        state.records.commit(rec, mode="append", lineage={"wave": wave})
-        state.trace.commit(
-            scheduled.select(
-                F.lit(wave).alias("wave"), "host", "url", "rank"
-            ),
-            mode="append",
-            lineage={"wave": wave},
-        )
-        err_all = dl_errs.select(
-            F.lit(wave).alias("wave"), "url", F.lit("download").alias("stage"), "error"
-        ).unionByName(
-            scrap_errs.select(
-                F.lit(wave).alias("wave"), "url", F.lit("scrape").alias("stage"),
-                "error",
-            )
-        )
-        state.errors.commit(
-            err_all, mode="append", lineage={"wave": wave}, count_rows=True
-        )
-        n_errors = state.errors.manifest()["lineage"]["n_rows"]
-        if n_errors and (config.on_dl_error == "fail" or config.on_scrap_error == "fail"):
-            raise RuntimeError(f"wave {wave}: {n_errors} errors with fail policy")
+        while wave < config.max_waves:
+            # every wave, live or resumed, schedules from the committed
+            # state (bucketed base ⊳ op log): the plan is one base scan
+            # plus one op-log scan whatever the wave index
+            frontier = _reconstruct_frontier(spark, state.frontier)
+            ttl = config.recrawl_after_waves
+            resurrected = None
+            if ttl is not None and wave >= ttl:
+                # resurrection: rows fetched exactly ttl waves ago age out
+                # of the seen set's "fresh" window and rejoin the frontier
+                # (each seen row expires exactly once; a refetch appends a
+                # new seen row, so the cycle repeats every ttl waves).
+                # frontier ∩ resurrected = ∅: a pending URL has no fresh
+                # seen row, so it cannot be expiring now.
+                # read_wave_range prunes the read to wave w-ttl's own data
+                # dirs (or the base's wave=w-ttl partition) — never a full
+                # scan
+                expired = state.seen.read_wave_range(
+                    spark, wave - ttl, wave - ttl + 1
+                )
+                if expired is not None:
+                    # resurrect the RAW url (seen carries it for exactly
+                    # this): fetch_pages joins the pages source on the
+                    # exact string, so a canonical-form resurrection would
+                    # silently miss any URL whose raw form differs
+                    # (uppercase host, :80, fragment)
+                    resurrected = _frontier_rows(
+                        expired.select("url"), wave
+                    ).withColumn(
+                        "last_fetch_ts",
+                        F.timestamp_seconds(
+                            F.lit(float((wave - ttl) * config.wave_period))
+                        ),
+                    ).select([f.name for f in FRONTIER_SCHEMA.fields])
+                    frontier = frontier.unionByName(resurrected)
 
-        # --- update seen (attempted URLs count as seen; 404s are not
-        # retried forever, matching "scheduled+fetched" accounting) ----
-        seen_delta = scheduled.select(
-            "url_hash", "url_canon", "url", F.lit(wave).alias("wave")
-        )
-        state.seen.commit(seen_delta, mode="append", lineage={"wave": wave})
-        compaction_due = (wave + 1) % config.compact_every_waves == 0
-        if compaction_due:
-            # fold base + K wave deltas into one bucketed, wave-
-            # partitioned snapshot (bounded maintenance; amortized
-            # O(|seen|/K) per wave) and reclaim superseded dirs
-            state.seen.compact(
-                spark, seen_bucket,
-                lineage={"wave": wave, "compacted_through": wave},
-            )
-            # retention floor K+2: every post-compaction wave's delta
-            # manifest must outlive the next cycle (read_wave_range
-            # walks them for recrawl expiry, and crash-rollback needs
-            # the previous wave's manifest as its anchor)
-            state.seen.expire_snapshots(
-                max(config.snapshot_keep_last, config.compact_every_waves + 2)
-            )
-        # durable incremental shard delta (distributed build), persisted
-        # so the same shards feed both the table commit and the
-        # in-memory merge below without recomputation
-        delta_shards = build_filter_shards(
-            seen_delta, config.n_seen_buckets,
-            fixed_bits=bloom_bits, fixed_k=bloom_k,
-        ).persist()
-        state.shards.commit(
-            delta_shards, mode="append",
-            lineage={"wave": wave,
-                     "geometry": [bloom_bits, bloom_k],
-                     "seen_version": state.seen.current_version()},
-        )
-        # merge the distributed shard blobs (n_seen_buckets fixed-size
-        # rows, ~2 MB total) — never the raw frontier-cardinality hashes
-        wave_touched = _merge_bloom_shards(blooms, delta_shards)
-        delta_shards.unpersist()
+            budgets_dim = rules_table.select(F.col("host"), "crawl_delay")
+            if config.error_backoff_window is not None and state.errors.exists():
+                # hosts that erred recently yield budget (AIMD-style):
+                # k = #error-waves in the window, budget -> budget / 2^k.
+                # read_wave_range prunes the read to the window's data dirs
+                # via commit lineage — at 10^4 waves the old whole-table
+                # read globbed every per-wave error dir every wave
+                w0 = wave - config.error_backoff_window
+                err_window = state.errors.read_wave_range(spark, w0, wave)
+                if err_window is not None:
+                    err_hosts = (
+                        err_window
+                        .where(F.col("stage") == "download")
+                        .select(
+                            urlnorm.url_host(F.col("url")).alias("host"), "wave"
+                        )
+                        .distinct()
+                        .groupBy("host")
+                        .agg(
+                            F.least(F.count(F.lit(1)), F.lit(4))
+                            .cast("int")
+                            .alias("backoff_k")
+                        )
+                    )
+                    # full outer: hosts with errors but no robots entry
+                    # still back off
+                    budgets_dim = budgets_dim.join(err_hosts, "host", "full")
+            if rank_bounds is None or bounds_age >= max(
+                1, config.resample_bounds_waves
+            ):
+                from swspark.scheduler import default_n_buckets, sample_order_bounds
 
-        # --- discovered URLs -> next frontier (sendUrl feedback, A22) --
-        disc_new = _frontier_rows(
-            disc.select(F.col("discovered_url").alias("url")), wave + 1
-        )
-        disc_new = robots_filter(disc_new)
-        # split read: Bloom-positive suspects take a shuffle-free
-        # sort-merge anti-join against the bucketed base + broadcast
-        # anti-joins against the recent wave deltas
-        disc_new = filter_new_urls(
-            spark, disc_new, state.seen.read_split(spark), blooms,
-            config.n_seen_buckets, shard_dir=config.bloom_shard_dir,
-            # first write of a session refreshes every shard file (the
-            # on-disk set may be stale); afterwards only this wave's
-            # touched buckets are rewritten (their mtime bump is the
-            # only re-map executors pay)
-            touched_buckets=wave_touched if shards_synced else None,
-        )
-        shards_synced = True
-        state.discovered.commit(
-            disc.select(F.lit(wave).alias("wave"), "url", "discovered_url"),
-            mode="append",
-            lineage={"wave": wave},
-        )
+                rank_bounds = sample_order_bounds(
+                    frontier, default_n_buckets(spark)
+                )
+                bounds_age = 0
+            bounds_age += 1
+            scheduled = schedule_wave(
+                frontier,
+                budgets_dim,
+                config.wave_period,
+                config.throttle,
+                config.max_urls_per_wave,
+                bounds=rank_bounds,
+            )
+            scheduled = salted_repartition(
+                scheduled,
+                spark.sparkContext.defaultParallelism,
+                config.salt_buckets,
+            ).cache()
+            n_sched = scheduled.count()
+            if n_sched == 0:
+                scheduled.unpersist()
+                if resurrected is not None:
+                    # an idle (fully-throttled) wave still changed the
+                    # frontier: commit the resurrected rows as add-only
+                    # op-log deltas, or the next wave's fold (and any
+                    # resume) would miss them (the expiry read consults
+                    # wave w-ttl exactly once)
+                    state.frontier.commit(
+                        _frontier_delta(None, None, resurrected, wave),
+                        mode="append",
+                        lineage={"next_wave": wave + 1, "wave": wave,
+                                 "scheduled": 0},
+                    )
+                if ttl is None:
+                    break  # quiescence (A28)
+                # last fetch wave straight from commit lineage — no scan
+                last = (
+                    state.seen.manifest()["lineage"].get("wave")
+                    if state.seen.exists() else None
+                )
+                if last is None or wave >= last + ttl:
+                    break  # nothing pending and nothing left to expire
+                wave += 1  # idle wave: wall-clock passes until next expiry
+                continue
 
-        m = obs.get
-        lineage = {
-            "next_wave": wave + 1,
-            "wave": wave,
-            "scheduled": n_sched,
-            "pages_in": m["pages_in"],
-            "pages_out": m["pages_out"],
-            "errors": n_errors,
-            "seen_version": state.seen.current_version(),
-        }
-        # --- next frontier: wave-sized DELTA commit (op log: del =
-        # scheduled keys, add = discovered + resurrected rows), never
-        # an O(|frontier|) rewrite; the next wave folds it in ---------
-        state.frontier.commit(
-            _frontier_delta(seen_delta, disc_new, resurrected, wave),
-            mode="append", lineage=lineage,
-        )
-        if compaction_due:
-            # every K waves: fold base + K deltas into a fresh bucketed
-            # base (amortized O(|frontier|/K) per wave), as seen does
+            fetched, dl_errs, obs = fetch_pages(
+                scheduled, pages, on_dl_error=config.on_dl_error
+            )
+            if spec_wants_context(spec):
+                # ctx.robot() support: ride the host's rules-as-data onto
+                # the pages (broadcast-joined; same table politeness uses)
+                fetched = fetched.join(
+                    rules_table.select("host", "rules"), "host", "left"
+                )
+            # one extraction pass per wave: the records, errors,
+            # discovered and frontier commits all read this cache
+            extracted = with_extraction(fetched, spec).drop("html").persist()
+            rec, disc, scrap_errs = apply_extraction(extracted, spec)
+            rec = rec.withColumn("wave", F.lit(wave))
+
+            # --- commit records + trace + errors --------------------------
+            state.records.commit(rec, mode="append", lineage={"wave": wave})
+            state.trace.commit(
+                scheduled.select(
+                    F.lit(wave).alias("wave"), "host", "url", "rank"
+                ),
+                mode="append",
+                lineage={"wave": wave},
+            )
+            err_all = dl_errs.select(
+                F.lit(wave).alias("wave"), "url", F.lit("download").alias("stage"), "error"
+            ).unionByName(
+                scrap_errs.select(
+                    F.lit(wave).alias("wave"), "url", F.lit("scrape").alias("stage"),
+                    "error",
+                )
+            )
+            state.errors.commit(
+                err_all, mode="append", lineage={"wave": wave}, count_rows=True
+            )
+            n_errors = state.errors.manifest()["lineage"]["n_rows"]
+            if n_errors and (config.on_dl_error == "fail" or config.on_scrap_error == "fail"):
+                raise RuntimeError(f"wave {wave}: {n_errors} errors with fail policy")
+
+            # --- update seen (attempted URLs count as seen; 404s are not
+            # retried forever, matching "scheduled+fetched" accounting) ----
+            seen_delta = scheduled.select(
+                "url_hash", "url_canon", "url", F.lit(wave).alias("wave")
+            )
+            state.seen.commit(seen_delta, mode="append", lineage={"wave": wave})
+            compaction_due = (wave + 1) % config.compact_every_waves == 0
+            if compaction_due:
+                # fold base + K wave deltas into one bucketed, wave-
+                # partitioned snapshot (bounded maintenance; amortized
+                # O(|seen|/K) per wave) and reclaim superseded dirs
+                state.seen.compact(
+                    spark, seen_bucket,
+                    lineage={"wave": wave, "compacted_through": wave},
+                )
+                # retention floor K+2: every post-compaction wave's delta
+                # manifest must outlive the next cycle (read_wave_range
+                # walks them for recrawl expiry, and crash-rollback needs
+                # the previous wave's manifest as its anchor)
+                state.seen.expire_snapshots(
+                    max(config.snapshot_keep_last, config.compact_every_waves + 2)
+                )
+            # durable incremental shard delta (distributed build), persisted
+            # so the same shards feed both the table commit and the
+            # in-memory merge below without recomputation
+            delta_shards = build_filter_shards(
+                seen_delta, config.n_seen_buckets,
+                fixed_bits=bloom_bits, fixed_k=bloom_k,
+            ).persist()
+            state.shards.commit(
+                delta_shards, mode="append",
+                lineage={"wave": wave,
+                         "geometry": [bloom_bits, bloom_k],
+                         "seen_version": state.seen.current_version()},
+            )
+            # merge the distributed shard blobs (n_seen_buckets fixed-size
+            # rows, ~2 MB total) — never the raw frontier-cardinality hashes
+            wave_touched = _merge_bloom_shards(blooms, delta_shards)
+            delta_shards.unpersist()
+
+            # --- discovered URLs -> next frontier (sendUrl feedback, A22) --
+            disc_new = _frontier_rows(
+                disc.select(F.col("discovered_url").alias("url")), wave + 1
+            )
+            disc_new = robots_filter(disc_new)
+            # split read: Bloom-positive suspects take a shuffle-free
+            # sort-merge anti-join against the bucketed base + broadcast
+            # anti-joins against the recent wave deltas
+            disc_new = filter_new_urls(
+                spark, disc_new, state.seen.read_split(spark), blooms,
+                config.n_seen_buckets, shard_dir=config.bloom_shard_dir,
+                # first write of a session refreshes every shard file (the
+                # on-disk set may be stale); afterwards only this wave's
+                # touched buckets are rewritten (their mtime bump is the
+                # only re-map executors pay)
+                touched_buckets=wave_touched if shards_synced else None,
+            )
+            shards_synced = True
+            state.discovered.commit(
+                disc.select(F.lit(wave).alias("wave"), "url", "discovered_url"),
+                mode="append",
+                lineage={"wave": wave},
+            )
+
+            m = obs.get
+            lineage = {
+                "next_wave": wave + 1,
+                "wave": wave,
+                "scheduled": n_sched,
+                "pages_in": m["pages_in"],
+                "pages_out": m["pages_out"],
+                "errors": n_errors,
+                "seen_version": state.seen.current_version(),
+            }
+            # --- next frontier: wave-sized DELTA commit (op log: del =
+            # scheduled keys, add = discovered + resurrected rows), never
+            # an O(|frontier|) rewrite; the next wave folds it in ---------
             state.frontier.commit(
-                _reconstruct_frontier(spark, state.frontier),
-                mode="overwrite", bucket=key_bucket,
-                lineage=dict(lineage, compacted_through=wave),
+                _frontier_delta(seen_delta, disc_new, resurrected, wave),
+                mode="append", lineage=lineage,
             )
-            state.frontier.expire_snapshots(config.snapshot_keep_last)
-        scheduled.unpersist()
+            if compaction_due:
+                # every K waves: fold base + K deltas into a fresh bucketed
+                # base (amortized O(|frontier|/K) per wave), as seen does
+                state.frontier.commit(
+                    _reconstruct_frontier(spark, state.frontier),
+                    mode="overwrite", bucket=key_bucket,
+                    lineage=dict(lineage, compacted_through=wave),
+                )
+                state.frontier.expire_snapshots(config.snapshot_keep_last)
+            scheduled.unpersist()
+            extracted.unpersist()
 
-        totals["waves"] += 1
-        totals["fetched"] += m["pages_out"]
-        totals["errors"] += n_errors
-        wave += 1
+            totals["waves"] += 1
+            totals["fetched"] += m["pages_out"]
+            totals["errors"] += n_errors
+            wave += 1
 
-    rules_table.unpersist()
+    finally:
+        for df in (rules_table, scheduled, extracted, delta_shards):
+            if df is not None:
+                df.unpersist()
     totals["records"] = (
         state.records.read(spark).count() if state.records.exists() else 0
     )

@@ -12,7 +12,9 @@ followed by dataframe-level ``explode`` — the idiomatic Spark shape
 for a one-to-many generator. Parse errors are captured per-row into
 ``error`` so the caller can apply the reference's per-stage error
 policy (OnError::{Fail, SkipAndLog}, config.rs:81-86) as a filter,
-never a task failure.
+never a task failure. ``with_extraction`` adds the struct column;
+``apply_extraction`` projects records, discovered URLs and errors
+from it, so a caller that persists the former runs the UDF once.
 """
 
 from __future__ import annotations
@@ -201,16 +203,12 @@ def make_extract_udf(spec: ExtractionSpec | str):
     return extract
 
 
-def apply_extraction(df, spec: ExtractionSpec | str, url_col: str = "url",
-                     html_col: str = "html"):
-    """pages df -> (records_df, discovered_urls_df, errors_df).
-
-    records_df: one row per sendRecord, columns = url + spec.fields
-    (explode of the records array, field names pinned).
-    discovered_urls_df: one row per sendUrl (url, discovered_url) —
-    the feedback edge (interop.rs:317-324, CountedTx scrapable.rs:123-144).
-    errors_df: (url, error) for the OnError policy.
-    """
+def with_extraction(df, spec: ExtractionSpec | str, url_col: str = "url",
+                    html_col: str = "html"):
+    """pages df -> the same rows plus ``_ex``, the spec's extraction
+    result struct (records, urls, error). Unpersisted, every action on
+    a frame ``apply_extraction`` projects from it re-runs the UDF; the
+    crawl driver and ``swspark scrap`` persist it once instead."""
     if isinstance(spec, str):
         spec = SPECS[spec]
     udf = make_extract_udf(spec)
@@ -230,12 +228,32 @@ def apply_extraction(df, spec: ExtractionSpec | str, url_col: str = "url",
             F.col("location_kind") if "location_kind" in df.columns
             else F.lit(None).cast("string")
         )
-        base = df.withColumn(
+        return df.withColumn(
             "_ex", udf(F.col(url_col), F.col(html_col), rules_col, kind_col)
         )
-    else:
-        base = df.withColumn("_ex", udf(F.col(url_col), F.col(html_col)))
+    return df.withColumn("_ex", udf(F.col(url_col), F.col(html_col)))
 
+
+def apply_extraction(df, spec: ExtractionSpec | str, url_col: str = "url",
+                     html_col: str = "html"):
+    """pages df -> (records_df, discovered_urls_df, errors_df).
+
+    records_df: one row per sendRecord, columns = url + spec.fields
+    (explode of the records array, field names pinned).
+    discovered_urls_df: one row per sendUrl (url, discovered_url) —
+    the feedback edge (interop.rs:317-324, CountedTx scrapable.rs:123-144).
+    errors_df: (url, error) for the OnError policy.
+
+    All three are projections of one ``_ex`` column. A ``df`` that
+    already carries it (``with_extraction``, typically persisted) is
+    projected as is; otherwise ``_ex`` is added here, and every action
+    on any of the three re-runs the UDF.
+    """
+    if isinstance(spec, str):
+        spec = SPECS[spec]
+    base = df if "_ex" in df.columns else with_extraction(
+        df, spec, url_col, html_col
+    )
     rec = base.select(url_col, F.explode("_ex.records").alias("_r"))
     rec = rec.select(
         url_col,

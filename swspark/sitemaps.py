@@ -9,7 +9,11 @@ element kind (A3, scrapable.rs:54-78), collect ``<loc>`` URLs
 (A4, XPath ``//sm:loc`` ≙ namespace-tolerant findall), and apply the
 user ``acceptUrl`` predicate *before* anything downstream sees the
 URL (A10 — the reference's only predicate pushdown, crawler.rs:92-96,
-123-125).
+123-125). A Column predicate is a Catalyst filter; a plain Python
+``(url, kind)`` predicate runs inside the parse UDF, on each loc in the
+same batch, so no row-level Python UDF re-evaluates it downstream; a
+context-aware ``(url, kind, ctx)`` predicate stays a separate UDF
+because it needs each loc's host rules joined on.
 
 Scale notes: sitemapindex children are collected to the driver only
 as a *count* per level; page URLs never leave executors. A real
@@ -68,22 +72,40 @@ def parse_sitemap_bytes(body: bytes) -> tuple[str, list[str]]:
     return kind, locs
 
 
-@F.pandas_udf(SITEMAP_PARSE_TYPE)
-def sitemap_parse_udf(body: pd.Series) -> pd.DataFrame:
-    kinds, locs_out, errs = [], [], []
-    for b in body:
-        try:
-            if b is None:
-                raise ValueError("missing sitemap body (download error)")
-            kind, locs = parse_sitemap_bytes(bytes(b))
-            kinds.append(kind)
-            locs_out.append(locs)
-            errs.append(None)
-        except Exception as exc:
-            kinds.append(None)
-            locs_out.append(None)
-            errs.append(f"{type(exc).__name__}: {exc}")
-    return pd.DataFrame({"kind": kinds, "locs": locs_out, "error": errs})
+def _accepts(accept: Callable[[str, str], bool], url: str, kind: str) -> bool:
+    try:
+        return bool(accept(url, kind))
+    except Exception:
+        return False  # Lua error -> reject+log, scraper.rs:216-226
+
+
+def make_sitemap_parse_udf(accept: Callable[[str, str], bool] | None = None):
+    """The vectorized gunzip + parse UDF (body -> kind, locs, error).
+    A plain Python ``accept(url, kind)`` (A31) filters each parsed
+    root's locs under its kind (URLSET/INDEX) in the same batch: the
+    predicate runs once per loc, and rejected locs never leave the
+    worker."""
+
+    @F.pandas_udf(SITEMAP_PARSE_TYPE)
+    def sitemap_parse_udf(body: pd.Series) -> pd.DataFrame:
+        kinds, locs_out, errs = [], [], []
+        for b in body:
+            try:
+                if b is None:
+                    raise ValueError("missing sitemap body (download error)")
+                kind, locs = parse_sitemap_bytes(bytes(b))
+                if accept is not None:
+                    locs = [u for u in locs if _accepts(accept, u, kind)]
+                kinds.append(kind)
+                locs_out.append(locs)
+                errs.append(None)
+            except Exception as exc:
+                kinds.append(None)
+                locs_out.append(None)
+                errs.append(f"{type(exc).__name__}: {exc}")
+        return pd.DataFrame({"kind": kinds, "locs": locs_out, "error": errs})
+
+    return sitemap_parse_udf
 
 
 AcceptCol = Callable[[Column, Column], Column]
@@ -129,24 +151,6 @@ def make_accept_ctx_udf(accept: Callable[[str, str | None, "CrawlingContext"], b
     return accept_udf
 
 
-def make_accept_udf(accept: Callable[[str, str | None], bool]):
-    """Vectorized boolean filter UDF for a Python acceptUrl predicate
-    (A31). Prefer an AcceptCol built-in expression when the predicate
-    is expressible — Catalyst then pushes it down for free."""
-
-    @F.pandas_udf("boolean")
-    def accept_udf(url: pd.Series, kind: pd.Series) -> pd.Series:
-        out = []
-        for u, k in zip(url, kind):
-            try:
-                out.append(bool(accept(u, k)))
-            except Exception:
-                out.append(False)  # Lua error -> reject+log, scraper.rs:216-226
-        return pd.Series(out)
-
-    return accept_udf
-
-
 class ExpansionResult:
     def __init__(self, frontier: DataFrame, errors: DataFrame, levels: int,
                  persisted: list[DataFrame] | None = None):
@@ -179,15 +183,15 @@ def expand_sitemaps(
     sitemaps: the sitemaps table ``(sitemap_url, kind, body)`` — the
     simulated fetch source.
     accept: a (url_col, kind_col) -> BooleanType Column factory
-    (pushdown-friendly), a plain Python ``(url, kind) -> bool``, or a
-    context-aware ``(url, kind, ctx) -> bool`` whose ctx exposes
+    (pushdown-friendly), a plain Python ``(url, kind) -> bool`` (run
+    on each loc inside the parse UDF), or a context-aware ``(url, kind, ctx) -> bool`` whose ctx exposes
     ``sitemap()``/``robot()`` (requires ``rules_table``, the
     rules-as-data robots table, for a non-None robot).
     """
     ctx_accept = False
-    if accept is None:
-        accept_filter = lambda url, kind: F.lit(True)  # noqa: E731
-    elif callable(accept) and not isinstance(accept, Column):
+    parse_accept = None  # a plain Python predicate, run inside the parse
+    accept_filter = lambda url, kind: F.lit(True)  # noqa: E731
+    if callable(accept) and not isinstance(accept, Column):
         import inspect
 
         try:
@@ -198,7 +202,7 @@ def expand_sitemaps(
             ctx_accept = True
             ctx_udf = make_accept_ctx_udf(accept)
         else:
-            # Probe: try building a Column; else wrap as UDF.
+            # Probe: try building a Column; else run it in the parse.
             try:
                 probe = accept(F.lit("x"), F.lit("URLSET"))
                 is_col = isinstance(probe, Column)
@@ -207,8 +211,8 @@ def expand_sitemaps(
             if is_col:
                 accept_filter = accept
             else:
-                udf = make_accept_udf(accept)
-                accept_filter = lambda url, kind: udf(url, kind)  # noqa: E731
+                parse_accept = accept
+    parse_udf = make_sitemap_parse_udf(parse_accept)
     if ctx_accept:
         from swspark import urlnorm
 
@@ -248,7 +252,7 @@ def expand_sitemaps(
             sitemaps.select("sitemap_url", "body"), "sitemap_url", "left"
         )
         parsed = fetched.select(
-            "sitemap_url", sitemap_parse_udf(F.col("body")).alias("p")
+            "sitemap_url", parse_udf(F.col("body")).alias("p")
         ).select(
             "sitemap_url",
             F.col("p.kind").alias("kind"),
@@ -263,6 +267,8 @@ def expand_sitemaps(
         if on_xml_error == "fail":
             n_err = errs.count()
             if n_err:
+                for df in persisted:
+                    df.unpersist()
                 raise RuntimeError(f"{n_err} sitemap parse errors (on_xml_error=fail)")
         error_parts.append(errs)
 

@@ -475,3 +475,27 @@ def test_frontier_plan_bounded_across_waves(
     )
     assert totals["waves"] >= 9, totals
     assert max(sizes[1:]) <= sizes[1], sizes
+
+
+def _cached_plans(spark):
+    data = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    return sorted(data.apply(i).plan().toString() for i in range(data.size()))
+
+
+def test_failing_crawl_releases_its_caches(spark, corpus, tables, tmp_path):
+    """A crawl that raises mid-wave (on_dl_error='fail' meets the dict
+    corpus's 404s) leaves the session's cache as it found it: the robots
+    rules table and the wave's caches are released, a caller's own
+    cache is kept."""
+    assert corpus.missing_urls
+    callers = spark.range(3).persist()
+    try:
+        before = _cached_plans(spark)
+        with pytest.raises(RuntimeError, match="on_dl_error=fail"):
+            run_crawl(
+                spark, tables, "dict_sitemap", tmp_path / "wfail", "urbandict",
+                accept=accept_term, on_dl_error="fail",
+            )
+        assert _cached_plans(spark) == before
+    finally:
+        callers.unpersist()

@@ -369,7 +369,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("id"),
             simhash64_fast(F.col("text")).alias("sim"),
         )
-        .persist()
     )
     twins = sims.select(
         (F.col("id") + 1000000).alias("id"),
@@ -413,7 +412,7 @@ def q_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id"),
         udf(F.transform(sh, lambda g: F.xxhash64(g))).alias("s0"),
         udf(F.transform(sh, lambda g: F.xxhash64(g, F.lit(1)))).alias("s1"),
-    ).persist()
+    )
 
     def flips(word: int) -> str:
         # XOR of the flipped bits landing in this word
@@ -653,14 +652,11 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies = emb.where(F.col("vec_id") < 50).select(
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
     )
-    # persist the 250-row union: the blocking join consumes it through
-    # TWO branches (anchors + multi-probe postings), each of which
-    # would otherwise re-decode the whole single-row-group embeddings
-    # parquet — 4 full scans for 250 surviving rows (r6 plan capture).
-    # The cache is built inside the timed query and freed by the
-    # ContextCleaner with the plan.
-    base = emb.unionByName(copies).persist()
-    pairs = embedding_neardup_pairs(base, threshold=0.99, bits=6)
+    # a query builder leaves no cache in the session: nothing would
+    # unpersist it
+    pairs = embedding_neardup_pairs(
+        emb.unionByName(copies), threshold=0.99, bits=6
+    )
     return pairs.select("doc_a", "doc_b")
 
 

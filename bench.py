@@ -126,8 +126,8 @@ def prepare_crawl_wave(spark, n_urls: int) -> dict:
     ).persist()
     budgets.count()
     # hot-host rank boundaries sampled ONCE here, reused by every
-    # wave — the driver's steady-state shape (resample_bounds_waves
-    # defaults to 8: 7 of 8 production waves skip the sampling scan;
+    # wave — the driver's steady-state shape (RESAMPLE_BOUNDS_WAVES
+    # is 8: 7 of 8 production waves skip the sampling scan;
     # bounds only steer balance, never results)
     from swspark.scheduler import default_n_buckets, sample_order_bounds
 
@@ -189,7 +189,7 @@ def run_crawl_wave(spark, inputs: dict, shape: str = "stress") -> tuple[float, i
         candidates, inputs["budgets"], wave_period, Throttle("CONCURRENT", 1e18),
         # steady-state wave: boundaries were sampled once at prepare
         # time (any sample is exact — boundaries steer balance, never
-        # results; the driver resamples every resample_bounds_waves)
+        # results; the driver resamples every RESAMPLE_BOUNDS_WAVES)
         bounds=inputs["bounds"],
     )
     scheduled = salted_repartition(

@@ -3,18 +3,26 @@
 Reimagines the reference's concurrent pipeline
 (crawl_site, crawler.rs:216-441: crawler ∥ downloader ∥ scrape workers
 ∥ CSV writer, quiescence watchdog) as a **driver-sequenced wave DAG**
-(SURVEY.md §1.3, §3.1):
+(SURVEY.md §1.3, §3.1). ``crawl`` is a short loop over stage
+functions sharing one ``CrawlRun``:
 
-    seeds -> expand (A21) ->:  per wave:
-        frontier (the committed op log folded over the bucketed base)
-        schedule (window-rank under politeness budgets, A23-A25)
-        fetch    (frontier |x| pages, A1)
-        extract  (Arrow UDF: records + sendUrl discovery, A32/A22;
-                  persisted, so it runs once per page)
-        commit   (snapshot seen/records + lineage, frontier op-log
-                  delta; every K waves a new bucketed base, A30 flush)
-    until the schedulable frontier is empty (quiescence, A28) or a
-    wave/URL budget is hit.
+    open_crawl       resume-reconcile the warehouse, or seed it
+                     (seeds -> sitemap expansion A21 -> robots filter)
+    per wave:
+      wave_frontier  committed op log ⊳ bucketed base + resurrection
+      wave_budgets   per-host robots crawl delay + error backoff
+      schedule       window-rank under politeness budgets (A23-A25),
+                     salted placement; cached and counted
+      idle_wave      nothing schedulable: commit the resurrection,
+                     stop at quiescence (A28) or wait for an expiry
+      fetch_extract  frontier |x| pages (A1) -> Arrow UDF: records +
+                     sendUrl discovery (A32/A22), persisted, once a page
+      commit_outputs records, trace, errors snapshots
+      commit_seen    seen delta + Bloom shard delta (A30 flush)
+      commit_frontier discovered URLs past robots + seen -> frontier
+                     op-log delta; every K waves seen and frontier
+                     compact into bucketed bases
+    until the schedulable frontier is empty or a wave budget is hit.
 
 Invariants:
 - one frontier path: a live wave schedules from exactly the frontier
@@ -77,6 +85,16 @@ FRONTIER_SCHEMA = StructType(
         StructField("discovered_wave", IntegerType()),
     ]
 )
+_FRONTIER_KEYS = ["url_hash", "url_canon"]
+
+# salted placement: a hot registered domain's scheduled rows spread
+# over this many partitions (scheduler.salted_repartition)
+SALT_BUCKETS = 8
+# resample the distributed rank's hot-host bucket boundaries every K
+# waves (boundaries only steer balance, never results — a stale sample
+# at worst unbalances the hot host's buckets for K-1 waves, so the
+# steady-state wave skips the frontier-wide sampling scan)
+RESAMPLE_BOUNDS_WAVES = 8
 
 
 @dataclass
@@ -116,8 +134,6 @@ class CrawlConfig:
     on_xml_error: str = "skip"
     on_scrap_error: str = "skip"
     robot_url: str | None = None  # explicit robots override (config.rs:44-46)
-    salt_buckets: int = 8
-    shuffle_partitions: int | None = None
     # recrawl aging: a URL fetched in wave w becomes schedulable again
     # in wave w + recrawl_after_waves (None = fetch-once, the
     # reference's semantics). Resurrected rows carry a synthetic
@@ -128,12 +144,6 @@ class CrawlConfig:
     # the last N waves gets its budget halved per error-wave (capped
     # at /16, floored at 1). None = off.
     error_backoff_window: int | None = None
-    # resample the distributed rank's hot-host bucket boundaries
-    # every K waves (boundaries only steer balance, never results —
-    # a stale sample at worst unbalances the hot host's buckets for
-    # K-1 waves, so the steady-state wave skips the frontier-wide
-    # sampling scan). 1 = resample every wave.
-    resample_bounds_waves: int = 8
 
 
 class CrawlState:
@@ -151,36 +161,85 @@ class CrawlState:
         self.shards = SnapshotTable(os.path.join(warehouse, "shards"))
 
 
-def _frontier_rows(df: DataFrame, wave: int) -> DataFrame:
-    """Normalize a (url) DataFrame into frontier schema rows."""
+@dataclass
+class CrawlRun:
+    """One ``crawl`` call's state, shared by its stages: the warehouse,
+    the robots rules table, the in-memory Bloom filters, the wave
+    index, the wave's caches and the running totals."""
+
+    spark: SparkSession
+    config: CrawlConfig
+    state: CrawlState
+    # distributed robots: (host, crawl_delay, sitemaps, rules) by host
+    rules_table: DataFrame
+    wave: int = 0
+    blooms: dict[int, BloomFilter] = field(default_factory=dict)
+    rank_bounds: object = None  # hot-host bucket boundaries
+    n_schedules: int = 0  # schedule() calls: the bounds resample every K
+    # the wave's caches: a raising wave (a fail policy) leaves them to
+    # crawl's finally
+    caches: list[DataFrame] = field(default_factory=list)
+    totals: dict = field(default_factory=lambda: dict.fromkeys(
+        ("waves", "fetched", "records", "discovered", "errors", "seen"), 0
+    ))
+
+    def __post_init__(self) -> None:
+        c = self.config
+        self.spec = c.spec if isinstance(c.spec, ExtractionSpec) else SPECS[c.spec]
+        # effective Bloom geometry: derived from expected cardinality
+        # when given (seen.bloom_geometry), else the fixed default
+        self.bloom_bits, self.bloom_k = (
+            bloom_geometry(c.expected_total_urls, c.n_seen_buckets)
+            if c.expected_total_urls is not None
+            else (c.bloom_bits_per_bucket, c.bloom_k)
+        )
+        # state-table layout: bucket keys ARE the join keys, so the
+        # discovery anti-join and resume reconstruction stream the
+        # compacted base straight from its bucket files (no shuffle)
+        self.key_bucket = {"by": _FRONTIER_KEYS, "n": c.n_storage_buckets,
+                           "sort": _FRONTIER_KEYS}
+
+    @property
+    def compaction_due(self) -> bool:
+        return (self.wave + 1) % self.config.compact_every_waves == 0
+
+
+def _frontier_rows(df: DataFrame, wave: int, last_fetch_ts=None) -> DataFrame:
+    """Normalize a (url) DataFrame into frontier schema rows; a
+    resurrected row carries its synthetic ``last_fetch_ts`` column."""
+    if last_fetch_ts is None:
+        last_fetch_ts = F.lit(None).cast("timestamp")
     out = with_url_identity(df.select("url"))
     return (
         out.withColumn("host", urlnorm.url_host(F.col("url")))
         .withColumn("priority", F.lit(0))
-        .withColumn("last_fetch_ts", F.lit(None).cast("timestamp"))
+        .withColumn("last_fetch_ts", last_fetch_ts)
         .withColumn("discovered_wave", F.lit(wave))
         .dropDuplicates(["url_canon"])
-        .select([f.name for f in FRONTIER_SCHEMA.fields])
+        .select(FRONTIER_SCHEMA.fieldNames())
     )
 
 
-def init_frontier(
-    spark: SparkSession,
-    config: CrawlConfig,
-    seeds: DataFrame,
-    sitemaps: DataFrame,
-    rules_table: DataFrame,
-    accept=None,
-):
+def init_frontier(spark: SparkSession, config: CrawlConfig, seeds: DataFrame,
+                  sitemaps: DataFrame, rules_table: DataFrame, accept=None):
     """Seed resolution (scraper.rs:106-117: exactly one seed kind) +
     sitemap expansion into the wave-0 frontier. ``rules_table`` is the
-    distributed robots table (host, crawl_delay, sitemaps, rules)."""
+    distributed robots table (host, crawl_delay, sitemaps, rules).
+    Returns (frontier rows, sitemap errors, cleanup)."""
     kinds = [r.seed_kind for r in seeds.select("seed_kind").distinct().collect()]
     if len(kinds) != 1:
         raise ValueError(f"exactly one seed kind required, got {kinds}")
     kind = kinds[0]
 
-    if kind == "ROBOTS_TXT":
+    if kind == "PAGES":
+        no_errors = seeds.limit(0).select(
+            F.col("seed").alias("sitemap_url"), F.lit("").alias("error")
+        )
+        frontier_urls = seeds.select(F.col("seed").alias("url"))
+        return _frontier_rows(frontier_urls, wave=0), no_errors, lambda: None
+    if kind == "SITEMAPS":
+        seed_sm = seeds.select(F.col("seed").alias("sitemap_url"))
+    elif kind == "ROBOTS_TXT":
         if config.robot_url is not None:
             # crawler.rs:229-231 (tested in tests/validate.rs:3-38)
             raise ValueError("Seed::RobotsTxt conflicts with an explicit robot config")
@@ -195,32 +254,13 @@ def init_frontier(
             .where(F.col("sitemap_url").isNotNull())
             .distinct()
         )
-        res = expand_sitemaps(
-            spark, seed_sm, sitemaps, accept=accept,
-            on_xml_error=config.on_xml_error, rules_table=rules_table,
-        )
-        frontier_urls = res.frontier.select("url")
-        xml_errors = res.errors
-        cleanup = res.cleanup
-    elif kind == "SITEMAPS":
-        seed_sm = seeds.select(F.col("seed").alias("sitemap_url"))
-        res = expand_sitemaps(
-            spark, seed_sm, sitemaps, accept=accept,
-            on_xml_error=config.on_xml_error, rules_table=rules_table,
-        )
-        frontier_urls = res.frontier.select("url")
-        xml_errors = res.errors
-        cleanup = res.cleanup
-    elif kind == "PAGES":
-        frontier_urls = seeds.select(F.col("seed").alias("url"))
-        xml_errors = seeds.limit(0).select(
-            F.col("seed").alias("sitemap_url"), F.lit("").alias("error")
-        )
-        cleanup = lambda: None  # noqa: E731
     else:
         raise ValueError(f"unknown seed kind {kind!r}")
-
-    return _frontier_rows(frontier_urls, wave=0), xml_errors, cleanup
+    res = expand_sitemaps(
+        spark, seed_sm, sitemaps, accept=accept,
+        on_xml_error=config.on_xml_error, rules_table=rules_table,
+    )
+    return _frontier_rows(res.frontier.select("url"), wave=0), res.errors, res.cleanup
 
 
 def crawl(
@@ -234,361 +274,318 @@ def crawl(
     accept=None,
     resume: bool = False,
 ) -> dict:
-    """Run the wave loop; returns summary metrics. State lives in
-    ``warehouse`` (snapshot tables) and is resumable."""
-    state = CrawlState(warehouse)
-    spec = config.spec if isinstance(config.spec, ExtractionSpec) else SPECS[config.spec]
-    if accept is None:
-        # the spec's acceptUrl always gates sitemap URLs, like
-        # `sws crawl -s script.lua` (crawler.rs:92-96,123-125)
-        accept = spec.accept_url
-    # effective Bloom geometry: derived from expected cardinality when
-    # given (seen.bloom_geometry), else the fixed test-scale default
-    if config.expected_total_urls is not None:
-        bloom_bits, bloom_k = bloom_geometry(
-            config.expected_total_urls, config.n_seen_buckets
-        )
-    else:
-        bloom_bits, bloom_k = config.bloom_bits_per_bucket, config.bloom_k
-    # state-table layout: bucket keys ARE the join keys, so the
-    # discovery anti-join and resume reconstruction stream the
-    # compacted base straight from its bucket files (no shuffle);
-    # the seen base is additionally dir-partitioned by wave so the
-    # recrawl-expiry read prunes to one wave's directories
-    key_bucket = {
-        "by": ["url_hash", "url_canon"],
-        "n": config.n_storage_buckets,
-        "sort": ["url_hash", "url_canon"],
-    }
-    seen_bucket = dict(key_bucket, partition=["wave"])
+    """Run the wave loop (the stages in the module docstring). State
+    lives in ``warehouse`` (snapshot tables) and is resumable.
 
+    Returns this call's totals: ``waves`` (fetch waves), ``fetched``
+    pages, and the ``records``, ``discovered``, ``errors`` and ``seen``
+    rows its waves committed. Each comes from the waves' own counts
+    (commit lineage, the schedule count), never from a table scan, so
+    a resumed crawl counts only the waves it ran."""
     # distributed robots: rules stay a by-host DataFrame, matching runs
     # in a pandas UDF over the joined rules column — no driver collect
     rules_table = build_robots_rules_table(robots, config.user_agent).persist()
-
-    def robots_filter(df: DataFrame) -> DataFrame:
-        return robots_filter_distributed(df, rules_table)
-
-    # the wave's caches: a raising wave (a fail policy) leaves them to
-    # the finally below
-    scheduled = extracted = delta_shards = None
+    run = CrawlRun(spark, config, CrawlState(warehouse), rules_table)
     try:
-        if resume and state.frontier.exists():
-            wave = state.frontier.manifest()["lineage"]["next_wave"]
-            # cross-table reconciliation: a crash between a wave's table
-            # commits and the frontier pointer leaves orphan wave>=next
-            # snapshots that the replayed wave would double-append
-            for tbl in (state.records, state.trace, state.errors, state.seen,
-                        state.shards, state.discovered):
-                tbl.rollback_to_wave_before(wave)
-            seen_df = (
-                state.seen.read(spark)
-                if state.seen.exists()
-                else spark.createDataFrame(
-                    [], "url_hash long, url_canon string, url string, wave int"
-                )
-            )
-            blooms = _rebuild_blooms(spark, state, seen_df, config,
-                                     bloom_bits, bloom_k)
-        else:
-            frontier, xml_errors, expand_cleanup = init_frontier(
-                spark, config, seeds, sitemaps, rules_table, accept
-            )
-            wave = 0
-            try:
-                # the seeded frontier IS the first compacted base
-                # (bucketed): every wave's frontier fold anchors on it
-                # until a compaction
-                state.frontier.commit(
-                    robots_filter(frontier), mode="overwrite",
-                    bucket=key_bucket,
-                    lineage={"next_wave": 0, "phase": "seeded",
-                             "compacted_through": -1},
-                )
-                if xml_errors is not None:
-                    state.errors.commit(
-                        xml_errors.select(
-                            F.lit(-1).alias("wave"),
-                            F.col("sitemap_url").alias("url"),
-                            F.lit("xml").alias("stage"),
-                            "error",
-                        ),
-                        mode="overwrite",
-                    )
-            finally:
-                expand_cleanup()  # the expansion's parse caches
-            blooms: dict[int, BloomFilter] = {}
-
-        totals = {"waves": 0, "fetched": 0, "records": 0, "discovered": 0, "errors": 0}
-        shards_synced = False  # mmap transport: full shard-file refresh once
-        rank_bounds = None  # hot-host bucket boundaries, resampled every K
-        bounds_age = 0
-
-        while wave < config.max_waves:
-            # every wave, live or resumed, schedules from the committed
-            # state (bucketed base ⊳ op log): the plan is one base scan
-            # plus one op-log scan whatever the wave index
-            frontier = _reconstruct_frontier(spark, state.frontier)
-            ttl = config.recrawl_after_waves
-            resurrected = None
-            if ttl is not None and wave >= ttl:
-                # resurrection: rows fetched exactly ttl waves ago age out
-                # of the seen set's "fresh" window and rejoin the frontier
-                # (each seen row expires exactly once; a refetch appends a
-                # new seen row, so the cycle repeats every ttl waves).
-                # frontier ∩ resurrected = ∅: a pending URL has no fresh
-                # seen row, so it cannot be expiring now.
-                # read_wave_range prunes the read to wave w-ttl's own data
-                # dirs (or the base's wave=w-ttl partition) — never a full
-                # scan
-                expired = state.seen.read_wave_range(
-                    spark, wave - ttl, wave - ttl + 1
-                )
-                if expired is not None:
-                    # resurrect the RAW url (seen carries it for exactly
-                    # this): fetch_pages joins the pages source on the
-                    # exact string, so a canonical-form resurrection would
-                    # silently miss any URL whose raw form differs
-                    # (uppercase host, :80, fragment)
-                    resurrected = _frontier_rows(
-                        expired.select("url"), wave
-                    ).withColumn(
-                        "last_fetch_ts",
-                        F.timestamp_seconds(
-                            F.lit(float((wave - ttl) * config.wave_period))
-                        ),
-                    ).select([f.name for f in FRONTIER_SCHEMA.fields])
-                    frontier = frontier.unionByName(resurrected)
-
-            budgets_dim = rules_table.select(F.col("host"), "crawl_delay")
-            if config.error_backoff_window is not None and state.errors.exists():
-                # hosts that erred recently yield budget (AIMD-style):
-                # k = #error-waves in the window, budget -> budget / 2^k.
-                # read_wave_range prunes the read to the window's data dirs
-                # via commit lineage — at 10^4 waves the old whole-table
-                # read globbed every per-wave error dir every wave
-                w0 = wave - config.error_backoff_window
-                err_window = state.errors.read_wave_range(spark, w0, wave)
-                if err_window is not None:
-                    err_hosts = (
-                        err_window
-                        .where(F.col("stage") == "download")
-                        .select(
-                            urlnorm.url_host(F.col("url")).alias("host"), "wave"
-                        )
-                        .distinct()
-                        .groupBy("host")
-                        .agg(
-                            F.least(F.count(F.lit(1)), F.lit(4))
-                            .cast("int")
-                            .alias("backoff_k")
-                        )
-                    )
-                    # full outer: hosts with errors but no robots entry
-                    # still back off
-                    budgets_dim = budgets_dim.join(err_hosts, "host", "full")
-            if rank_bounds is None or bounds_age >= max(
-                1, config.resample_bounds_waves
-            ):
-                from swspark.scheduler import default_n_buckets, sample_order_bounds
-
-                rank_bounds = sample_order_bounds(
-                    frontier, default_n_buckets(spark)
-                )
-                bounds_age = 0
-            bounds_age += 1
-            scheduled = schedule_wave(
-                frontier,
-                budgets_dim,
-                config.wave_period,
-                config.throttle,
-                config.max_urls_per_wave,
-                bounds=rank_bounds,
-            )
-            scheduled = salted_repartition(
-                scheduled,
-                spark.sparkContext.defaultParallelism,
-                config.salt_buckets,
-            ).cache()
-            n_sched = scheduled.count()
+        open_crawl(run, seeds, sitemaps, accept, resume)
+        while run.wave < config.max_waves:
+            frontier, resurrected = wave_frontier(run)
+            scheduled, n_sched = schedule(run, frontier, wave_budgets(run))
             if n_sched == 0:
-                scheduled.unpersist()
-                if resurrected is not None:
-                    # an idle (fully-throttled) wave still changed the
-                    # frontier: commit the resurrected rows as add-only
-                    # op-log deltas, or the next wave's fold (and any
-                    # resume) would miss them (the expiry read consults
-                    # wave w-ttl exactly once)
-                    state.frontier.commit(
-                        _frontier_delta(None, None, resurrected, wave),
-                        mode="append",
-                        lineage={"next_wave": wave + 1, "wave": wave,
-                                 "scheduled": 0},
-                    )
-                if ttl is None:
-                    break  # quiescence (A28)
-                # last fetch wave straight from commit lineage — no scan
-                last = (
-                    state.seen.manifest()["lineage"].get("wave")
-                    if state.seen.exists() else None
-                )
-                if last is None or wave >= last + ttl:
-                    break  # nothing pending and nothing left to expire
-                wave += 1  # idle wave: wall-clock passes until next expiry
+                if idle_wave(run, resurrected):
+                    break
                 continue
-
-            fetched, dl_errs, obs = fetch_pages(
-                scheduled, pages, on_dl_error=config.on_dl_error
-            )
-            if spec_wants_context(spec):
-                # ctx.robot() support: ride the host's rules-as-data onto
-                # the pages (broadcast-joined; same table politeness uses)
-                fetched = fetched.join(
-                    rules_table.select("host", "rules"), "host", "left"
-                )
-            # one extraction pass per wave: the records, errors,
-            # discovered and frontier commits all read this cache
-            extracted = with_extraction(fetched, spec).drop("html").persist()
-            rec, disc, scrap_errs = apply_extraction(extracted, spec)
-            rec = rec.withColumn("wave", F.lit(wave))
-
-            # --- commit records + trace + errors --------------------------
-            state.records.commit(rec, mode="append", lineage={"wave": wave})
-            state.trace.commit(
-                scheduled.select(
-                    F.lit(wave).alias("wave"), "host", "url", "rank"
-                ),
-                mode="append",
-                lineage={"wave": wave},
-            )
-            err_all = dl_errs.select(
-                F.lit(wave).alias("wave"), "url", F.lit("download").alias("stage"), "error"
-            ).unionByName(
-                scrap_errs.select(
-                    F.lit(wave).alias("wave"), "url", F.lit("scrape").alias("stage"),
-                    "error",
-                )
-            )
-            state.errors.commit(
-                err_all, mode="append", lineage={"wave": wave}, count_rows=True
-            )
-            n_errors = state.errors.manifest()["lineage"]["n_rows"]
-            if n_errors and (config.on_dl_error == "fail" or config.on_scrap_error == "fail"):
-                raise RuntimeError(f"wave {wave}: {n_errors} errors with fail policy")
-
-            # --- update seen (attempted URLs count as seen; 404s are not
-            # retried forever, matching "scheduled+fetched" accounting) ----
-            seen_delta = scheduled.select(
-                "url_hash", "url_canon", "url", F.lit(wave).alias("wave")
-            )
-            state.seen.commit(seen_delta, mode="append", lineage={"wave": wave})
-            compaction_due = (wave + 1) % config.compact_every_waves == 0
-            if compaction_due:
-                # fold base + K wave deltas into one bucketed, wave-
-                # partitioned snapshot (bounded maintenance; amortized
-                # O(|seen|/K) per wave) and reclaim superseded dirs
-                state.seen.compact(
-                    spark, seen_bucket,
-                    lineage={"wave": wave, "compacted_through": wave},
-                )
-                # retention floor K+2: every post-compaction wave's delta
-                # manifest must outlive the next cycle (read_wave_range
-                # walks them for recrawl expiry, and crash-rollback needs
-                # the previous wave's manifest as its anchor)
-                state.seen.expire_snapshots(
-                    max(config.snapshot_keep_last, config.compact_every_waves + 2)
-                )
-            # durable incremental shard delta (distributed build), persisted
-            # so the same shards feed both the table commit and the
-            # in-memory merge below without recomputation
-            delta_shards = build_filter_shards(
-                seen_delta, config.n_seen_buckets,
-                fixed_bits=bloom_bits, fixed_k=bloom_k,
-            ).persist()
-            state.shards.commit(
-                delta_shards, mode="append",
-                lineage={"wave": wave,
-                         "geometry": [bloom_bits, bloom_k],
-                         "seen_version": state.seen.current_version()},
-            )
-            # merge the distributed shard blobs (n_seen_buckets fixed-size
-            # rows, ~2 MB total) — never the raw frontier-cardinality hashes
-            wave_touched = _merge_bloom_shards(blooms, delta_shards)
-            delta_shards.unpersist()
-
-            # --- discovered URLs -> next frontier (sendUrl feedback, A22) --
-            disc_new = _frontier_rows(
-                disc.select(F.col("discovered_url").alias("url")), wave + 1
-            )
-            disc_new = robots_filter(disc_new)
-            # split read: Bloom-positive suspects take a shuffle-free
-            # sort-merge anti-join against the bucketed base + broadcast
-            # anti-joins against the recent wave deltas
-            disc_new = filter_new_urls(
-                spark, disc_new, state.seen.read_split(spark), blooms,
-                config.n_seen_buckets, shard_dir=config.bloom_shard_dir,
-                # first write of a session refreshes every shard file (the
-                # on-disk set may be stale); afterwards only this wave's
-                # touched buckets are rewritten (their mtime bump is the
-                # only re-map executors pay)
-                touched_buckets=wave_touched if shards_synced else None,
-            )
-            shards_synced = True
-            state.discovered.commit(
-                disc.select(F.lit(wave).alias("wave"), "url", "discovered_url"),
-                mode="append",
-                lineage={"wave": wave},
-            )
-
-            m = obs.get
-            lineage = {
-                "next_wave": wave + 1,
-                "wave": wave,
-                "scheduled": n_sched,
-                "pages_in": m["pages_in"],
-                "pages_out": m["pages_out"],
-                "errors": n_errors,
-                "seen_version": state.seen.current_version(),
-            }
-            # --- next frontier: wave-sized DELTA commit (op log: del =
-            # scheduled keys, add = discovered + resurrected rows), never
-            # an O(|frontier|) rewrite; the next wave folds it in ---------
-            state.frontier.commit(
-                _frontier_delta(seen_delta, disc_new, resurrected, wave),
-                mode="append", lineage=lineage,
-            )
-            if compaction_due:
-                # every K waves: fold base + K deltas into a fresh bucketed
-                # base (amortized O(|frontier|/K) per wave), as seen does
-                state.frontier.commit(
-                    _reconstruct_frontier(spark, state.frontier),
-                    mode="overwrite", bucket=key_bucket,
-                    lineage=dict(lineage, compacted_through=wave),
-                )
-                state.frontier.expire_snapshots(config.snapshot_keep_last)
-            scheduled.unpersist()
-            extracted.unpersist()
-
-            totals["waves"] += 1
-            totals["fetched"] += m["pages_out"]
-            totals["errors"] += n_errors
-            wave += 1
-
+            rec, disc, errs, obs = fetch_extract(run, scheduled, pages)
+            n_errors = commit_outputs(run, scheduled, rec, errs)
+            seen_delta, touched = commit_seen(run, scheduled)
+            commit_frontier(run, disc, seen_delta, resurrected, touched,
+                            {"scheduled": n_sched, "errors": n_errors}, obs)
+            _release(run.caches)
     finally:
-        for df in (rules_table, scheduled, extracted, delta_shards):
-            if df is not None:
-                df.unpersist()
-    totals["records"] = (
-        state.records.read(spark).count() if state.records.exists() else 0
-    )
-    totals["discovered"] = (
-        state.discovered.read(spark).count() if state.discovered.exists() else 0
-    )
-    totals["seen"] = state.seen.read(spark).count() if state.seen.exists() else 0
-    return totals
+        _release(run.caches)
+        rules_table.unpersist()
+    return run.totals
 
 
-_FRONTIER_KEYS = ["url_hash", "url_canon"]
+def _release(caches: list[DataFrame]) -> None:
+    while caches:
+        caches.pop().unpersist()
+
+
+def open_crawl(run: CrawlRun, seeds: DataFrame, sitemaps: DataFrame,
+               accept, resume: bool) -> None:
+    """Stage open: a resumed crawl rolls every table back to the
+    frontier's committed ``next_wave`` and reloads its Bloom filters;
+    a fresh one commits the seeded frontier and the sitemap errors."""
+    spark, state = run.spark, run.state
+    if resume and state.frontier.exists():
+        run.wave = state.frontier.manifest()["lineage"]["next_wave"]
+        # cross-table reconciliation: a crash between a wave's table
+        # commits and the frontier pointer leaves orphan wave>=next
+        # snapshots that the replayed wave would double-append
+        for tbl in (state.records, state.trace, state.errors, state.seen,
+                    state.shards, state.discovered):
+            tbl.rollback_to_wave_before(run.wave)
+        seen_df = state.seen.read(spark) if state.seen.exists() else None
+        run.blooms = _rebuild_blooms(spark, state, seen_df, run.config,
+                                     run.bloom_bits, run.bloom_k)
+        return
+    # the spec's acceptUrl always gates sitemap URLs, like
+    # `sws crawl -s script.lua` (crawler.rs:92-96,123-125)
+    frontier, xml_errors, expand_cleanup = init_frontier(
+        spark, run.config, seeds, sitemaps, run.rules_table,
+        run.spec.accept_url if accept is None else accept,
+    )
+    try:
+        # the seeded frontier IS the first compacted base (bucketed):
+        # every wave's frontier fold anchors on it until a compaction
+        state.frontier.commit(
+            robots_filter_distributed(frontier, run.rules_table),
+            mode="overwrite", bucket=run.key_bucket,
+            lineage={"next_wave": 0, "phase": "seeded", "compacted_through": -1},
+        )
+        state.errors.commit(xml_errors.select(
+            F.lit(-1).alias("wave"), F.col("sitemap_url").alias("url"),
+            F.lit("xml").alias("stage"), "error",
+        ), mode="overwrite")
+    finally:
+        expand_cleanup()  # the expansion's parse caches
+
+
+def wave_frontier(run: CrawlRun) -> tuple[DataFrame, DataFrame | None]:
+    """Stage frontier: the committed frontier (bucketed base ⊳ op log:
+    one base scan plus one op-log scan whatever the wave index) with
+    this wave's resurrected rows. Returns (frontier, resurrected)."""
+    spark, wave = run.spark, run.wave
+    frontier = _reconstruct_frontier(spark, run.state.frontier)
+    ttl = run.config.recrawl_after_waves
+    if ttl is None or wave < ttl:
+        return frontier, None
+    # resurrection: rows fetched exactly ttl waves ago age out of the
+    # seen set's "fresh" window and rejoin the frontier (each seen row
+    # expires exactly once; a refetch appends a new seen row, so the
+    # cycle repeats every ttl waves). frontier ∩ resurrected = ∅: a
+    # pending URL has no fresh seen row, so it cannot be expiring now.
+    # read_wave_range prunes the read to wave w-ttl's own data dirs (or
+    # the base's wave=w-ttl partition) — never a full scan
+    expired = run.state.seen.read_wave_range(spark, wave - ttl, wave - ttl + 1)
+    if expired is None:
+        return frontier, None
+    # resurrect the RAW url (seen carries it for exactly this):
+    # fetch_pages joins the pages source on the exact string, so a
+    # canonical-form resurrection would silently miss any URL whose raw
+    # form differs (uppercase host, :80, fragment)
+    fetched_at = F.lit(float((wave - ttl) * run.config.wave_period))
+    resurrected = _frontier_rows(
+        expired, wave, last_fetch_ts=F.timestamp_seconds(fetched_at)
+    )
+    return frontier.unionByName(resurrected), resurrected
+
+
+def wave_budgets(run: CrawlRun) -> DataFrame:
+    """Stage budgets: the per-host budget inputs (host, crawl_delay
+    [, backoff_k]) — the robots crawl delay and, with
+    ``error_backoff_window``, the number of recent error waves."""
+    budgets = run.rules_table.select(F.col("host"), "crawl_delay")
+    window = run.config.error_backoff_window
+    if window is None or not run.state.errors.exists():
+        return budgets
+    # hosts that erred recently yield budget (AIMD-style): k =
+    # #error-waves in the window, budget -> budget / 2^k.
+    # read_wave_range prunes the read to the window's data dirs via
+    # commit lineage, never a whole-table glob
+    err_window = run.state.errors.read_wave_range(run.spark, run.wave - window, run.wave)
+    if err_window is None:
+        return budgets
+    err_hosts = (
+        err_window.where(F.col("stage") == "download")
+        .select(urlnorm.url_host(F.col("url")).alias("host"), "wave")
+        .distinct()
+        .groupBy("host")
+        .agg(F.least(F.count(F.lit(1)), F.lit(4)).cast("int").alias("backoff_k"))
+    )
+    # full outer: hosts with errors but no robots entry still back off
+    return budgets.join(err_hosts, "host", "full")
+
+
+def schedule(run: CrawlRun, frontier: DataFrame, budgets: DataFrame):
+    """Stage schedule: per-host rank under the budgets, then salted
+    placement; cached (every later stage reads it) and counted.
+    Returns (scheduled, its row count)."""
+    c = run.config
+    if run.n_schedules % RESAMPLE_BOUNDS_WAVES == 0:
+        from swspark.scheduler import default_n_buckets, sample_order_bounds
+
+        run.rank_bounds = sample_order_bounds(frontier, default_n_buckets(run.spark))
+    run.n_schedules += 1
+    scheduled = schedule_wave(frontier, budgets, c.wave_period, c.throttle,
+                              c.max_urls_per_wave, bounds=run.rank_bounds)
+    scheduled = salted_repartition(
+        scheduled, run.spark.sparkContext.defaultParallelism, SALT_BUCKETS
+    ).cache()
+    run.caches.append(scheduled)
+    return scheduled, scheduled.count()
+
+
+def idle_wave(run: CrawlRun, resurrected: DataFrame | None) -> bool:
+    """Stage idle wave: nothing was schedulable. Commits the wave's
+    resurrected rows; returns True when the crawl is done, else
+    advances to the next wave."""
+    _release(run.caches)
+    wave, ttl, state = run.wave, run.config.recrawl_after_waves, run.state
+    if resurrected is not None:
+        # an idle (fully-throttled) wave still changed the frontier:
+        # commit the resurrected rows as add-only op-log deltas, or the
+        # next wave's fold (and any resume) would miss them (the expiry
+        # read consults wave w-ttl exactly once)
+        state.frontier.commit(
+            _frontier_delta(None, None, resurrected, wave), mode="append",
+            lineage={"next_wave": wave + 1, "wave": wave, "scheduled": 0},
+        )
+    if ttl is None:
+        return True  # quiescence (A28)
+    # last fetch wave straight from commit lineage — no scan
+    last = state.seen.manifest()["lineage"].get("wave") if state.seen.exists() else None
+    if last is None or wave >= last + ttl:
+        return True  # nothing pending and nothing left to expire
+    run.wave += 1  # idle wave: wall-clock passes until next expiry
+    return False
+
+
+def fetch_extract(run: CrawlRun, scheduled: DataFrame, pages: DataFrame):
+    """Stage fetch and extract: join the scheduled URLs to the pages
+    and extract them once (persisted: the records, errors, discovered
+    and frontier commits all read this cache). Returns (records,
+    discovered, errors labelled by stage, fetch observation)."""
+    wave = run.wave
+    fetched, dl_errs, obs = fetch_pages(scheduled, pages, on_dl_error=run.config.on_dl_error)
+    if spec_wants_context(run.spec):
+        # ctx.robot() support: ride the host's rules-as-data onto the
+        # pages (broadcast-joined; same table politeness uses)
+        fetched = fetched.join(run.rules_table.select("host", "rules"), "host", "left")
+    extracted = with_extraction(fetched, run.spec).drop("html").persist()
+    run.caches.append(extracted)
+    rec, disc, scrap_errs = apply_extraction(extracted, run.spec)
+    # download errors raise in fetch_pages under on_dl_error="fail"
+    if run.config.on_scrap_error == "fail":
+        n = scrap_errs.count()
+        if n:
+            raise RuntimeError(f"wave {wave}: {n} scrape errors (on_scrap_error=fail)")
+    errs = dl_errs.select(
+        F.lit(wave).alias("wave"), "url", F.lit("download").alias("stage"), "error"
+    ).unionByName(scrap_errs.select(
+        F.lit(wave).alias("wave"), "url", F.lit("scrape").alias("stage"), "error"
+    ))
+    return rec.withColumn("wave", F.lit(wave)), disc, errs, obs
+
+
+def commit_outputs(run: CrawlRun, scheduled: DataFrame, rec: DataFrame,
+                   errs: DataFrame) -> int:
+    """Stage commit outputs: the wave's records, schedule trace and
+    errors; records and errors are counted on their write jobs.
+    Returns the wave's error count."""
+    state, wave = run.state, run.wave
+    state.records.commit(rec, mode="append", lineage={"wave": wave}, count_rows=True)
+    state.trace.commit(
+        scheduled.select(F.lit(wave).alias("wave"), "host", "url", "rank"),
+        mode="append", lineage={"wave": wave},
+    )
+    state.errors.commit(errs, mode="append", lineage={"wave": wave}, count_rows=True)
+    n_errors = state.errors.manifest()["lineage"]["n_rows"]
+    run.totals["records"] += state.records.manifest()["lineage"]["n_rows"]
+    run.totals["errors"] += n_errors
+    return n_errors
+
+
+def commit_seen(run: CrawlRun, scheduled: DataFrame) -> tuple[DataFrame, set[int]]:
+    """Stage commit seen: attempted URLs count as seen (404s are not
+    retried forever, matching "scheduled+fetched" accounting), and the
+    wave's Bloom shard delta is committed and OR-merged into the
+    in-memory filters. Returns (seen delta, touched Bloom buckets)."""
+    spark, c, state, wave = run.spark, run.config, run.state, run.wave
+    seen_delta = scheduled.select("url_hash", "url_canon", "url", F.lit(wave).alias("wave"))
+    state.seen.commit(seen_delta, mode="append", lineage={"wave": wave})
+    if run.compaction_due:
+        # fold base + K wave deltas into one bucketed snapshot, dir-
+        # partitioned by wave so the recrawl-expiry read prunes to one
+        # wave's dirs (amortized O(|seen|/K) per wave)
+        state.seen.compact(spark, dict(run.key_bucket, partition=["wave"]),
+                           lineage={"wave": wave, "compacted_through": wave})
+        # retention floor K+2: every post-compaction wave's delta
+        # manifest must outlive the next cycle (read_wave_range walks
+        # them for recrawl expiry, and crash-rollback needs the
+        # previous wave's manifest as its anchor)
+        state.seen.expire_snapshots(max(c.snapshot_keep_last, c.compact_every_waves + 2))
+    # durable incremental shard delta (distributed build), persisted so
+    # the same shards feed both the table commit and the in-memory
+    # merge without recomputation
+    delta_shards = build_filter_shards(
+        seen_delta, c.n_seen_buckets, fixed_bits=run.bloom_bits, fixed_k=run.bloom_k,
+    ).persist()
+    try:
+        state.shards.commit(delta_shards, mode="append", lineage={
+            "wave": wave, "geometry": [run.bloom_bits, run.bloom_k],
+            "seen_version": state.seen.current_version(),
+        })
+        # merge the distributed shard blobs (n_seen_buckets fixed-size
+        # rows, ~2 MB total) — never the raw frontier-cardinality hashes
+        touched = _merge_bloom_shards(run.blooms, delta_shards)
+    finally:
+        delta_shards.unpersist()
+    return seen_delta, touched
+
+
+def commit_frontier(run: CrawlRun, disc: DataFrame, seen_delta: DataFrame,
+                    resurrected: DataFrame | None, touched: set[int],
+                    counts: dict, obs) -> None:
+    """Stage commit frontier: the discovered URLs (sendUrl feedback,
+    A22), then the next frontier as a wave-sized op-log DELTA (del =
+    scheduled keys, add = new discovered + resurrected rows), never an
+    O(|frontier|) rewrite; every K waves the fold becomes a new
+    bucketed base. ``counts`` (scheduled, errors) and the fetch
+    observation go into the lineage. Advances the wave."""
+    spark, c, state, wave = run.spark, run.config, run.state, run.wave
+    disc_new = robots_filter_distributed(
+        _frontier_rows(disc.select(F.col("discovered_url").alias("url")), wave + 1),
+        run.rules_table,
+    )
+    # split read: Bloom-positive suspects take a shuffle-free sort-merge
+    # anti-join against the bucketed base + broadcast anti-joins
+    # against the recent wave deltas
+    disc_new = filter_new_urls(
+        spark, disc_new, state.seen.read_split(spark), run.blooms,
+        c.n_seen_buckets, shard_dir=c.bloom_shard_dir,
+        # the crawl's first fetch wave refreshes every shard file (the
+        # on-disk set may be stale); afterwards only this wave's touched
+        # buckets are rewritten (their mtime bump is the only re-map
+        # executors pay)
+        touched_buckets=touched if run.totals["waves"] else None,
+    )
+    state.discovered.commit(
+        disc.select(F.lit(wave).alias("wave"), "url", "discovered_url"),
+        mode="append", lineage={"wave": wave}, count_rows=True,
+    )
+    m = obs.get
+    lineage = {"next_wave": wave + 1, "wave": wave, "scheduled": counts["scheduled"],
+               "pages_in": m["pages_in"], "pages_out": m["pages_out"],
+               "errors": counts["errors"], "seen_version": state.seen.current_version()}
+    state.frontier.commit(_frontier_delta(seen_delta, disc_new, resurrected, wave),
+                          mode="append", lineage=lineage)
+    if run.compaction_due:
+        # every K waves: fold base + K deltas into a fresh bucketed base
+        # (amortized O(|frontier|/K) per wave), as seen does
+        state.frontier.commit(
+            _reconstruct_frontier(spark, state.frontier),
+            mode="overwrite", bucket=run.key_bucket,
+            lineage=dict(lineage, compacted_through=wave),
+        )
+        state.frontier.expire_snapshots(c.snapshot_keep_last)
+    t = run.totals
+    t["waves"] += 1
+    t["fetched"] += m["pages_out"]
+    t["seen"] += counts["scheduled"]
+    t["discovered"] += state.discovered.manifest()["lineage"]["n_rows"]
+    run.wave += 1
 
 
 def _frontier_delta(
@@ -611,7 +608,7 @@ def _frontier_delta(
     ]
     parts = [
         adds.select(
-            *[f.name for f in FRONTIER_SCHEMA.fields],
+            *FRONTIER_SCHEMA.fieldNames(),
             F.lit("add").alias("op"),
             F.lit(wave).alias("delta_wave"),
         )
@@ -692,9 +689,7 @@ def fold_frontier_ops(base: DataFrame, ops: DataFrame) -> DataFrame:
             .alias(c)
             for c in val_cols
         ],
-    ).where(F.col("url").isNotNull()).select(
-        [f.name for f in FRONTIER_SCHEMA.fields]
-    )
+    ).where(F.col("url").isNotNull()).select(FRONTIER_SCHEMA.fieldNames())
 
 
 def _rebuild_blooms(
@@ -703,7 +698,8 @@ def _rebuild_blooms(
 ) -> dict[int, BloomFilter]:
     """Resume path (SURVEY.md §7 risk 3): load the persisted shard
     deltas if their geometry and seen-version line up; otherwise fall
-    back to an exact rebuild from the seen table. ``bloom_bits`` /
+    back to an exact rebuild from ``seen_df`` (None: no seen table
+    yet, so no filters). ``bloom_bits`` /
     ``bloom_k`` are the EFFECTIVE geometry (possibly derived from
     config.expected_total_urls)."""
     if state.shards.exists():
@@ -715,7 +711,7 @@ def _rebuild_blooms(
                 return load_shards(state.shards.read(spark))
             except ValueError:
                 pass  # mixed geometry rows -> rebuild
-    if seen_df.isEmpty():
+    if seen_df is None or seen_df.isEmpty():
         return {}
     shards = build_filter_shards(
         seen_df, config.n_seen_buckets,

@@ -111,6 +111,11 @@ def test_dict_crawl_golden_trace_and_dedup(spark, corpus, tables, tmp_path):
     dl = errs[errs.stage == "download"]
     assert sorted(dl.url) == sorted(corpus.missing_urls)
 
+    # the totals come from the waves' commit lineage, not table scans:
+    # on a fresh warehouse they equal the tables' row counts
+    for name in ("records", "discovered", "seen"):
+        assert totals[name] == getattr(state, name).read(spark).count(), name
+
 
 def test_wiki_crawl_discovery_and_budgets(spark, corpus, tables, tmp_path):
     cfg, totals = run_crawl(
@@ -499,3 +504,89 @@ def test_failing_crawl_releases_its_caches(spark, corpus, tables, tmp_path):
         assert _cached_plans(spark) == before
     finally:
         callers.unpersist()
+
+
+def test_scrap_fail_policy_ignores_download_errors(spark, corpus, tables, tmp_path):
+    """on_scrap_error="fail" raises on scrape errors only: the dict
+    corpus's 404 is a download error, skipped under the default
+    on_dl_error="skip", so the crawl completes and logs it."""
+    assert corpus.missing_urls
+    run_crawl(
+        spark, tables, "dict_sitemap", tmp_path / "wscrapfail", "urbandict",
+        accept=accept_term, on_scrap_error="fail",
+    )
+    errs = CrawlState(str(tmp_path / "wscrapfail")).errors.read(spark).toPandas()
+    assert sorted(errs[errs.stage == "download"].url) == sorted(corpus.missing_urls)
+    assert not (errs.stage == "scrape").any()
+
+
+ERRORS_DDL = "wave int, url string, stage string, error string"
+
+
+def test_budgets_stage_counts_recent_error_waves(spark, tmp_path):
+    """The budgets stage alone, over a committed errors table: a host's
+    backoff_k is its number of download-error waves inside the window;
+    scrape errors and older waves do not count, and a host with errors
+    but no robots row still backs off."""
+    from swspark.driver import CrawlRun, wave_budgets
+
+    state = CrawlState(str(tmp_path))
+    errors = {
+        0: [("https://a.test/0", "download")],  # before the window
+        1: [("https://a.test/1", "download")],
+        2: [("https://a.test/2", "download"), ("https://a.test/3", "download"),
+            ("https://b.test/1", "scrape"), ("https://c.test/1", "download")],
+    }
+    for w, rows in errors.items():
+        state.errors.commit(
+            spark.createDataFrame([(w, u, st, "e") for u, st in rows], ERRORS_DDL),
+            mode="append", lineage={"wave": w},
+        )
+    rules = spark.createDataFrame(
+        [("a.test", 1.0), ("b.test", 2.0)], "host string, crawl_delay double"
+    )
+    run = CrawlRun(spark, CrawlConfig(error_backoff_window=2), state, rules, wave=3)
+    got = {r.host: (r.crawl_delay, r.backoff_k) for r in wave_budgets(run).collect()}
+    assert got == {"a.test": (1.0, 2), "b.test": (2.0, None), "c.test": (None, 1)}
+    # no backoff window: the robots delays alone
+    run = CrawlRun(spark, CrawlConfig(), state, rules, wave=3)
+    assert wave_budgets(run).columns == ["host", "crawl_delay"]
+
+
+def test_frontier_stage_resurrects_at_ttl(spark, tmp_path):
+    """The frontier stage alone: from wave ttl on, the URLs seen at
+    wave - ttl rejoin the committed frontier in their raw form, with
+    discovered_wave = wave and last_fetch_ts = (wave - ttl) * period."""
+    from swspark.driver import CrawlRun, _frontier_rows, wave_frontier
+    from swspark.seen import with_url_identity
+
+    state = CrawlState(str(tmp_path))
+    cfg = CrawlConfig(wave_period=10.0, recrawl_after_waves=2)
+    rules = spark.createDataFrame([], "host string, crawl_delay double")
+    run = CrawlRun(spark, cfg, state, rules)
+    pending = spark.createDataFrame([("https://a.test/p",)], "url string")
+    state.frontier.commit(
+        _frontier_rows(pending, 0), mode="overwrite", bucket=run.key_bucket,
+        lineage={"next_wave": 0, "compacted_through": -1},
+    )
+    for w, url in ((0, "https://a.test/x"), (1, "https://A.TEST/y#top")):
+        seen = with_url_identity(spark.createDataFrame([(url,)], "url string"))
+        state.seen.commit(
+            seen.select("url_hash", "url_canon", "url", F.lit(w).alias("wave")),
+            mode="append", lineage={"wave": w},
+        )
+
+    run.wave = 1  # before ttl: the committed frontier alone
+    frontier, resurrected = wave_frontier(run)
+    assert resurrected is None
+    assert [r.url for r in frontier.collect()] == ["https://a.test/p"]
+
+    run.wave = 3  # wave 1's fetch expires
+    frontier, resurrected = wave_frontier(run)
+    got = resurrected.select(
+        "url", "discovered_wave", F.col("last_fetch_ts").cast("double").alias("ts")
+    ).collect()
+    assert [tuple(r) for r in got] == [("https://A.TEST/y#top", 3, 10.0)]
+    assert sorted(r.url for r in frontier.collect()) == [
+        "https://A.TEST/y#top", "https://a.test/p",
+    ]

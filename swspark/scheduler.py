@@ -140,11 +140,6 @@ def _ku_expr(lcp: bytes) -> Column:
 
 _KEY_COLS = ("_kp", "_kt", "_ku")
 
-# Lead the pass-1 window sort with the numeric keys (True in
-# production; tools/ab tooling flips it to time the string-only
-# ordering under the same JVM/load).
-_NUMERIC_SORT = True
-
 
 def _py_ku(url, lcp: bytes) -> int:
     if url is None:
@@ -411,13 +406,8 @@ def rank_frontier_distributed(
     # order columns follow as the exact tiebreak. Effect: the hot
     # host's comparisons resolve on three longs instead of walking
     # the ~26-byte shared url prefix every time.
-    # _NUMERIC_SORT is a measurement hook (tools A/B both orderings in
-    # one JVM under identical neighbor load), not a user switch.
-    lead = (
-        (F.asc("_kp"), F.asc("_kt"), F.asc("_ku")) if _NUMERIC_SORT else ()
-    )
     w1 = Window.partitionBy(host_col, "_bkt").orderBy(
-        *lead, *_order_cols()
+        F.asc("_kp"), F.asc("_kt"), F.asc("_ku"), *_order_cols()
     )
     pre = keyed.withColumn("_lr", F.row_number().over(w1)).drop(*_KEY_COLS)
     if budget_col is not None:

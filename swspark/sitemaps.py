@@ -15,10 +15,10 @@ same batch, so no row-level Python UDF re-evaluates it downstream; a
 context-aware ``(url, kind, ctx)`` predicate stays a separate UDF
 because it needs each loc's host rules joined on.
 
-Scale notes: sitemapindex children are collected to the driver only
-as a *count* per level; page URLs never leave executors. A real
-10^10 frontier arrives over many waves — each level's output is
-unioned lazily and materialized once by the caller.
+Scale notes: sitemapindex children reach the driver only as one
+``isEmpty()`` per level (does the next level exist?); page URLs never
+leave executors. A real 10^10 frontier arrives over many waves — each
+level's output is unioned lazily and materialized once by the caller.
 """
 
 from __future__ import annotations

@@ -10,7 +10,10 @@ A ``SnapshotTable`` is a directory:
 
 Each manifest records: version, parent version, the list of data dirs
 that make up the snapshot (append = parent dirs + new dir; overwrite
-= new dir only), row count, and arbitrary **lineage** (wave id,
+= new dir only; either way a commit writes exactly one dir, the last),
+the schema of the rows it wrote (reads pass it to Spark, so building
+a read starts no schema-inference job), for an append on top of a
+compacted base that base's version, and arbitrary **lineage** (wave id,
 frontier offset, seen-shard versions, fetch counters — the north
 rule's per-partition lineage). Commits are atomic: data is written
 first, then the manifest and the CURRENT pointer land via
@@ -32,6 +35,7 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class SnapshotTable:
@@ -63,6 +67,33 @@ class SnapshotTable:
                 except ValueError:
                     pass
         return sorted(out)
+
+    def _writers(self, m: dict, stop: int | None = None) -> dict[str, dict]:
+        """data dir -> the manifest that wrote it, over ``m``'s
+        ancestry down to (not including) version ``stop``. The walk
+        ends at an overwrite (older dirs are not read through ``m``)
+        or where an expired ancestor's manifest is gone."""
+        out: dict[str, dict] = {}
+        while m is not None and m["version"] != stop:
+            out[m["data_dirs"][-1]] = m
+            if m["mode"] == "overwrite":
+                break
+            m = self._manifest_or_none(m.get("parent"))
+        return out
+
+    def _read_dirs(
+        self, spark: SparkSession, dirs: list[str], writers: dict[str, dict]
+    ) -> DataFrame:
+        """Parquet read of ``dirs``. When every dir's writer (see
+        ``_writers``) recorded the same schema, the read passes it and
+        starts no Spark job; otherwise (an expired writer, a manifest
+        written before commits recorded a schema, dirs written with
+        different schemas) Spark infers it from the files, one job."""
+        schemas = [writers.get(d, {}).get("schema") for d in dirs]
+        reader = spark.read
+        if schemas[0] is not None and all(x == schemas[0] for x in schemas):
+            reader = reader.schema(StructType.fromJson(schemas[0]))
+        return reader.parquet(*[os.path.join(self.root, d) for d in dirs])
 
     def _next_version(self) -> int:
         """Next id = 1 + max(every manifest on disk, high-water mark).
@@ -184,8 +215,10 @@ class SnapshotTable:
 
         parent = self.current_version()
         parent_m = self.manifest(parent) if parent is not None else None
+        base = None
         if mode == "append" and parent_m is not None:
             dirs = parent_m["data_dirs"] + [data_dir]
+            base = parent if "bucket" in parent_m else parent_m.get("base")
         else:
             dirs = [data_dir]
         # version allocated past every manifest ever written (not
@@ -198,10 +231,13 @@ class SnapshotTable:
             "mode": mode,
             "data_dirs": dirs,
             "committed_at": time.time(),
+            "schema": df.schema.jsonValue(),
             "lineage": lineage,
         }
         if bucket_meta is not None:
             manifest["bucket"] = bucket_meta
+        if base is not None:
+            manifest["base"] = base
         # manifest first, pointer last — a crash in between leaves
         # CURRENT at the parent and the orphan manifest is harmless
         self._write_atomic(os.path.join(self.root, "VERSION_HWM"), str(version))
@@ -278,6 +314,14 @@ class SnapshotTable:
         if m is None:
             raise FileNotFoundError(f"no snapshot in {self.root}")
         bv = self.base_version(m["version"])
+        if bv is None and m.get("base") is not None:
+            # the base's dirs may still be on disk (later snapshots
+            # name them), but without its manifest they would be
+            # globbed flat with the deltas, op-log rows and all
+            raise FileNotFoundError(
+                f"{self.root}: snapshot v{m['version']} rests on the "
+                f"compacted base v{m['base']}, which has been expired"
+            )
         if bv is not None:
             # a compacted base may be dir-partitioned; its dirs cannot
             # be globbed together with flat delta dirs — route the
@@ -286,8 +330,8 @@ class SnapshotTable:
             df = self.read_bucketed(spark, bv)
             delta_dirs = [d for d in m["data_dirs"] if d not in base_dirs]
             if delta_dirs:
-                deltas = spark.read.parquet(
-                    *[os.path.join(self.root, d) for d in delta_dirs]
+                deltas = self._read_dirs(
+                    spark, delta_dirs, self._writers(m, stop=bv)
                 )
                 extra = set(deltas.columns) - set(df.columns)
                 if extra:
@@ -303,8 +347,7 @@ class SnapshotTable:
                     )
                 df = df.unionByName(deltas)
             return df
-        paths = [os.path.join(self.root, d) for d in m["data_dirs"]]
-        return spark.read.parquet(*paths)
+        return self._read_dirs(spark, m["data_dirs"], self._writers(m))
 
     def read_bucketed(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Read a bucketed snapshot THROUGH the catalog so Spark knows
@@ -369,9 +412,7 @@ class SnapshotTable:
         out = [self.read_bucketed(spark, bv)]
         if delta_dirs:
             out.append(
-                spark.read.parquet(
-                    *[os.path.join(self.root, d) for d in delta_dirs]
-                )
+                self._read_dirs(spark, delta_dirs, self._writers(m, stop=bv))
             )
         return out
 
@@ -381,13 +422,14 @@ class SnapshotTable:
         """Read ONLY the rows committed for waves in [w0, w1) — the
         error-backoff window and, with w1 = w0 + 1, the recrawl-expiry
         read of one wave. One manifest-chain walk collects each
-        in-range append commit's own data dirs; waves folded into a
+        in-range append commit's own data dir; waves folded into a
         compacted base come from the base with a partition-pruned
         filter. The walk stops at the first overwrite: older ancestry
         is dead data. At 10^4 waves this touches the window's dirs
         only, never a whole-table glob. Returns None when nothing
         matches."""
         dirs: list[str] = []
+        writers: dict[str, dict] = {}
         base: DataFrame | None = None
         v = self.current_version()
         while v is not None:
@@ -396,13 +438,9 @@ class SnapshotTable:
                 break
             w = m.get("lineage", {}).get(key)
             if m["mode"] == "append" and w is not None and w0 <= w < w1:
-                parent = m.get("parent")
-                pdirs = (
-                    set(self.manifest(parent)["data_dirs"])
-                    if parent is not None
-                    else set()
-                )
-                dirs.extend(d for d in m["data_dirs"] if d not in pdirs)
+                own = m["data_dirs"][-1]  # the one dir this commit wrote
+                dirs.append(own)
+                writers[own] = m
             if "bucket" in m:
                 covered = m.get("lineage", {}).get("compacted_through")
                 if covered is not None and w0 <= covered:
@@ -428,11 +466,7 @@ class SnapshotTable:
             v = m.get("parent")
         parts: list[DataFrame] = []
         if dirs:
-            parts.append(
-                spark.read.parquet(
-                    *[os.path.join(self.root, d) for d in dirs]
-                )
-            )
+            parts.append(self._read_dirs(spark, dirs, writers))
         if base is not None:
             parts.append(base.select(parts[0].columns) if parts else base)
         if not parts:

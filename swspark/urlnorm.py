@@ -1,4 +1,4 @@
-"""URL canonicalization, hashing, and host extraction — all built-in
+"""URL canonicalization and host/path extraction — all built-in
 column expressions (JVM codegen; no Python in the hot path).
 
 The reference never normalizes URLs (it can fetch the same URL twice —
@@ -56,16 +56,21 @@ def url_path_query(url: Column) -> Column:
 
 
 # Gate for the canonicalize fast path: scheme://host[/path], where the
-# host has no userinfo/port/fragment chars and no trailing dot, and the
-# path (if any) starts with "/" and carries no fragment. For such URLs
-# every regex step of the general path is the identity or a plain
-# substring, so canonicalization reduces to lowercasing two slices —
-# ~8 Java-regex executions per row become 1 (the gate itself).
-# Everything else (ports, userinfo, fragments, IPv6, relative refs,
-# missing schemes) takes the unchanged general expression below.
+# host has no userinfo/port/fragment chars, no "\n" and no trailing
+# dot, and the path (if any) starts with "/" and carries no fragment.
+# For such URLs every regex step of the general path is the identity
+# or a cut at the third "/", so a gated row costs this regex, one
+# `substring_index` (scheme://host) and one slice of the rest, where
+# the general path runs ~8 regexes. The general `$` also matches
+# before a final line terminator, so a host ending in "." + "\r" (or
+# U+0085/2028/2029) loses its dot there: the lookbehind keeps such
+# hosts out (non-ASCII chars in the repeated host class would slow
+# every row's match several-fold), and `\z` is the true end of the
+# string. Everything else (ports, userinfo, fragments, IPv6, relative
+# refs, missing schemes) takes the unchanged general expression below.
 _SIMPLE_URL_RE = (
     r"^[A-Za-z][A-Za-z0-9+.\-]*://"
-    r"[^/?#@:\n]*[^/?#@:.\n](/[^#\n]*)?$"
+    r"[^/?#@:\n]*[^/?#@:.\n](?<!\.[\r\u0085\u2028\u2029])(/[^#]*)?\z"
 )
 
 
@@ -76,39 +81,31 @@ def canonicalize(url: Column) -> Column:
     fragment dropped, empty path -> "/". Non-http(s) ports are kept.
 
     Two-tier implementation (same output, pytest-pinned equivalence):
-    a single gate regex dispatches plain absolute URLs to a
-    string-slice fast path; the general regex pipeline handles the
-    rest. The fast path is exact for gated rows: no '#' anywhere means
-    the fragment strip is the identity, the host charclass forbids
-    '@'/':'/trailing '.', so userinfo/port/dot strips are identities,
-    and the first '/' after '://' splits host from path exactly where
-    the authority regex stops.
+    the gate regex sends plain absolute URLs to a one-slice fast path,
+    lower(scheme://host) followed by the unchanged rest; the general
+    regex pipeline handles the others. The fast path is exact for
+    gated rows: no '#' anywhere means the fragment strip is the
+    identity, the host charclass forbids '@'/':'/trailing '.', so the
+    userinfo/port/dot strips are identities, and the third '/' splits
+    host from path exactly where the authority regex stops.
     """
     u = F.trim(url)
-    return F.when(u.rlike(_SIMPLE_URL_RE), _canonicalize_fast(u)).otherwise(
-        _canonicalize_general(u)
+    # scheme://host: a scheme holds no "/", so the third "/" is where
+    # the path starts
+    pre = F.substring_index(u, "/", 3)
+    # the rest is sliced once, at the character length of the
+    # unlowered prefix (lowercasing can change the count: "İ" -> "i̇");
+    # ``pre`` is a byte prefix of ``u``, so equal byte lengths mean no
+    # path
+    rest = F.when(F.octet_length(u) == F.octet_length(pre), F.lit("/")).otherwise(
+        F.substring(u, F.length(pre) + 1, F.lit(1 << 30))
     )
-
-
-def _canonicalize_fast(u: Column) -> Column:
-    """String-slice canonicalization, exact for _SIMPLE_URL_RE rows."""
-    scheme_fast = F.substring_index(u, "://", 1)
-    rest = F.substring(u, F.length(scheme_fast) + F.lit(4), F.lit(1 << 30))
-    slash = F.instr(rest, "/")
-    host_fast = F.when(slash > 0, F.substring(rest, 1, slash - 1)).otherwise(
-        rest
-    )
-    path_fast = F.when(
-        slash > 0, F.substring(rest, slash, F.lit(1 << 30))
-    ).otherwise(F.lit("/"))
-    return F.concat(
-        F.lower(scheme_fast), F.lit("://"), F.lower(host_fast), path_fast
-    )
+    fast = F.concat(F.lower(pre), rest)
+    return F.when(u.rlike(_SIMPLE_URL_RE), fast).otherwise(_canonicalize_general(u))
 
 
 def _canonicalize_general(u: Column) -> Column:
-    """The general regex pipeline (pre-r6 canonicalize, semantics
-    unchanged); expects an already-trimmed input."""
+    """The general regex pipeline; expects an already-trimmed input."""
     ug = F.regexp_replace(u, r"#.*$", "")  # fragment never reaches a server
     scheme = url_scheme(ug)
     auth = F.regexp_extract(ug, _AUTH_RE, 1)
@@ -122,11 +119,6 @@ def _canonicalize_general(u: Column) -> Column:
     )
     hostport = F.when(keep_port, F.concat(host, F.lit(":"), port)).otherwise(host)
     return F.concat(scheme, F.lit("://"), hostport, url_path_query(ug))
-
-
-def url_hash(url: Column) -> Column:
-    """64-bit identity hash of the canonical URL (seen-set key)."""
-    return F.xxhash64(url)
 
 
 def registered_domain(

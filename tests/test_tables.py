@@ -222,3 +222,95 @@ def test_read_wave_range_refuses_inrange_overwrite(spark, tmp_path):
         t.read_wave_range(spark, 0, 2)
     # window entirely after the overwrite -> fine
     assert [r.x for r in t.read_wave_range(spark, 2, 3).collect()] == [30]
+
+
+def _jobs_while(spark, build) -> list[int]:
+    """Spark jobs started while ``build()`` runs (no action is taken)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_building_a_read_starts_no_job(spark, tmp_path):
+    """Manifests carry the schema of the rows they wrote, so a read is
+    planned without Spark's schema-inference job over the data dirs."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    for w in range(3):
+        _commit(spark, t, list(range(10 * w, 10 * w + 10)), w)
+    assert _jobs_while(spark, lambda: t.read(spark)) == []
+    assert _jobs_while(spark, lambda: t.read_wave_range(spark, 1, 2)) == []
+    assert _jobs_while(spark, lambda: t.read_split(spark)) == []
+    # the split path: a bucketed base plus delta dirs
+    t.compact(spark, {"by": ["x"], "n": 2, "sort": ["x"]},
+              lineage={"wave": 2, "compacted_through": 2})
+    _commit(spark, t, [30, 31], 3)
+    assert _jobs_while(spark, lambda: t.read_split(spark)) == []
+    assert _jobs_while(spark, lambda: t.read(spark)) == []
+    assert _jobs_while(spark, lambda: t.read_wave_range(spark, 3, 4)) == []
+    assert len(_xs(spark, t)) == 32
+    assert t.read(spark).schema == spark.read.parquet(
+        os.path.join(t.root, t.manifest()["data_dirs"][-1])
+    ).schema
+
+
+def test_manifest_without_schema_reads_by_inference(spark, tmp_path):
+    """Manifests written before commits recorded a schema still read."""
+    import json
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    v0 = _commit(spark, t, [1, 2], 0)
+    v1 = _commit(spark, t, [3], 1)
+    for v in (v0, v1):
+        m = t.manifest(v)
+        del m["schema"]
+        t._write_atomic(t._manifest_path(v), json.dumps(m))
+    assert _xs(spark, t) == [1, 2, 3]
+    assert sorted(r.x for r in t.read_wave_range(spark, 1, 2).collect()) == [3]
+
+
+def test_dirs_with_different_schemas_read_by_inference(spark, tmp_path):
+    """The recorded schema is used only when every dir of the read was
+    written with it; otherwise the read infers from the files, as
+    before manifests carried one."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    _commit(spark, t, [1, 2], 0)
+    t.commit(spark.createDataFrame([(3, 1, "a")], "x int, wave int, y string"),
+             lineage={"wave": 1})
+    assert _jobs_while(spark, lambda: t.read(spark)) != []
+    assert _jobs_while(spark, lambda: t.read_wave_range(spark, 0, 2)) != []
+    assert _xs(spark, t) == [1, 2, 3]
+    # one writer: its own schema, no job
+    assert _jobs_while(spark, lambda: t.read_wave_range(spark, 1, 2)) == []
+    assert t.read_wave_range(spark, 1, 2).columns == ["x", "wave", "y"]
+
+
+def test_read_of_expired_base_raises(spark, tmp_path):
+    """An op-log snapshot whose compacted base manifest was expired
+    cannot be read: its dirs would glob flat with the deltas and show
+    the op log's del markers as rows."""
+    import pytest
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    bucket = {"by": ["x"], "n": 2, "sort": ["x"]}
+    base = spark.createDataFrame([(1, 0), (2, 0)], "x int, wave int")
+    t.commit(base, mode="overwrite", bucket=bucket, lineage={"wave": 0})
+    ops = "x int, wave int, op string, delta_wave int"
+    t.commit(spark.createDataFrame([(1, 1, "del", 1)], ops), lineage={"wave": 1})
+    v2 = t.commit(spark.createDataFrame([(3, 2, "add", 2)], ops),
+                  lineage={"wave": 2})
+    t.commit(spark.createDataFrame([(2, 0), (3, 2)], "x int, wave int"),
+             mode="overwrite", bucket=bucket, lineage={"wave": 2})
+    assert t.expire_snapshots(keep_last=3) == 1  # the first base
+    with pytest.raises(FileNotFoundError, match="expired"):
+        t.read(spark, v2)
+    with pytest.raises(FileNotFoundError, match="expired"):
+        t.read_split(spark, v2)
+    assert _xs(spark, t) == [2, 3]

@@ -1,10 +1,10 @@
-"""Equivalence pin for the r6 canonicalize fast path.
+"""Equivalence pin for the canonicalize fast path.
 
 canonicalize() dispatches plain absolute URLs through a string-slice
-fast path (one gate regex instead of ~8 regex executions per row).
-These tests prove the dispatch is invisible: for every URL — gated or
-not, adversarial or random — the two-tier canonicalize returns exactly
-what the pre-r6 general regex pipeline returns.
+fast path (one gate regex and one `substring_index` instead of the
+general regex pipeline). These tests prove the dispatch is invisible:
+for every URL — gated or not, adversarial or random — the two-tier
+canonicalize returns exactly what the general regex pipeline returns.
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ import string
 
 from pyspark.sql import functions as F
 
-from swspark.urlnorm import _canonicalize_general, canonicalize
+from swspark.urlnorm import _SIMPLE_URL_RE, _canonicalize_general, canonicalize
 
 ADVERSARIAL = [
     # plain fast-path shapes
@@ -59,19 +59,55 @@ ADVERSARIAL = [
     "https://h.test:x/x",
     "HTTP://EX.COM:80/x",
     "hTtPs://Ex.Com:443/x",
+    # untrimmed input (trim strips spaces only)
+    " https://lead.example.com/x",
+    "https://trail.example.com/x ",
+    "https://trail.example.com ",
+    "https://trail.example.com. ",
+    "\thttps://tab.example.com/x",
+    # line terminators: `$` in the general regexes also matches before
+    # a final one, so a host ending "." + terminator loses its dot there
+    "https://h.test/x\ny",
+    "https://h.test\n/x",
+    "https://h.\n",
+    "https://h.\r",
+    "https://h.\r\n",
+    "https://h.\r/x",
+    "https://h.test\r\n",
+    "https://h.\u2028",
+    "https://h.\u2029/x",
+    "https://h.\u0085",
+    "https://h.test/x\r\n",
+    # ports, userinfo, IPv6, trailing dots, query with no path
+    "https://h.test:8443",
+    "HTTPS://U:P@H.TEST:443?q=1",
+    "http://[2001:DB8::1]:80/x?y",
+    "http://[2001:db8::1]",
+    "https://h.test.?q",
+    "https://h.test..",
+    "https://h.test?",
+    "https://h.test/?",
+    "https://h.test??x=1/y",
+    # non-ASCII hosts; lowercasing "İ" changes the character count
+    "https://İX.test/p",
+    "https://İX.test",
+    "https://XİX.TEST/ÇA?İ=1",
+    "https://ΣΑΣ.test/Σ",
+    "https://straße.de/straße",
+    "https://ǅ.test/x",
 ]
 
 
 def _random_urls(n: int, seed: int = 7) -> list[str]:
     rng = random.Random(seed)
-    alphabet = string.ascii_letters + string.digits + ":/?#@.%&=+-_~ "
+    alphabet = string.ascii_letters + string.digits + ":/?#@.%&=+-_~ \n\rİΣ"
     out = []
     for _ in range(n):
         if rng.random() < 0.5:
             # url-shaped
             scheme = rng.choice(["http", "https", "ftp", "HTTP", "a+b-c."])
             host = "".join(
-                rng.choice(string.ascii_letters + string.digits + ".-@:")
+                rng.choice(string.ascii_letters + string.digits + ".-@:\rİ")
                 for _ in range(rng.randint(0, 12))
             )
             path = "".join(
@@ -107,3 +143,18 @@ def test_canonicalize_fastpath_adversarial(spark):
 
 def test_canonicalize_fastpath_random_fuzz(spark):
     _assert_equivalent(spark, _random_urls(3000))
+
+
+def test_fastpath_admits_plain_urls(spark):
+    """The gate admits what it is for; a gate that rejects every row
+    would pass the equivalence tests vacuously."""
+    gated = ["https://h0.example.test/p/123", "http://example.com",
+             "https://İX.test/p", "https://h.test/x\ny"]
+    ungated = ["https://h.\r", "https://h.test:80/x", "https://h.test/#f",
+               "https://u@h.test/", "https://h.test.", "https://h.test\n",
+               "https://h.test?x=1"]
+    df = spark.createDataFrame([(x,) for x in gated + ungated], ["url"])
+    got = {r.url: r.g for r in
+           df.select("url", F.col("url").rlike(_SIMPLE_URL_RE).alias("g")).collect()}
+    assert [got[x] for x in gated] == [True] * len(gated)
+    assert [got[x] for x in ungated] == [False] * len(ungated)

@@ -18,7 +18,8 @@ functions sharing one ``CrawlRun``:
       fetch_extract  frontier |x| pages (A1) -> Arrow UDF: records +
                      sendUrl discovery (A32/A22), persisted, once a page
       commit_outputs records, trace, errors snapshots
-      commit_seen    seen delta + Bloom shard delta (A30 flush)
+      commit_seen    seen delta; its hashes OR'd into the driver's
+                     Bloom filters (A30 flush)
       commit_frontier discovered URLs past robots + seen -> frontier
                      op-log delta; every K waves seen and frontier
                      compact into bucketed bases
@@ -65,6 +66,7 @@ from swspark.robots import build_robots_rules_table, robots_filter_distributed
 from swspark.scheduler import Throttle, salted_repartition, schedule_wave
 from swspark.seen import (
     BloomFilter,
+    add_hashes,
     bloom_geometry,
     build_filter_shards,
     filter_new_urls,
@@ -95,6 +97,8 @@ SALT_BUCKETS = 8
 # at worst unbalances the hot host's buckets for K-1 waves, so the
 # steady-state wave skips the frontier-wide sampling scan)
 RESAMPLE_BOUNDS_WAVES = 8
+# Bloom seen-filter buckets (seen.bucket_of); one filter per bucket
+N_SEEN_BUCKETS = 16
 
 
 @dataclass
@@ -108,18 +112,12 @@ class CrawlConfig:
     throttle: Throttle = field(default_factory=Throttle)
     max_waves: int = 100
     max_urls_per_wave: int | None = None
-    n_seen_buckets: int = 16
-    bloom_bits_per_bucket: int = 1 << 20  # fixed-size -> mergeable deltas
-    bloom_k: int = 7
-    # EXPECTED total frontier cardinality: when set, the Bloom shard
-    # geometry is derived from it (seen.bloom_geometry) instead of the
-    # fixed default — the fixed 2^20 bits/bucket saturates past ~10^6
-    # URLs/bucket and the fast path degrades to 'everything is a
-    # suspect' (correct but useless)
-    expected_total_urls: int | None = None
-    # mmap transport for the Bloom shard bitmaps (cluster-visible dir);
-    # None broadcasts the bytes — fine to ~100s of MB, not at 10^10
-    bloom_shard_dir: str | None = None
+    # EXPECTED total frontier cardinality: the Bloom filter geometry
+    # derives from it (seen.bloom_geometry; the default maps to 2^20
+    # bits and k=7 per bucket). Too small a value saturates the filters
+    # and the fast path degrades to 'everything is a suspect' (correct
+    # but useless)
+    expected_total_urls: int = 1_600_000
     # state-table layout: every K waves the seen + frontier tables are
     # compacted into ONE hash-bucketed snapshot (bucket keys = the
     # join keys), so (a) the per-wave frontier commit is a wave-sized
@@ -147,7 +145,8 @@ class CrawlConfig:
 
 
 class CrawlState:
-    """Warehouse handles: one SnapshotTable per state relation."""
+    """Warehouse handles: one SnapshotTable per state relation. The
+    Bloom filters have no table: they are rebuilt from ``seen``."""
 
     def __init__(self, warehouse: str):
         self.frontier = SnapshotTable(os.path.join(warehouse, "frontier"))
@@ -156,9 +155,6 @@ class CrawlState:
         self.trace = SnapshotTable(os.path.join(warehouse, "trace"))
         self.discovered = SnapshotTable(os.path.join(warehouse, "discovered"))
         self.errors = SnapshotTable(os.path.join(warehouse, "errors"))
-        # durable Bloom shard deltas (fixed geometry -> OR-mergeable),
-        # versioned with the seen table (SURVEY.md §7 risk 3)
-        self.shards = SnapshotTable(os.path.join(warehouse, "shards"))
 
 
 @dataclass
@@ -186,12 +182,8 @@ class CrawlRun:
     def __post_init__(self) -> None:
         c = self.config
         self.spec = c.spec if isinstance(c.spec, ExtractionSpec) else SPECS[c.spec]
-        # effective Bloom geometry: derived from expected cardinality
-        # when given (seen.bloom_geometry), else the fixed default
-        self.bloom_bits, self.bloom_k = (
-            bloom_geometry(c.expected_total_urls, c.n_seen_buckets)
-            if c.expected_total_urls is not None
-            else (c.bloom_bits_per_bucket, c.bloom_k)
+        self.bloom_bits, self.bloom_k = bloom_geometry(
+            c.expected_total_urls, N_SEEN_BUCKETS
         )
         # state-table layout: bucket keys ARE the join keys, so the
         # discovery anti-join and resume reconstruction stream the
@@ -297,8 +289,8 @@ def crawl(
                 continue
             rec, disc, errs, obs = fetch_extract(run, scheduled, pages)
             n_errors = commit_outputs(run, scheduled, rec, errs)
-            seen_delta, touched = commit_seen(run, scheduled)
-            commit_frontier(run, disc, seen_delta, resurrected, touched,
+            seen_delta = commit_seen(run, scheduled)
+            commit_frontier(run, disc, seen_delta, resurrected,
                             {"scheduled": n_sched, "errors": n_errors}, obs)
             _release(run.caches)
     finally:
@@ -315,8 +307,9 @@ def _release(caches: list[DataFrame]) -> None:
 def open_crawl(run: CrawlRun, seeds: DataFrame, sitemaps: DataFrame,
                accept, resume: bool) -> None:
     """Stage open: a resumed crawl rolls every table back to the
-    frontier's committed ``next_wave`` and reloads its Bloom filters;
-    a fresh one commits the seeded frontier and the sitemap errors."""
+    frontier's committed ``next_wave`` and rebuilds its Bloom filters
+    from ``seen``; a fresh one commits the seeded frontier and the
+    sitemap errors."""
     spark, state = run.spark, run.state
     if resume and state.frontier.exists():
         run.wave = state.frontier.manifest()["lineage"]["next_wave"]
@@ -324,11 +317,15 @@ def open_crawl(run: CrawlRun, seeds: DataFrame, sitemaps: DataFrame,
         # commits and the frontier pointer leaves orphan wave>=next
         # snapshots that the replayed wave would double-append
         for tbl in (state.records, state.trace, state.errors, state.seen,
-                    state.shards, state.discovered):
+                    state.discovered):
             tbl.rollback_to_wave_before(run.wave)
-        seen_df = state.seen.read(spark) if state.seen.exists() else None
-        run.blooms = _rebuild_blooms(spark, state, seen_df, run.config,
-                                     run.bloom_bits, run.bloom_k)
+        if state.seen.exists():
+            # the filters are a pure function of seen (a Bloom filter of
+            # a union is the OR of its parts'), so they are never stored
+            run.blooms = load_shards(build_filter_shards(
+                state.seen.read(spark), N_SEEN_BUCKETS,
+                fixed_bits=run.bloom_bits, fixed_k=run.bloom_k,
+            ))
         return
     # the spec's acceptUrl always gates sitemap URLs, like
     # `sws crawl -s script.lua` (crawler.rs:92-96,123-125)
@@ -497,11 +494,11 @@ def commit_outputs(run: CrawlRun, scheduled: DataFrame, rec: DataFrame,
     return n_errors
 
 
-def commit_seen(run: CrawlRun, scheduled: DataFrame) -> tuple[DataFrame, set[int]]:
+def commit_seen(run: CrawlRun, scheduled: DataFrame) -> DataFrame:
     """Stage commit seen: attempted URLs count as seen (404s are not
     retried forever, matching "scheduled+fetched" accounting), and the
-    wave's Bloom shard delta is committed and OR-merged into the
-    in-memory filters. Returns (seen delta, touched Bloom buckets)."""
+    wave's url hashes are OR'd into the driver's Bloom filters.
+    Returns the seen delta."""
     spark, c, state, wave = run.spark, run.config, run.state, run.wave
     seen_delta = scheduled.select("url_hash", "url_canon", "url", F.lit(wave).alias("wave"))
     state.seen.commit(seen_delta, mode="append", lineage={"wave": wave})
@@ -516,28 +513,15 @@ def commit_seen(run: CrawlRun, scheduled: DataFrame) -> tuple[DataFrame, set[int
         # them for recrawl expiry, and crash-rollback needs the
         # previous wave's manifest as its anchor)
         state.seen.expire_snapshots(max(c.snapshot_keep_last, c.compact_every_waves + 2))
-    # durable incremental shard delta (distributed build), persisted so
-    # the same shards feed both the table commit and the in-memory
-    # merge without recomputation
-    delta_shards = build_filter_shards(
-        seen_delta, c.n_seen_buckets, fixed_bits=run.bloom_bits, fixed_k=run.bloom_k,
-    ).persist()
-    try:
-        state.shards.commit(delta_shards, mode="append", lineage={
-            "wave": wave, "geometry": [run.bloom_bits, run.bloom_k],
-            "seen_version": state.seen.current_version(),
-        })
-        # merge the distributed shard blobs (n_seen_buckets fixed-size
-        # rows, ~2 MB total) — never the raw frontier-cardinality hashes
-        touched = _merge_bloom_shards(run.blooms, delta_shards)
-    finally:
-        delta_shards.unpersist()
-    return seen_delta, touched
+    # one Arrow collect of the cached schedule's hashes (wave-sized:
+    # 8 bytes a URL); resume rebuilds the same bits from seen
+    hashes = scheduled.select("url_hash").toPandas()["url_hash"].to_numpy(dtype="int64")
+    add_hashes(run.blooms, hashes, N_SEEN_BUCKETS, run.bloom_bits, run.bloom_k)
+    return seen_delta
 
 
 def commit_frontier(run: CrawlRun, disc: DataFrame, seen_delta: DataFrame,
-                    resurrected: DataFrame | None, touched: set[int],
-                    counts: dict, obs) -> None:
+                    resurrected: DataFrame | None, counts: dict, obs) -> None:
     """Stage commit frontier: the discovered URLs (sendUrl feedback,
     A22), then the next frontier as a wave-sized op-log DELTA (del =
     scheduled keys, add = new discovered + resurrected rows), never an
@@ -553,13 +537,7 @@ def commit_frontier(run: CrawlRun, disc: DataFrame, seen_delta: DataFrame,
     # anti-join against the bucketed base + broadcast anti-joins
     # against the recent wave deltas
     disc_new = filter_new_urls(
-        spark, disc_new, state.seen.read_split(spark), run.blooms,
-        c.n_seen_buckets, shard_dir=c.bloom_shard_dir,
-        # the crawl's first fetch wave refreshes every shard file (the
-        # on-disk set may be stale); afterwards only this wave's touched
-        # buckets are rewritten (their mtime bump is the only re-map
-        # executors pay)
-        touched_buckets=touched if run.totals["waves"] else None,
+        spark, disc_new, state.seen.read_split(spark), run.blooms, N_SEEN_BUCKETS,
     )
     state.discovered.commit(
         disc.select(F.lit(wave).alias("wave"), "url", "discovered_url"),
@@ -690,52 +668,3 @@ def fold_frontier_ops(base: DataFrame, ops: DataFrame) -> DataFrame:
             for c in val_cols
         ],
     ).where(F.col("url").isNotNull()).select(FRONTIER_SCHEMA.fieldNames())
-
-
-def _rebuild_blooms(
-    spark: SparkSession, state: CrawlState, seen_df: DataFrame,
-    config: CrawlConfig, bloom_bits: int, bloom_k: int,
-) -> dict[int, BloomFilter]:
-    """Resume path (SURVEY.md §7 risk 3): load the persisted shard
-    deltas if their geometry and seen-version line up; otherwise fall
-    back to an exact rebuild from ``seen_df`` (None: no seen table
-    yet, so no filters). ``bloom_bits`` /
-    ``bloom_k`` are the EFFECTIVE geometry (possibly derived from
-    config.expected_total_urls)."""
-    if state.shards.exists():
-        m = state.shards.manifest()["lineage"]
-        geometry_ok = m.get("geometry") == [bloom_bits, bloom_k]
-        version_ok = m.get("seen_version") == state.seen.current_version()
-        if geometry_ok and version_ok:
-            try:
-                return load_shards(state.shards.read(spark))
-            except ValueError:
-                pass  # mixed geometry rows -> rebuild
-    if seen_df is None or seen_df.isEmpty():
-        return {}
-    shards = build_filter_shards(
-        seen_df, config.n_seen_buckets,
-        fixed_bits=bloom_bits, fixed_k=bloom_k,
-    )
-    return load_shards(shards)
-
-
-def _merge_bloom_shards(
-    blooms: dict[int, BloomFilter], delta_shards: DataFrame
-) -> set[int]:
-    """Incremental per-wave shard update: OR-merge the distributed
-    fixed-geometry shard blobs (one bounded-size row per touched
-    bucket) into the in-memory fast-path filters. The driver never
-    sees frontier-cardinality data — only n_seen_buckets x 128 KiB of
-    bitmaps per wave. Returns the touched bucket ids so the mmap
-    transport rewrites only those shard files."""
-    touched: set[int] = set()
-    for r in delta_shards.select("bucket", "m_bits", "k", "bloom").collect():
-        bf = BloomFilter.from_bytes(r.m_bits, r.k, bytes(r.bloom))
-        prev = blooms.get(r.bucket)
-        if prev is None:
-            blooms[r.bucket] = bf
-        else:
-            prev.merge(bf)
-        touched.add(int(r.bucket))
-    return touched

@@ -17,17 +17,18 @@ one for 10^10-URL scale:
 - only Bloom-positive candidates reach the exact ``left_anti`` join,
   so at steady state the join input is ~fpp x |candidates| + true dups.
 
-Filters are numpy bit arrays serialized to bytes, stored as
-checkpoint artifacts keyed by (bucket, version) and rebuilt
-incrementally: a wave only rebuilds the buckets it inserted into
-(SURVEY.md §4, §7 risk 3). All per-row work is vectorized numpy
-inside Arrow UDFs / applyInPandas — no per-row Python.
+The exact ``seen`` table is the only durable copy of the filters: a
+Bloom filter of a union is the bitwise OR of its parts' filters, so
+they are a pure function of ``seen``. The driver holds them in memory,
+ORs each wave's committed hashes into them (``add_hashes``) and
+rebuilds them from ``seen`` on resume (``build_filter_shards`` ->
+``load_shards``). All per-row work is vectorized numpy inside Arrow
+UDFs / applyInPandas — no per-row Python.
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -147,9 +148,9 @@ def build_filter_shards(
     """Build per-bucket Bloom shards from the exact seen table.
 
     With ``fixed_bits``/``fixed_k`` the Bloom geometry is pinned so
-    per-wave delta shards are OR-mergeable with prior shards (the
-    incremental checkpoint path); otherwise each shard is sized for
-    its own cardinality (full-rebuild path).
+    the shards are OR-mergeable with the driver's per-wave
+    ``add_hashes`` updates (the crawl's resume path); otherwise each
+    shard is sized for its own cardinality.
 
     seen must have column ``url_hash``. One groupBy(bucket) shuffle,
     then a single pass per group — O(|seen|/n_buckets) memory each.
@@ -180,10 +181,8 @@ def build_filter_shards(
 
 def load_shards(shards_df: DataFrame) -> dict[int, BloomFilter]:
     """Collect shard rows into a {bucket: BloomFilter} dict, OR-merging
-    rows of the same bucket (per-wave delta shards with identical
-    geometry). Total size ~ 1.2 bytes/URL at fpp=0.01; at 10^10
-    scale the probe reads them from mmap files instead of a broadcast
-    (``write_shard_files`` / ``make_maybe_seen_udf(shard_dir=...)``)."""
+    rows of the same bucket (shards with identical geometry). Total
+    size ~ 1.2 bytes/URL at fpp=0.01."""
     out: dict[int, BloomFilter] = {}
     for r in shards_df.collect():
         bf = BloomFilter.from_bytes(r.m_bits, r.k, bytes(r.bloom))
@@ -192,7 +191,7 @@ def load_shards(shards_df: DataFrame) -> dict[int, BloomFilter]:
             out[r.bucket] = bf
         elif prev.m == bf.m and prev.k == bf.k:
             prev.merge(bf)
-        else:  # geometry changed (config bump) -> caller rebuilds
+        else:
             raise ValueError(
                 f"bloom shard geometry mismatch in bucket {r.bucket}: "
                 f"({prev.m},{prev.k}) vs ({bf.m},{bf.k})"
@@ -208,7 +207,7 @@ def bloom_geometry(
     per bucket at fpp 0.01 and silently saturates (FPR -> 1) beyond
     that; sizing from cardinality keeps the discovery fast path
     meaningful at any scale. Bits are rounded up to a power of two so
-    per-wave delta shards stay OR-mergeable under one geometry."""
+    every bucket's filter shares one OR-mergeable geometry."""
     n = max(1, expected_urls // max(1, n_buckets))
     m = int(-n * math.log(fpp) / (math.log(2) ** 2))
     m_bits = 1 << max(13, (m - 1).bit_length())
@@ -216,107 +215,43 @@ def bloom_geometry(
     return m_bits, min(k, 16)
 
 
-def write_shard_files(
-    blooms: dict[int, BloomFilter], shard_dir: str,
-    buckets: "set[int] | None" = None,
-) -> dict[int, tuple[int, int, str]]:
-    """Persist shard bitmaps as raw files for the mmap read path
-    (``buckets`` limits the rewrite to this wave's touched shards).
-    At 10^10 URLs the full filter set is ~1.2 GB/10^10 x fpp terms —
-    too big to broadcast per wave; executors mmap the files instead
-    (shard_dir must be cluster-visible: NFS/EFS/alluxio or a
-    node-local sync). Atomic per file (write-tmp + rename)."""
-    import uuid as _uuid
-
-    os.makedirs(shard_dir, exist_ok=True)
-    meta: dict[int, tuple[int, int, str]] = {}
-    for b, bf in blooms.items():
-        path = os.path.join(shard_dir, f"bloom_{b:05d}.bits")
-        if buckets is None or b in buckets or not os.path.exists(path):
-            tmp = path + f".tmp-{_uuid.uuid4().hex[:8]}"
-            with open(tmp, "wb") as fh:
-                fh.write(bf.to_bytes())
-            os.replace(tmp, path)
-        meta[b] = (bf.m, bf.k, path)
-    return meta
-
-
-_MMAP_CACHE: dict[tuple[str, float], np.ndarray] = {}
-
-
-def _mmap_bits(path: str) -> np.ndarray:
-    """Per-executor-process mmap cache keyed by (path, mtime): a
-    rewritten shard is re-mapped, an unchanged one costs nothing
-    (pages stay in the OS cache across waves)."""
-    mtime = os.path.getmtime(path)
-    key = (path, mtime)
-    arr = _MMAP_CACHE.get(key)
-    if arr is None:
-        # evict only stale epochs of THIS shard; other buckets' live
-        # mappings stay cached (clearing everything would re-memmap
-        # every probed shard each batch whenever any one shard moved)
-        for stale in [k for k in _MMAP_CACHE if k[0] == path]:
-            del _MMAP_CACHE[stale]
-        arr = np.memmap(path, dtype=np.uint8, mode="r")
-        _MMAP_CACHE[key] = arr
-    return arr
+def add_hashes(
+    blooms: dict[int, BloomFilter], url_hash: np.ndarray, n_buckets: int,
+    m_bits: int, k: int,
+) -> None:
+    """OR ``url_hash`` into the per-bucket filters in place, creating a
+    bucket's ``(m_bits, k)`` filter on its first hash. Buckets agree
+    with ``bucket_of``: ``np.mod`` by a positive modulus is ``pmod``."""
+    buckets = np.mod(url_hash, n_buckets)
+    for b in np.unique(buckets):
+        bf = blooms.get(int(b))
+        if bf is None:
+            bf = blooms[int(b)] = BloomFilter(m_bits, k)
+        bf.add_many(url_hash[buckets == b])
 
 
 def make_maybe_seen_udf(
-    spark: SparkSession,
-    blooms: dict[int, BloomFilter],
-    n_buckets: int,
-    shard_dir: str | None = None,
-    touched_buckets: "set[int] | None" = None,
+    spark: SparkSession, blooms: dict[int, BloomFilter], n_buckets: int
 ):
-    """Vectorized 'maybe seen' probe. Two transports for the shard
-    bitmaps: broadcast bytes (default; fine to ~100s of MB) or mmap
-    files under ``shard_dir`` (the 10^10 path — only (m, k, path)
-    triples ship with the closure; executors map pages on demand).
-    ``touched_buckets`` limits the shard-file rewrite to the buckets
-    this wave's delta actually modified (None = write everything —
-    the first call of a session, when on-disk files may be stale):
-    at 10^10 scale a full rewrite is multi-GB of driver IO per wave
-    and bumps every mtime, forcing executors to re-map all shards."""
-    if shard_dir is not None:
-        meta = write_shard_files(blooms, shard_dir, buckets=touched_buckets)
-        bc = spark.sparkContext.broadcast(meta)
-
-        @F.pandas_udf("boolean")
-        def maybe_seen(url_hash: pd.Series) -> pd.Series:
-            h = url_hash.to_numpy(dtype=np.int64)
-            buckets = np.mod(h, n_buckets)
-            buckets = np.where(buckets < 0, buckets + n_buckets, buckets)
-            out = np.zeros(len(h), dtype=bool)
-            for b in np.unique(buckets):
-                ent = bc.value.get(int(b))
-                if ent is None:
-                    continue
-                m, k, path = ent
-                bf = BloomFilter(m, k, _mmap_bits(path))
-                mask = buckets == b
-                out[mask] = bf.contains_many(h[mask])
-            return pd.Series(out)
-
-        return maybe_seen
-
+    """Vectorized 'maybe seen' probe over the broadcast shard bitmaps.
+    Each batch wraps the broadcast bytes read-only (``contains_many``
+    only reads), so probing copies no bitmap."""
     bc = spark.sparkContext.broadcast(
         {b: (f.m, f.k, f.to_bytes()) for b, f in blooms.items()}
     )
 
     @F.pandas_udf("boolean")
     def maybe_seen(url_hash: pd.Series) -> pd.Series:
-        shards = {
-            b: BloomFilter.from_bytes(m, k, d) for b, (m, k, d) in bc.value.items()
-        }
+        shards = bc.value
         h = url_hash.to_numpy(dtype=np.int64)
         buckets = np.mod(h, n_buckets)
-        buckets = np.where(buckets < 0, buckets + n_buckets, buckets)
         out = np.zeros(len(h), dtype=bool)
         for b in np.unique(buckets):
-            bf = shards.get(int(b))
-            if bf is None:
+            ent = shards.get(int(b))
+            if ent is None:
                 continue
+            m, k, data = ent
+            bf = BloomFilter(m, k, np.frombuffer(data, dtype=np.uint8))
             mask = buckets == b
             out[mask] = bf.contains_many(h[mask])
         return pd.Series(out)
@@ -330,13 +265,11 @@ def filter_new_urls(
     seen: "DataFrame | list[DataFrame]",
     blooms: dict[int, BloomFilter] | None,
     n_buckets: int,
-    shard_dir: str | None = None,
-    touched_buckets: "set[int] | None" = None,
 ) -> DataFrame:
     """Return candidates not in the seen set.
 
     Fast path: Bloom 'definitely new' rows skip the join entirely
-    (bitmaps via broadcast or, at scale, mmap files — ``shard_dir``).
+    (the bitmaps ship to the executors as one broadcast).
     Slow path: Bloom-positive rows take exact ``left_anti`` joins on
     url_hash+url_canon (hash-first keeps the join key narrow; the url
     equality guards against xxhash64 collisions at 10^10 scale).
@@ -349,9 +282,7 @@ def filter_new_urls(
     candidates must carry url_hash/url_canon (with_url_identity).
     """
     if blooms:
-        maybe_seen = make_maybe_seen_udf(spark, blooms, n_buckets,
-                                         shard_dir=shard_dir,
-                                         touched_buckets=touched_buckets)
+        maybe_seen = make_maybe_seen_udf(spark, blooms, n_buckets)
         flagged = candidates.withColumn("_maybe", maybe_seen(F.col("url_hash")))
         definitely_new = flagged.where(~F.col("_maybe")).drop("_maybe")
         suspects = flagged.where(F.col("_maybe")).drop("_maybe")

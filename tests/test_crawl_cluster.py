@@ -1,10 +1,10 @@
 """VERDICT r4 #5: one full crawl() wave loop on ``local-cluster[2,2]``
 — two separate executor JVMs with their own Python worker pools — so
 the whole driver (sitemap expansion, distributed rank, fetch join,
-Bloom mmap shard transport, op-log commits) is proven outside one JVM,
+broadcast Bloom probe, op-log commits) is proven outside one JVM,
 including a resume after a HARD process kill (os._exit, no graceful
-spark.stop, no atexit) mid-crawl. r4 proved the shard transport alone
-cross-process (test_bloom_mmap_cluster); this drives the full loop.
+spark.stop, no atexit) mid-crawl, which rebuilds the Bloom filters
+from the committed seen table.
 """
 
 import json
@@ -24,9 +24,8 @@ RUNNER = textwrap.dedent(
     from swspark.driver import CrawlConfig, CrawlState, crawl
     from swspark.fixtures import generate_corpus
 
-    wh, shard_dir, max_waves, resume, hard_kill = (
-        sys.argv[1], sys.argv[2], int(sys.argv[3]),
-        sys.argv[4] == "1", sys.argv[5] == "1",
+    wh, max_waves, resume, hard_kill = (
+        sys.argv[1], int(sys.argv[2]), sys.argv[3] == "1", sys.argv[4] == "1",
     )
     spark = (
         SparkSession.builder.master("local-cluster[2,2,1200]")
@@ -42,8 +41,7 @@ RUNNER = textwrap.dedent(
     spark.sparkContext.setLogLevel("ERROR")
     c = generate_corpus("tiny")
     cfg = CrawlConfig(spec="urbandict", wave_period=10.0,
-                      compact_every_waves=2, max_waves=max_waves,
-                      bloom_shard_dir=shard_dir)
+                      compact_every_waves=2, max_waves=max_waves)
     accept = lambda url, kind: F.when(
         kind == "URLSET", url.contains("term=")).otherwise(F.lit(True))
     crawl(spark, cfg, wh,
@@ -66,11 +64,11 @@ RUNNER = textwrap.dedent(
 ).format(repo=REPO)
 
 
-def _run(wh, shard_dir, max_waves, resume, hard_kill=False):
+def _run(wh, max_waves, resume, hard_kill=False):
     env = dict(os.environ)
     env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
     r = subprocess.run(
-        [sys.executable, "-c", RUNNER, wh, shard_dir, str(max_waves),
+        [sys.executable, "-c", RUNNER, wh, str(max_waves),
          "1" if resume else "0", "1" if hard_kill else "0"],
         capture_output=True, text=True, timeout=900, cwd=REPO, env=env,
     )
@@ -80,15 +78,14 @@ def _run(wh, shard_dir, max_waves, resume, hard_kill=False):
 
 
 def test_full_crawl_on_local_cluster_with_kill_resume(tmp_path):
-    shards = str(tmp_path / "shards")
     # uninterrupted reference run on the same cluster master
-    full = _run(str(tmp_path / "full"), shards + "-full", 100, resume=False)
+    full = _run(str(tmp_path / "full"), 100, resume=False)
     assert len(full) == 41  # the fixture's golden crawl size
     assert len({w for w, _, _, _ in full}) >= 3  # multi-wave politeness
     # partial run, then HARD-killed after wave 1 committed
     wh = str(tmp_path / "killed")
-    part = _run(wh, shards, 1, resume=False, hard_kill=True)
+    part = _run(wh, 1, resume=False, hard_kill=True)
     assert 0 < len(part) < len(full)
     # resume in a fresh driver + fresh executor JVMs -> identical trace
-    resumed = _run(wh, shards, 100, resume=True)
+    resumed = _run(wh, 100, resume=True)
     assert resumed == full

@@ -124,34 +124,6 @@ def test_bloom_geometry_from_cardinality():
     assert m_big > m
 
 
-def test_mmap_shard_transport_equals_broadcast(spark, seen_tables, tmp_path):
-    """The mmap read path (10^10-scale transport) must classify
-    identically to the broadcast path."""
-    from pyspark.sql import functions as F
-
-    from swspark.seen import filter_new_urls, with_url_identity
-
-    seen, blooms, urls = seen_tables
-    cand_urls = urls[:50] + [f"https://newX.example.test/fresh/{i}" for i in range(50)]
-    cand = with_url_identity(
-        spark.createDataFrame([(u,) for u in cand_urls], "url string")
-    )
-    via_bc = filter_new_urls(spark, cand, seen, blooms, N_BUCKETS)
-    via_mm = filter_new_urls(spark, cand, seen, blooms, N_BUCKETS,
-                             shard_dir=str(tmp_path / "shards"))
-    assert sorted(r.url for r in via_bc.collect()) == sorted(
-        r.url for r in via_mm.collect()
-    )
-    # files really exist and carry the full bitmaps
-    import os as _os
-
-    files = _os.listdir(tmp_path / "shards")
-    assert len(files) == len(blooms)
-    sizes = {f: _os.path.getsize(tmp_path / "shards" / f) for f in files}
-    assert all(s == (next(iter(blooms.values())).m + 7) // 8 or s > 0
-               for s in sizes.values())
-
-
 def test_filter_new_urls_split_parts(spark, seen_tables):
     """seen may arrive as [base, delta] parts (SnapshotTable.read_split):
     anti-joining the parts sequentially equals anti-joining the union."""
@@ -171,103 +143,32 @@ def test_filter_new_urls_split_parts(spark, seen_tables):
     )
 
 
-def test_mmap_cache_keeps_other_buckets(tmp_path):
-    """ADVICE r3: a cache miss for one shard must not evict other
-    shards' live mappings — only stale epochs of the SAME path (else
-    every probed shard re-memmaps whenever any one shard is rewritten)."""
-    import os
-    import time
-
-    from swspark.seen import _MMAP_CACHE, _mmap_bits
-
-    _MMAP_CACHE.clear()
-    a, b = str(tmp_path / "a.bits"), str(tmp_path / "b.bits")
-    for p in (a, b):
-        with open(p, "wb") as fh:
-            fh.write(b"\x00" * 64)
-    arr_a = _mmap_bits(a)
-    arr_b = _mmap_bits(b)
-    assert len(_MMAP_CACHE) == 2
-    # rewrite a (new epoch): b's mapping must survive, a's old one goes
-    time.sleep(0.01)
-    with open(a, "wb") as fh:
-        fh.write(b"\xff" * 64)
-    os.utime(a, (time.time() + 10, time.time() + 10))  # force new mtime
-    arr_a2 = _mmap_bits(a)
-    assert arr_a2[0] == 0xFF
-    assert len(_MMAP_CACHE) == 2  # {a@new, b} — not just {a@new}
-    assert _mmap_bits(b) is arr_b  # identity: b never re-mapped
-    _MMAP_CACHE.clear()
-
-
-def test_write_shard_files_touched_only(tmp_path):
-    """ADVICE r3: per-wave shard persistence must rewrite only the
-    touched buckets (at 10^10 scale a full rewrite is multi-GB of
-    driver IO per wave and bumps every mtime, forcing executors to
-    re-map every shard)."""
-    import os
-
-    from swspark.seen import BloomFilter, write_shard_files
-
-    blooms = {b: BloomFilter(1 << 13, 7) for b in range(4)}
-    d = str(tmp_path / "shards")
-    meta = write_shard_files(blooms, d)  # first write: everything
-    assert len(meta) == 4
-    mtimes = {b: os.path.getmtime(p) for b, (_, _, p) in meta.items()}
-    # age the files so a rewrite is observable
-    for _, (_, _, p) in meta.items():
-        os.utime(p, (1, 1))
-    blooms[2].add_many(np.array([123456789], dtype=np.int64))
-    meta2 = write_shard_files(blooms, d, buckets={2})
-    assert len(meta2) == 4  # meta still covers every shard
-    for b, (_, _, p) in meta2.items():
-        if b == 2:
-            assert os.path.getmtime(p) > 1
-        else:
-            assert os.path.getmtime(p) == 1, f"bucket {b} was rewritten"
-    # a missing file is written even when not in buckets (first touch)
-    os.remove(meta2[1][2])
-    meta3 = write_shard_files(blooms, d, buckets={2})
-    assert os.path.exists(meta3[1][2])
-
-
-def test_filter_new_urls_rebuilt_after_bloom_merge(spark, seen_tables, tmp_path):
-    """filter_new_urls has eager side effects (it broadcasts the Bloom
-    bytes and writes the shard files) and reads a blooms dict that the
-    driver's per-wave merge mutates in place: a repeat call with the
-    same inputs after a merge must build a new plan and rewrite the
-    shard files, never hand back the first call's plan."""
-    import os
-
-    from swspark.driver import _merge_bloom_shards
+def test_filter_new_urls_rebuilt_after_bloom_merge(spark, seen_tables):
+    """filter_new_urls broadcasts the Bloom bytes eagerly and reads a
+    blooms dict that the driver's per-wave ``add_hashes`` mutates in
+    place: a repeat call after a merge must probe the merged filters,
+    never hand back the first call's plan. ``seen`` holds URLs that the
+    filters do not hold yet, so only the merge turns them from
+    'definitely new' into suspects that the exact join drops."""
     from swspark.seen import (
-        build_filter_shards, filter_new_urls, load_shards, with_url_identity,
+        add_hashes, build_filter_shards, filter_new_urls, load_shards,
+        with_url_identity,
     )
 
-    seen, _blooms, urls = seen_tables
-    geometry = {"fixed_bits": 1 << 13, "fixed_k": 7}
-    blooms = load_shards(build_filter_shards(seen, N_BUCKETS, **geometry))
-    cand = with_url_identity(
-        spark.createDataFrame([(u,) for u in urls[:20]], "url string")
-    )
-    shard_dir = str(tmp_path / "shards")
-
-    def stamps():
-        return {f: os.stat(os.path.join(shard_dir, f)).st_mtime_ns
-                for f in os.listdir(shard_dir)}
-
-    first = filter_new_urls(spark, cand, seen, blooms, N_BUCKETS,
-                            shard_dir=shard_dir)
-    before = stamps()
+    seen, _blooms, _urls = seen_tables
+    m, k = 1 << 13, 7
+    blooms = load_shards(build_filter_shards(seen, N_BUCKETS, fixed_bits=m, fixed_k=k))
     fresh = with_url_identity(spark.createDataFrame(
         [(f"https://fresh.example.test/{i}",) for i in range(50)], "url string"
     ))
-    assert _merge_bloom_shards(
-        blooms, build_filter_shards(fresh, N_BUCKETS, **geometry)
-    )
-    second = filter_new_urls(spark, cand, seen, blooms, N_BUCKETS,
-                             shard_dir=shard_dir)
+    seen_plus = seen.unionByName(fresh.select("url", "url_canon", "url_hash"))
+
+    first = filter_new_urls(spark, fresh, seen_plus, blooms, N_BUCKETS)
+    assert first.count() == 50  # the stale filters skip the exact join
+
+    hashes = np.array([r.url_hash for r in fresh.collect()], dtype=np.int64)
+    add_hashes(blooms, hashes, N_BUCKETS, m, k)
+    second = filter_new_urls(spark, fresh, seen_plus, blooms, N_BUCKETS)
     assert second is not first
-    after = stamps()
-    assert after.keys() == before.keys()
-    assert all(after[f] != before[f] for f in before), (before, after)
+    assert second.collect() == []
+    assert first.count() == 50  # the first plan keeps its own broadcast

@@ -1,5 +1,8 @@
-"""Durable Bloom-shard delta tests: fixed-geometry merge, resume
-loads shards instead of rebuilding, geometry mismatch falls back."""
+"""Bloom seen-filter as derived state: fixed-geometry shards OR-merge,
+the driver's per-wave ``add_hashes`` agrees with the distributed build
+bit for bit, and resume rebuilds the live filters from ``seen``."""
+
+import os
 
 import numpy as np
 import pytest
@@ -7,7 +10,7 @@ from pyspark.sql import functions as F
 
 
 def test_fixed_geometry_delta_merge(spark):
-    from swspark.seen import build_filter_shards, load_shards
+    from swspark.seen import add_hashes, build_filter_shards, load_shards
 
     a = spark.createDataFrame([(i,) for i in range(0, 200)], "url_hash long")
     b = spark.createDataFrame([(i,) for i in range(200, 400)], "url_hash long")
@@ -18,6 +21,12 @@ def test_fixed_geometry_delta_merge(spark):
     buckets = np.mod(h, 4)
     for bkt in range(4):
         assert merged[bkt].contains_many(h[buckets == bkt]).all()
+    # the driver's per-wave update yields the distributed build's bits
+    live: dict = {}
+    add_hashes(live, h, 4, 1 << 14, 5)
+    assert live.keys() == merged.keys()
+    for bkt in range(4):
+        assert np.array_equal(live[bkt].bits, merged[bkt].bits)
 
 
 def test_geometry_mismatch_raises(spark):
@@ -30,9 +39,16 @@ def test_geometry_mismatch_raises(spark):
         load_shards(sh1.unionByName(sh2))
 
 
-def test_resume_uses_persisted_shards(spark, tmp_path):
-    from swspark.driver import CrawlConfig, CrawlState, _rebuild_blooms, crawl
+def test_resume_uses_persisted_shards(spark, tmp_path, monkeypatch):
+    """The persisted state resume reads is ``seen`` alone: over a
+    4-fetch-wave crawl that crosses two compactions, the filters rebuilt
+    on resume equal the uninterrupted run's live filters bit for bit,
+    the warehouse holds no shards table, and a resume under another
+    ``expected_total_urls`` rebuilds at the new geometry."""
+    from swspark import driver
+    from swspark.driver import CrawlConfig, CrawlRun, CrawlState, crawl, open_crawl
     from swspark.fixtures import generate_corpus
+    from swspark.seen import bloom_geometry
 
     c = generate_corpus("tiny")
     T = dict(
@@ -41,32 +57,44 @@ def test_resume_uses_persisted_shards(spark, tmp_path):
         robots=spark.createDataFrame(c.robots[["host", "body"]]),
         seeds=spark.createDataFrame(c.seeds),
     )
-    cfg = CrawlConfig(spec="fandom", max_waves=2)
-    crawl(
-        spark, cfg, str(tmp_path), T["seeds"].where(F.col("scenario") == "wiki_pages"),
+    runs = []
+
+    def spy(run, *args):
+        runs.append(run)
+        return open_crawl(run, *args)
+
+    monkeypatch.setattr(driver, "open_crawl", spy)
+    wh = str(tmp_path)
+    cfg = CrawlConfig(spec="fandom", compact_every_waves=2)
+    totals = crawl(
+        spark, cfg, wh, T["seeds"].where(F.col("scenario") == "wiki_pages"),
         T["sitemaps"], T["robots"], T["pages"],
     )
-    state = CrawlState(str(tmp_path))
-    assert state.shards.exists()
-    lin = state.shards.manifest()["lineage"]
-    assert lin["geometry"] == [cfg.bloom_bits_per_bucket, cfg.bloom_k]
-    assert lin["seen_version"] == state.seen.current_version()
+    assert totals["waves"] >= 4, totals
+    live = runs[0].blooms
+    assert not os.path.exists(os.path.join(wh, "shards"))
 
-    # resume path: blooms come from the shard table and agree with the
-    # exact seen set (no false negatives)
-    seen_df = state.seen.read(spark)
-    blooms = _rebuild_blooms(spark, state, seen_df, cfg,
-                             cfg.bloom_bits_per_bucket, cfg.bloom_k)
-    hashes = np.array([r.url_hash for r in seen_df.collect()], dtype=np.int64)
-    buckets = np.mod(hashes, cfg.n_seen_buckets)
-    buckets = np.where(buckets < 0, buckets + cfg.n_seen_buckets, buckets)
-    for b in np.unique(buckets):
-        assert blooms[int(b)].contains_many(hashes[buckets == b]).all()
+    def resumed(config):
+        run = CrawlRun(spark, config, CrawlState(wh), rules_table=None)
+        open_crawl(run, None, None, None, resume=True)
+        return run.blooms
 
-    # geometry bump -> fallback rebuild still yields valid blooms
-    cfg2 = CrawlConfig(spec="fandom", bloom_bits_per_bucket=1 << 18)
-    blooms2 = _rebuild_blooms(spark, state, seen_df, cfg2,
-                              cfg2.bloom_bits_per_bucket, cfg2.bloom_k)
-    for b in np.unique(buckets):
-        assert blooms2[int(b)].contains_many(hashes[buckets == b]).all()
-        assert blooms2[int(b)].m == 1 << 18
+    rebuilt = resumed(cfg)
+    assert rebuilt.keys() == live.keys()
+    for b, bf in live.items():
+        assert (rebuilt[b].m, rebuilt[b].k) == (bf.m, bf.k)
+        assert np.array_equal(rebuilt[b].bits, bf.bits), b
+
+    # another expected cardinality -> the new geometry, no false negatives
+    cfg2 = CrawlConfig(spec="fandom", compact_every_waves=2,
+                       expected_total_urls=100_000_000)
+    m2, k2 = bloom_geometry(cfg2.expected_total_urls, driver.N_SEEN_BUCKETS)
+    assert m2 != live[next(iter(live))].m
+    blooms2 = resumed(cfg2)
+    hashes = np.array([r.url_hash for r in CrawlState(wh).seen.read(spark).collect()],
+                      dtype=np.int64)
+    buckets = np.mod(hashes, driver.N_SEEN_BUCKETS)
+    assert set(blooms2) == set(np.unique(buckets).tolist())
+    for b, bf in blooms2.items():
+        assert (bf.m, bf.k) == (m2, k2)
+        assert bf.contains_many(hashes[buckets == b]).all()

@@ -5,7 +5,7 @@ Prints ONE JSON line:
    "unit": "sec", "queries": {...per-query seconds...}, "sf": ...}
 
 - headline metric: frontier URLs scheduled+fetched per second through
-  the full wave machinery (canonicalize+hash -> bloom/anti-join vs a
+  the full wave machinery (canonicalize+hash -> exact anti-join vs a
   pre-seeded seen-set -> per-host window-rank budget cutoff -> salted
   repartition -> fetch join), on a deterministic synthetic frontier
   with a hot-host skew (BASELINE.json metric).
@@ -58,17 +58,16 @@ PAGES_BUCKETS = 64
 
 def prepare_crawl_wave(spark, n_urls: int) -> dict:
     """One-time physical layout, exactly the engine's designed scale
-    shape (north star: bucketed page storage + Bloom/exact seen-set).
+    shape (north star: bucketed page storage + exact seen-set).
     Setup cost is storage-build cost, not wave cost:
 
     - pages: parquet table bucketed by url (≙ Iceberg bucket(N, url))
       so the fetch join never shuffles the big side;
     - seen: exact table bucketed by url_hash (sort-merge anti-join,
-      seen side shuffle-free) + per-bucket Bloom shards for the
-      SPARK_GRAFT_BENCH_BLOOM=1 ablation path (see run_crawl_wave);
+      seen side shuffle-free);
     - budgets: tiny per-host dim (broadcast at join time).
     """
-    from swspark.seen import build_filter_shards, load_shards, with_url_identity
+    from swspark.seen import with_url_identity
 
     import shutil
 
@@ -113,7 +112,6 @@ def prepare_crawl_wave(spark, n_urls: int) -> dict:
         )
     seen = spark.table(seen_tbl)
     pages = spark.table(pages_tbl)
-    blooms = load_shards(build_filter_shards(seen, N_SEEN_BUCKETS, fpp=0.01))
 
     hosts = frontier.select("host").distinct()
     m = F.length("host") % 3
@@ -135,12 +133,8 @@ def prepare_crawl_wave(spark, n_urls: int) -> dict:
         with_url_identity(frontier), default_n_buckets(spark),
         approx_count=n_urls,
     )
-    return {"frontier": frontier, "seen": seen, "blooms": blooms,
-            "budgets": budgets, "pages": pages, "n_urls": n_urls,
-            "bounds": bounds}
-
-
-USE_BLOOM_PREFILTER = os.environ.get("SPARK_GRAFT_BENCH_BLOOM", "0") == "1"
+    return {"frontier": frontier, "seen": seen, "budgets": budgets,
+            "pages": pages, "n_urls": n_urls, "bounds": bounds}
 
 
 def run_crawl_wave(spark, inputs: dict, shape: str = "stress") -> tuple[float, int]:
@@ -160,27 +154,14 @@ def run_crawl_wave(spark, inputs: dict, shape: str = "stress") -> tuple[float, i
       host holds ~10% of the frontier — pending >> budget, the
       real-crawl shape. The distributed rank's pre-shuffle budget cut
       (rank_frontier_distributed budget_col) keeps pass 2 to
-      O(buckets x budget) rows per host.
-
-    The Bloom prefilter is OFF here by design (measured, tools/
-    bench_bloom_ablation.py): in front of a bucketed sorted seen table
-    the exact sort-merge anti-join is pure JVM and ~2.7x faster than
-    routing every frontier row through the Arrow->Python bloom UDF —
-    the seen side is scanned either way, so the prefilter only shrinks
-    the already-cheap probe side while paying a full Python round
-    trip. The bloom's design point is the sendUrl DISCOVERY path
-    (driver loop): small candidate sets where definitely-new rows let
-    AQE collapse the join and skip the seen scan entirely."""
+      O(buckets x budget) rows per host."""
     from swspark.scheduler import Throttle, salted_repartition, schedule_wave
     from swspark.seen import filter_new_urls, with_url_identity
 
     n_urls = inputs["n_urls"]
     t0 = time.perf_counter()
     frontier = with_url_identity(inputs["frontier"])
-    candidates = filter_new_urls(
-        spark, frontier, inputs["seen"],
-        inputs["blooms"] if USE_BLOOM_PREFILTER else None, N_SEEN_BUCKETS,
-    )
+    candidates = filter_new_urls(spark, frontier, inputs["seen"])
     if shape == "politeness":
         wave_period = 60.0  # budget = 60/crawl_delay: 30..120 per host
     else:
@@ -270,9 +251,7 @@ def run_crawl_wave_stages(spark, inputs: dict) -> dict:
 
     t0 = time.perf_counter()
     candidates = filter_new_urls(
-        spark, with_url_identity(inputs["frontier"]), inputs["seen"],
-        inputs["blooms"] if USE_BLOOM_PREFILTER else None, N_SEEN_BUCKETS,
-    )
+        spark, with_url_identity(inputs["frontier"]), inputs["seen"])
     candidates.count()
     out["cum_seen_antijoin"] = time.perf_counter() - t0
 
@@ -280,9 +259,7 @@ def run_crawl_wave_stages(spark, inputs: dict) -> dict:
     t0 = time.perf_counter()
     scheduled = schedule_wave(
         filter_new_urls(
-            spark, with_url_identity(inputs["frontier"]), inputs["seen"],
-            inputs["blooms"] if USE_BLOOM_PREFILTER else None, N_SEEN_BUCKETS,
-        ),
+            spark, with_url_identity(inputs["frontier"]), inputs["seen"]),
         inputs["budgets"], wave_period, Throttle("CONCURRENT", 1e18),
         bounds=inputs["bounds"],
     )
@@ -292,9 +269,7 @@ def run_crawl_wave_stages(spark, inputs: dict) -> dict:
     t0 = time.perf_counter()
     scheduled = schedule_wave(
         filter_new_urls(
-            spark, with_url_identity(inputs["frontier"]), inputs["seen"],
-            inputs["blooms"] if USE_BLOOM_PREFILTER else None, N_SEEN_BUCKETS,
-        ),
+            spark, with_url_identity(inputs["frontier"]), inputs["seen"]),
         inputs["budgets"], wave_period, Throttle("CONCURRENT", 1e18),
         bounds=inputs["bounds"],
     )

@@ -108,7 +108,7 @@ def wave_stages() -> None:
 
 def wave_plan(out_path: str) -> None:
     """Capture the full crawl-wave plan (the fetched join, pre-count)."""
-    from bench import USE_BLOOM_PREFILTER, N_SEEN_BUCKETS, prepare_crawl_wave
+    from bench import prepare_crawl_wave
     from swspark.scheduler import Throttle, salted_repartition, schedule_wave
     from swspark.seen import filter_new_urls, with_url_identity
 
@@ -116,10 +116,7 @@ def wave_plan(out_path: str) -> None:
     n_urls = int(os.environ.get("SPARK_GRAFT_BENCH_URLS", "5000000"))
     inputs = prepare_crawl_wave(spark, n_urls)
     frontier = with_url_identity(inputs["frontier"])
-    candidates = filter_new_urls(
-        spark, frontier, inputs["seen"],
-        inputs["blooms"] if USE_BLOOM_PREFILTER else None, N_SEEN_BUCKETS,
-    )
+    candidates = filter_new_urls(spark, frontier, inputs["seen"])
     wave_period = max(1.0, n_urls / 2000.0)
     scheduled = schedule_wave(
         candidates, inputs["budgets"], wave_period,

@@ -7,7 +7,7 @@ pipeline over Common-Crawl-style page tables:
 - sitemap expansion (sitemapindex/urlset, gzip)          -> swspark.sitemaps
 - robots.txt politeness (RFC 9309 subset, Crawl-delay)   -> swspark.robots
 - URL canonicalization + hashing                         -> swspark.urlnorm
-- Bloom URL-seen set + exact anti-join dedup             -> swspark.seen
+- exact URL-seen set (bucketed anti-join dedup)          -> swspark.seen
 - per-host politeness budgets + window-rank scheduling   -> swspark.scheduler
 - frontier  |x|  pages fetch simulation + metrics        -> swspark.fetch
 - HTML DOM + CSS-selector extraction (Arrow UDF)         -> swspark.extract

@@ -18,9 +18,9 @@ functions sharing one ``CrawlRun``:
       fetch_extract  frontier |x| pages (A1) -> Arrow UDF: records +
                      sendUrl discovery (A32/A22), persisted, once a page
       commit_outputs records, trace, errors snapshots
-      commit_seen    seen delta; its hashes OR'd into the driver's
-                     Bloom filters (A30 flush)
-      commit_frontier discovered URLs past robots + seen -> frontier
+      commit_seen    seen delta (A30 flush)
+      commit_frontier discovered URLs past robots + the exact seen
+                     anti-joins -> frontier
                      op-log delta; every K waves seen and frontier
                      compact into bucketed bases
     until the schedulable frontier is empty or a wave budget is hit.
@@ -64,15 +64,7 @@ from swspark.extract.udf import (
 from swspark.fetch import fetch_pages
 from swspark.robots import build_robots_rules_table, robots_filter_distributed
 from swspark.scheduler import Throttle, salted_repartition, schedule_wave
-from swspark.seen import (
-    BloomFilter,
-    add_hashes,
-    bloom_geometry,
-    build_filter_shards,
-    filter_new_urls,
-    load_shards,
-    with_url_identity,
-)
+from swspark.seen import filter_new_urls, with_url_identity
 from swspark.sitemaps import expand_sitemaps
 from swspark.tables import SnapshotTable
 
@@ -97,8 +89,9 @@ SALT_BUCKETS = 8
 # at worst unbalances the hot host's buckets for K-1 waves, so the
 # steady-state wave skips the frontier-wide sampling scan)
 RESAMPLE_BOUNDS_WAVES = 8
-# Bloom seen-filter buckets (seen.bucket_of); one filter per bucket
-N_SEEN_BUCKETS = 16
+# perfbench's --trace 1 rebinds this name (its trace reads it from this
+# module's __dict__); nothing calls it. Benchmark v2 removes it.
+build_filter_shards = None
 
 
 @dataclass
@@ -112,12 +105,6 @@ class CrawlConfig:
     throttle: Throttle = field(default_factory=Throttle)
     max_waves: int = 100
     max_urls_per_wave: int | None = None
-    # EXPECTED total frontier cardinality: the Bloom filter geometry
-    # derives from it (seen.bloom_geometry; the default maps to 2^20
-    # bits and k=7 per bucket). Too small a value saturates the filters
-    # and the fast path degrades to 'everything is a suspect' (correct
-    # but useless)
-    expected_total_urls: int = 1_600_000
     # state-table layout: every K waves the seen + frontier tables are
     # compacted into ONE hash-bucketed snapshot (bucket keys = the
     # join keys), so (a) the per-wave frontier commit is a wave-sized
@@ -145,8 +132,7 @@ class CrawlConfig:
 
 
 class CrawlState:
-    """Warehouse handles: one SnapshotTable per state relation. The
-    Bloom filters have no table: they are rebuilt from ``seen``."""
+    """Warehouse handles: one SnapshotTable per state relation."""
 
     def __init__(self, warehouse: str):
         self.frontier = SnapshotTable(os.path.join(warehouse, "frontier"))
@@ -160,8 +146,8 @@ class CrawlState:
 @dataclass
 class CrawlRun:
     """One ``crawl`` call's state, shared by its stages: the warehouse,
-    the robots rules table, the in-memory Bloom filters, the wave
-    index, the wave's caches and the running totals."""
+    the robots rules table, the wave index, the wave's caches and the
+    running totals."""
 
     spark: SparkSession
     config: CrawlConfig
@@ -169,7 +155,6 @@ class CrawlRun:
     # distributed robots: (host, crawl_delay, sitemaps, rules) by host
     rules_table: DataFrame
     wave: int = 0
-    blooms: dict[int, BloomFilter] = field(default_factory=dict)
     rank_bounds: object = None  # hot-host bucket boundaries
     n_schedules: int = 0  # schedule() calls: the bounds resample every K
     # the wave's caches: a raising wave (a fail policy) leaves them to
@@ -182,9 +167,6 @@ class CrawlRun:
     def __post_init__(self) -> None:
         c = self.config
         self.spec = c.spec if isinstance(c.spec, ExtractionSpec) else SPECS[c.spec]
-        self.bloom_bits, self.bloom_k = bloom_geometry(
-            c.expected_total_urls, N_SEEN_BUCKETS
-        )
         # state-table layout: bucket keys ARE the join keys, so the
         # discovery anti-join and resume reconstruction stream the
         # compacted base straight from its bucket files (no shuffle)
@@ -307,9 +289,8 @@ def _release(caches: list[DataFrame]) -> None:
 def open_crawl(run: CrawlRun, seeds: DataFrame, sitemaps: DataFrame,
                accept, resume: bool) -> None:
     """Stage open: a resumed crawl rolls every table back to the
-    frontier's committed ``next_wave`` and rebuilds its Bloom filters
-    from ``seen``; a fresh one commits the seeded frontier and the
-    sitemap errors."""
+    frontier's committed ``next_wave``; a fresh one commits the seeded
+    frontier and the sitemap errors."""
     spark, state = run.spark, run.state
     if resume and state.frontier.exists():
         run.wave = state.frontier.manifest()["lineage"]["next_wave"]
@@ -319,13 +300,6 @@ def open_crawl(run: CrawlRun, seeds: DataFrame, sitemaps: DataFrame,
         for tbl in (state.records, state.trace, state.errors, state.seen,
                     state.discovered):
             tbl.rollback_to_wave_before(run.wave)
-        if state.seen.exists():
-            # the filters are a pure function of seen (a Bloom filter of
-            # a union is the OR of its parts'), so they are never stored
-            run.blooms = load_shards(build_filter_shards(
-                state.seen.read(spark), N_SEEN_BUCKETS,
-                fixed_bits=run.bloom_bits, fixed_k=run.bloom_k,
-            ))
         return
     # the spec's acceptUrl always gates sitemap URLs, like
     # `sws crawl -s script.lua` (crawler.rs:92-96,123-125)
@@ -496,8 +470,7 @@ def commit_outputs(run: CrawlRun, scheduled: DataFrame, rec: DataFrame,
 
 def commit_seen(run: CrawlRun, scheduled: DataFrame) -> DataFrame:
     """Stage commit seen: attempted URLs count as seen (404s are not
-    retried forever, matching "scheduled+fetched" accounting), and the
-    wave's url hashes are OR'd into the driver's Bloom filters.
+    retried forever, matching "scheduled+fetched" accounting).
     Returns the seen delta."""
     spark, c, state, wave = run.spark, run.config, run.state, run.wave
     seen_delta = scheduled.select("url_hash", "url_canon", "url", F.lit(wave).alias("wave"))
@@ -513,10 +486,6 @@ def commit_seen(run: CrawlRun, scheduled: DataFrame) -> DataFrame:
         # them for recrawl expiry, and crash-rollback needs the
         # previous wave's manifest as its anchor)
         state.seen.expire_snapshots(max(c.snapshot_keep_last, c.compact_every_waves + 2))
-    # one Arrow collect of the cached schedule's hashes (wave-sized:
-    # 8 bytes a URL); resume rebuilds the same bits from seen
-    hashes = scheduled.select("url_hash").toPandas()["url_hash"].to_numpy(dtype="int64")
-    add_hashes(run.blooms, hashes, N_SEEN_BUCKETS, run.bloom_bits, run.bloom_k)
     return seen_delta
 
 
@@ -533,12 +502,9 @@ def commit_frontier(run: CrawlRun, disc: DataFrame, seen_delta: DataFrame,
         _frontier_rows(disc.select(F.col("discovered_url").alias("url")), wave + 1),
         run.rules_table,
     )
-    # split read: Bloom-positive suspects take a shuffle-free sort-merge
-    # anti-join against the bucketed base + broadcast anti-joins
-    # against the recent wave deltas
-    disc_new = filter_new_urls(
-        spark, disc_new, state.seen.read_split(spark), run.blooms, N_SEEN_BUCKETS,
-    )
+    # split read: a shuffle-free sort-merge anti-join against the
+    # bucketed base + broadcast anti-joins against the recent wave deltas
+    disc_new = filter_new_urls(spark, disc_new, state.seen.read_split(spark))
     state.discovered.commit(
         disc.select(F.lit(wave).alias("wave"), "url", "discovered_url"),
         mode="append", lineage={"wave": wave}, count_rows=True,

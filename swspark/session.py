@@ -90,7 +90,7 @@ def get_spark(
         # ~30 empty scan tasks, pure scheduling overhead. Small-input
         # parallelism comes from file layout instead: the fixture
         # corpus is written as one file per core, guide §6.)
-        # Arrow is the hot path for every extraction/robots/bloom UDF.
+        # Arrow is the hot path for every extraction/robots UDF.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # Driver-side collects are tiny (manifests, traces); keep results small.

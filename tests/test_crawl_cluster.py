@@ -1,10 +1,10 @@
 """VERDICT r4 #5: one full crawl() wave loop on ``local-cluster[2,2]``
 — two separate executor JVMs with their own Python worker pools — so
 the whole driver (sitemap expansion, distributed rank, fetch join,
-broadcast Bloom probe, op-log commits) is proven outside one JVM,
+seen anti-joins, op-log commits) is proven outside one JVM,
 including a resume after a HARD process kill (os._exit, no graceful
-spark.stop, no atexit) mid-crawl, which rebuilds the Bloom filters
-from the committed seen table.
+spark.stop, no atexit) mid-crawl, which resumes from the committed
+tables alone.
 """
 
 import json

@@ -461,7 +461,11 @@ def test_frontier_plan_bounded_across_waves(
     frontier's analyzed plan does not grow with the wave index: 35
     wiki URLs at 4 per wave run 9 fetch waves across the default
     wave-7 compaction, and no wave's plan outgrows wave 1's (wave 0
-    is a bare base scan)."""
+    is a bare base scan).
+
+    The discovery seen check runs no Python: every wave's
+    ``filter_new_urls`` plan holds exactly the Python eval nodes of its
+    candidates (the robots match), none over the seen scans."""
     from swspark import driver
     from swspark.scheduler import Throttle
 
@@ -473,13 +477,37 @@ def test_frontier_plan_bounded_across_waves(
         sizes.append(len(tree.splitlines()))
         return real(frontier, *args, **kwargs)
 
+    def python_evals(df):
+        def walk(plan):
+            if plan.nodeName() == "AdaptiveSparkPlan":
+                plan = plan.executedPlan()
+            yield plan.nodeName()
+            kids = plan.children()
+            for i in range(kids.size()):
+                yield from walk(kids.apply(i))
+
+        plan = df._jdf.queryExecution().executedPlan()
+        return sorted(n for n in walk(plan) if n in ("ArrowEvalPython", "BatchEvalPython"))
+
+    evals = []
+    real_filter = driver.filter_new_urls
+
+    def filter_spy(spark, candidates, *args, **kwargs):
+        out = real_filter(spark, candidates, *args, **kwargs)
+        evals.append((python_evals(candidates), python_evals(out)))
+        return out
+
     monkeypatch.setattr(driver, "schedule_wave", spy)
+    monkeypatch.setattr(driver, "filter_new_urls", filter_spy)
     _, totals = run_crawl(
         spark, tables, "wiki_pages", tmp_path / "wbound", "fandom",
         throttle=Throttle("PER_SECOND", 0.4),
     )
     assert totals["waves"] >= 9, totals
     assert max(sizes[1:]) <= sizes[1], sizes
+    assert len(evals) == totals["waves"]
+    for cand, out in evals:
+        assert out == cand, evals
 
 
 def _cached_plans(spark):

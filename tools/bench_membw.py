@@ -22,7 +22,7 @@ fully across workers:
 - ``sort``    : np.sort over a 64 MiB int64 array — the sort-merge
                 join / window-rank kernel shape.
 - ``gather``  : random-index gather from a 512 MiB table — hash-probe
-                / bloom-lookup shape (latency+bandwidth bound).
+                shape (latency+bandwidth bound).
 
 Each worker times 3 back-to-back windows; the aggregate for a level is
 the best window-wise sum (steal noise only ever deflates a window).

@@ -16,8 +16,8 @@ allocation. The JVM sees the affinity mask (availableProcessors),
 so GC/JIT thread pools size themselves to the budget too.
 
 Each parallelism level runs in its own subprocess so the JVMs are
-fully independent. Per-stage attribution (identity/hash -> bloom +
-exact anti-join -> window rank -> fetch join) is recorded once per
+fully independent. Per-stage attribution (identity/hash -> exact
+anti-join -> window rank -> fetch join) is recorded once per
 level from cumulative stage timings. Usage:
 
     python tools/bench_scaling.py [n_urls]        # orchestrate

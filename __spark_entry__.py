@@ -899,7 +899,7 @@ def q_crawl_wave(spark: SparkSession, sf_dir: str) -> DataFrame:
             kind == "URLSET", url.contains("term=")
         ).otherwise(F.lit(True)),
     )
-    return CrawlState(wh).trace.read(spark).select(
+    return CrawlState(wh).seen.read(spark).select(
         F.col("wave").cast("long").alias("wave"),
         "host",
         "url",

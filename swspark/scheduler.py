@@ -429,12 +429,6 @@ def _order_cols():
     )
 
 
-def rank_frontier(frontier: DataFrame, host_col: str = "host") -> DataFrame:
-    """Deterministic per-host rank (the core scheduling operator)."""
-    w = Window.partitionBy(host_col).orderBy(*_order_cols())
-    return frontier.withColumn("rank", F.row_number().over(w))
-
-
 def schedule_wave(
     frontier: DataFrame,
     host_budgets: DataFrame,
@@ -442,7 +436,6 @@ def schedule_wave(
     throttle: Throttle = Throttle(),
     max_urls_per_wave: int | None = None,
     host_col: str = "host",
-    pre_salt: int = 16,
     strategy: str = "distributed",
     n_buckets: int | None = None,
     boundary_source: DataFrame | None = None,
@@ -463,7 +456,7 @@ def schedule_wave(
     Skew (the north rule's hot registered domain): a naive per-host
     window makes a hot domain's rank ONE task — a serial sort that
     caps scaling at any cluster size (measured: 0.45 stage efficiency
-    8->32 cores, BENCH.md r4). ``strategy`` picks the cure:
+    8->32 cores, BENCH.md r4). ``strategy`` picks the rank:
 
     - "distributed" (default): sample boundary tuples on the order
       key (from ``boundary_source`` if given — any cheap superset
@@ -474,9 +467,11 @@ def schedule_wave(
       Exact for any priority / timestamp / url values (the bucket
       key is a monotone coarsening; ties merge buckets, never
       reorder).
-    - "two_phase": the r2-r4 salted pre-rank (kept for A/B): exact,
-      but its final window re-sorts each host in one task — the
-      measured Amdahl term the distributed strategy removes.
+    - any other value (e.g. "two_phase"): the exact reference — one
+      plain per-host ``row_number`` window over the schedule order,
+      cut at the budget (rank_frontier_distributed with no bounds).
+      Each host sorts in one task; tests and the benchmark compare
+      the distributed rank against it.
 
     Both produce byte-identical schedules (golden tests pin it).
     """
@@ -498,36 +493,23 @@ def schedule_wave(
             ),
         ).drop("backoff_k")
 
-    if strategy == "distributed":
-        if bounds is None:
-            if n_buckets is None:
-                n_buckets = default_n_buckets(frontier.sparkSession)
-            # boundaries only steer balance, never results, so a
-            # caller may pass ``bounds`` sampled on an earlier wave
-            # (the driver resamples every K waves): stale bounds at
-            # worst unbalance the hot host's buckets for a few waves
-            bounds = sample_order_bounds(
-                boundary_source if boundary_source is not None else frontier,
-                n_buckets,
-                approx_count=approx_count,
-            )
-        picked = rank_frontier_distributed(
-            base, bounds, host_col=host_col, budget_col="_budget"
-        ).drop("crawl_delay", "_budget")
-    else:
-        salt = F.pmod(F.xxhash64(F.col("url")), F.lit(pre_salt))
-        w1 = Window.partitionBy(F.col(host_col), salt).orderBy(*_order_cols())
-        pre = (
-            base.withColumn("_r1", F.row_number().over(w1))
-            .where(F.col("_r1") <= F.col("_budget"))
-            .drop("_r1")
+    if strategy != "distributed":
+        bounds = HostBounds({})
+    elif bounds is None:
+        if n_buckets is None:
+            n_buckets = default_n_buckets(frontier.sparkSession)
+        # boundaries only steer balance, never results, so a caller
+        # may pass ``bounds`` sampled on an earlier wave (the driver
+        # resamples every K waves): stale bounds at worst unbalance
+        # the hot host's buckets for a few waves
+        bounds = sample_order_bounds(
+            boundary_source if boundary_source is not None else frontier,
+            n_buckets,
+            approx_count=approx_count,
         )
-        w2 = Window.partitionBy(host_col).orderBy(*_order_cols())
-        picked = (
-            pre.withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= F.col("_budget"))
-            .drop("crawl_delay", "_budget")
-        )
+    picked = rank_frontier_distributed(
+        base, bounds, host_col=host_col, budget_col="_budget"
+    ).drop("crawl_delay", "_budget")
     if max_urls_per_wave is not None:
         # deterministic global cap: favor low rank (fair across
         # hosts), url tiebreak. orderBy+limit compiles to a

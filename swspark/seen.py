@@ -5,9 +5,11 @@ twice if two sitemaps or sendUrl repeat it (verified absence in
 crates/sws-crawler/; SURVEY.md §2 Part B). The north rule introduces
 one for 10^10-URL scale:
 
-- exact truth: a ``seen(url_hash, url_canon, url, wave)`` table,
-  compacted every K waves into a base hash-bucketed on the join keys
-  (storage-partitioned, so the anti-join never shuffles the big side);
+- exact truth: a ``seen(url_hash, url_canon, url, host, rank, wave)``
+  table, compacted every K waves into a base hash-bucketed on the join
+  keys (storage-partitioned, so the anti-join never shuffles the big
+  side). It is the crawl's one wave log: each wave appends its
+  schedule, so ``(wave, host, url, rank)`` is the crawl-order trace;
 - no deletion path: the seen table is append-only; re-crawl resurrects
   the rows a past wave committed (read back per wave through
   ``SnapshotTable.read_wave_range``) without removing them from the set.

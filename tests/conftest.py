@@ -17,3 +17,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def crawl_trace(spark, state):
+    """A crawl's crawl-order trace: ``seen``, the wave log, as
+    (wave, host, url, rank). ``state`` is the crawl's CrawlState."""
+    return state.seen.read(spark).select("wave", "host", "url", "rank")

@@ -1,4 +1,4 @@
-"""CLI (sws-cli parity), glob source, and Structured Streaming tests."""
+"""CLI (sws-cli parity) and glob source tests."""
 
 import glob
 import os
@@ -7,7 +7,6 @@ import sys
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from swspark.fixtures import ensure_corpus
 
@@ -100,67 +99,3 @@ def test_cli_crawl_end_to_end(corpus_dir, tmp_path):
     assert len(got) == len(exp)
     assert "crawl done" in r.stderr
 
-
-# --- streaming ---------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def pages_stream_dir(spark, corpus_dir, tmp_path_factory):
-    """Pages laid out as multiple parquet files (micro-batch food)."""
-    d = str(tmp_path_factory.mktemp("stream-in"))
-    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
-    pages.repartition(6).write.mode("overwrite").parquet(d)
-    return d
-
-
-def test_stream_extract_matches_batch(spark, corpus_dir, pages_stream_dir,
-                                      tmp_path):
-    from swspark.streaming import run_to_parquet, stream_extract, stream_pages
-
-    stream = stream_pages(spark, pages_stream_dir, max_files_per_trigger=2)
-    assert stream.isStreaming
-    rec, _urls, _errs = stream_extract(stream, "fulltext")
-    out = str(tmp_path / "out")
-    run_to_parquet(rec, out, str(tmp_path / "ckpt"))
-    got = spark.read.parquet(out)
-    exp = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
-    assert got.count() == exp.count()
-    # byte-identity through the streaming path too
-    j = got.alias("g").join(exp.alias("e"), "url").where(
-        F.col("g.text") != F.col("e.text")
-    )
-    assert j.count() == 0
-
-
-def test_stream_host_rates_watermark(spark, pages_stream_dir, tmp_path):
-    from swspark.streaming import run_to_parquet, stream_host_rates, stream_pages
-
-    stream = stream_pages(spark, pages_stream_dir)
-    rates = stream_host_rates(stream, window="1 day", watermark="2 days")
-    out = str(tmp_path / "rates")
-    run_to_parquet(rates, out, str(tmp_path / "ckpt"))
-    got = spark.read.parquet(out)
-    assert got.where(F.col("n_fetched") <= 0).count() == 0
-    hosts = {r.host for r in got.select("host").distinct().collect()}
-    assert any(h.startswith("news") for h in hosts)
-
-
-def test_stateful_host_budget_token_bucket(spark, pages_stream_dir, tmp_path):
-    """Token bucket: burst admits, then refill-per-batch caps later
-    micro-batches (limiter.rs:19-57 semantics in streaming state)."""
-    from swspark.streaming import (
-        run_to_parquet,
-        stateful_host_budget,
-        stream_pages,
-    )
-
-    stream = stream_pages(spark, pages_stream_dir, max_files_per_trigger=1)
-    admitted = stateful_host_budget(stream, refill_per_batch=3, burst=5)
-    out = str(tmp_path / "admit")
-    run_to_parquet(admitted, out, str(tmp_path / "ckpt"))
-    got = spark.read.parquet(out).toPandas()
-    assert set(got.admitted.unique()) <= {0, 1}
-    # per host: admissions bounded by burst + refills, and no URL lost
-    per_host = got.groupby("host").admitted.agg(["count", "sum"])
-    assert (per_host["sum"] <= per_host["count"]).all()
-    assert (per_host["sum"] > 0).all()

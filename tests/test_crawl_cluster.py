@@ -19,8 +19,10 @@ RUNNER = textwrap.dedent(
     """
     import json, os, sys
     sys.path.insert(0, {repo!r})
+    sys.path.insert(0, os.path.join({repo!r}, "tests"))
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
+    from conftest import crawl_trace
     from swspark.driver import CrawlConfig, CrawlState, crawl
     from swspark.fixtures import generate_corpus
 
@@ -50,10 +52,9 @@ RUNNER = textwrap.dedent(
           spark.createDataFrame(c.sitemaps),
           spark.createDataFrame(c.robots[["host", "body"]]),
           spark.createDataFrame(c.pages), accept=accept, resume=resume)
-    st = CrawlState(wh)
     rows = sorted(
         (int(r.wave), r.host, r.url, int(r.rank))
-        for r in st.trace.read(spark).collect()
+        for r in crawl_trace(spark, CrawlState(wh)).collect()
     )
     assert "local-cluster" in spark.conf.get("spark.master")
     print("TRACE " + json.dumps(rows), flush=True)

@@ -2,11 +2,14 @@
 crawl-order traces, seen-set dedup law, checkpoint/resume equality."""
 
 import math
+import os
+import sys
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import crawl_trace
 from swspark.driver import CrawlConfig, CrawlState, crawl
 from swspark.fixtures import generate_corpus
 
@@ -74,7 +77,7 @@ def test_dict_crawl_golden_trace_and_dedup(spark, corpus, tables, tmp_path):
         accept=accept_term,
     )
     state = CrawlState(str(tmp_path / "w1"))
-    trace = state.trace.read(spark).toPandas()
+    trace = crawl_trace(spark, state).toPandas()
 
     # dedup law: no URL scheduled twice despite 5% duplicate sitemap
     # entries (FIXTURES.md §2)
@@ -121,8 +124,12 @@ def test_wiki_crawl_discovery_and_budgets(spark, corpus, tables, tmp_path):
     cfg, totals = run_crawl(
         spark, tables, "wiki_pages", tmp_path / "w2", "fandom"
     )
+    # one wave log: the schedule is committed once, to seen
+    assert sorted(os.listdir(tmp_path / "w2")) == [
+        "discovered", "errors", "frontier", "records", "seen",
+    ]
     state = CrawlState(str(tmp_path / "w2"))
-    trace = state.trace.read(spark).toPandas()
+    trace = crawl_trace(spark, state).toPandas()
     assert trace.url.is_unique
 
     # wave 0 = the 7 faction seeds; creatures appear only later
@@ -142,12 +149,26 @@ def test_wiki_crawl_discovery_and_budgets(spark, corpus, tables, tmp_path):
     assert len(rec) == len(corpus.golden_fandom)
 
 
-def test_news_multihost_budgets(spark, corpus, tables, tmp_path):
+def test_news_multihost_budgets(spark, corpus, tables, tmp_path, monkeypatch):
+    from swspark import driver
+
+    callers = []
+    real = driver.robots_filter_distributed
+
+    def counting(*args, **kwargs):
+        callers.append(sys._getframe(1).f_code.co_name)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(driver, "robots_filter_distributed", counting)
     cfg, totals = run_crawl(
         spark, tables, "news_sitemaps", tmp_path / "w3", "fulltext"
     )
+    # the news pages discover nothing: no wave runs the discovery
+    # stage's robots match, only the seeding does
+    assert totals["discovered"] == 0 and totals["waves"] >= 1, totals
+    assert callers == ["open_crawl"], callers
     state = CrawlState(str(tmp_path / "w3"))
-    trace = state.trace.read(spark).toPandas()
+    trace = crawl_trace(spark, state).toPandas()
     delays = dict(zip(corpus.robots.host, corpus.robots.crawl_delay))
     news_urls = {
         h: [u for u in corpus.pages.url if h in u]
@@ -164,7 +185,8 @@ def test_news_multihost_budgets(spark, corpus, tables, tmp_path):
 
 
 def test_resume_equals_uninterrupted(spark, corpus, tables, tmp_path):
-    """Kill after wave 2, resume -> identical records/seen/trace."""
+    """Kill after wave 2, resume -> identical records and seen (the
+    wave log, so the crawl-order trace too)."""
     _, t_full = run_crawl(
         spark, tables, "wiki_pages", tmp_path / "full", "fandom"
     )
@@ -183,7 +205,6 @@ def test_resume_equals_uninterrupted(spark, corpus, tables, tmp_path):
     sf = CrawlState(str(tmp_path / "full"))
     sp = CrawlState(str(tmp_path / "part"))
     for name, key in (
-        ("trace", ["wave", "host", "url"]),
         ("seen", ["url_canon"]),
         ("records", ["url", "creature"]),
     ):
@@ -196,7 +217,7 @@ def test_compaction_invariant_and_resume_across_boundary(
     spark, corpus, tables, tmp_path
 ):
     """Compaction is pure maintenance: with compact_every_waves=2 the
-    trace/seen/records must be byte-identical to the default-cadence
+    seen (the wave log) must be byte-identical to the default-cadence
     run, and a kill-after-wave-3 resume (which reconstructs the
     frontier from bucketed base + op-log deltas ACROSS a compaction
     boundary) must replay to the same state."""
@@ -224,17 +245,12 @@ def test_compaction_invariant_and_resume_across_boundary(
         tables["robots"], tables["pages"], accept=accept_term, resume=True,
     )
     sf = CrawlState(str(tmp_path / "cfull"))
+    key = ["url_canon", "wave"]
+    a = sf.seen.read(spark).toPandas().sort_values(key).reset_index(drop=True)
     for other in ("ck", "cpart"):
         so = CrawlState(str(tmp_path / other))
-        for name, key in (
-            ("trace", ["wave", "host", "url"]),
-            ("seen", ["url_canon", "wave"]),
-        ):
-            a = (getattr(sf, name).read(spark).toPandas()
-                 .sort_values(key).reset_index(drop=True))
-            b = (getattr(so, name).read(spark).toPandas()
-                 .sort_values(key).reset_index(drop=True))
-            pd.testing.assert_frame_equal(a, b[a.columns.tolist()], obj=f"{other}.{name}")
+        b = so.seen.read(spark).toPandas().sort_values(key).reset_index(drop=True)
+        pd.testing.assert_frame_equal(a, b[a.columns.tolist()], obj=f"{other}.seen")
     # the compacting run really did compact: current seen snapshot is
     # a bucketed base (+ maybe deltas), not a pure append chain
     assert CrawlState(str(tmp_path / "ck")).seen.base_version() is not None
@@ -243,7 +259,7 @@ def test_compaction_invariant_and_resume_across_boundary(
 def test_resume_mid_wave_crash_reconciles(spark, corpus, tables, tmp_path):
     """A crash BETWEEN a wave's table commits and the frontier pointer
     commit must not double-append on resume: reconciliation rolls
-    records/trace/seen/... back to the frontier's wave, then replays."""
+    records/seen/... back to the frontier's wave, then replays."""
     _, t_full = run_crawl(
         spark, tables, "wiki_pages", tmp_path / "full2", "fandom"
     )
@@ -256,24 +272,19 @@ def test_resume_mid_wave_crash_reconciles(spark, corpus, tables, tmp_path):
     state = CrawlState(str(tmp_path / "part2"))
     next_wave = state.frontier.manifest()["lineage"]["next_wave"]
 
-    # simulate the torn wave: records/trace/seen got their wave-N
-    # commits, the frontier pointer did not
+    # simulate the torn wave: records/seen got their wave-N commits,
+    # the frontier pointer did not
     rec_g = (
         state.records.read(spark).limit(1)
         .withColumn("url", F.lit("CRASH"))
         .withColumn("wave", F.lit(next_wave))
     )
     state.records.commit(rec_g, mode="append", lineage={"wave": next_wave})
-    state.trace.commit(
-        state.trace.read(spark).limit(1)
-        .withColumn("wave", F.lit(next_wave))
-        .withColumn("url", F.lit("CRASH")),
-        mode="append", lineage={"wave": next_wave},
-    )
     state.seen.commit(
         spark.createDataFrame(
-            [(123456789, "CRASH", "CRASH", next_wave)],
-            "url_hash long, url_canon string, url string, wave int",
+            [(123456789, "CRASH", "CRASH", "CRASH", 1, next_wave)],
+            "url_hash long, url_canon string, url string, host string, "
+            "rank int, wave int",
         ),
         mode="append", lineage={"wave": next_wave},
     )
@@ -287,7 +298,6 @@ def test_resume_mid_wave_crash_reconciles(spark, corpus, tables, tmp_path):
     sf = CrawlState(str(tmp_path / "full2"))
     sp = CrawlState(str(tmp_path / "part2"))
     for name, key in (
-        ("trace", ["wave", "host", "url"]),
         ("seen", ["url_canon"]),
         ("records", ["url", "creature"]),
     ):
@@ -313,7 +323,7 @@ def test_recrawl_aging(spark, corpus, tables, tmp_path):
         tables["robots"], tables["pages"],
     )
     state = CrawlState(str(tmp_path / "w5"))
-    trace = state.trace.read(spark).toPandas()
+    trace = crawl_trace(spark, state).toPandas()
     assert sorted(trace.wave.unique().tolist()) == [0, 2, 4]
     per_url = trace.groupby("url").wave.apply(lambda s: sorted(s.tolist()))
     assert all(v == [0, 2, 4] for v in per_url), per_url.to_dict()
@@ -350,7 +360,7 @@ def test_recrawl_resurrects_raw_url(spark, corpus, tables, tmp_path):
     crawl(spark, cfg, str(tmp_path / "w5raw"), seeds, tables["sitemaps"],
           tables["robots"], pages)
     state = CrawlState(str(tmp_path / "w5raw"))
-    trace = state.trace.read(spark).toPandas()
+    trace = crawl_trace(spark, state).toPandas()
     assert sorted(trace.wave.tolist()) == [0, 2]
     assert set(trace.url) == {raw}  # raw form both times
     errs = state.errors.read(spark).where(F.col("stage") == "download")
@@ -386,7 +396,7 @@ def test_error_backoff_halves_budget(spark, corpus, tables, tmp_path):
         tables["robots"], tables["pages"],
     )
     state = CrawlState(str(tmp_path / "w6"))
-    trace = state.trace.read(spark).toPandas()
+    trace = crawl_trace(spark, state).toPandas()
     sizes = trace.groupby("wave").size().to_dict()
     assert sizes == {0: 4, 1: 2, 2: 4}, sizes
     errs = state.errors.read(spark).toPandas()
@@ -406,7 +416,7 @@ def test_robots_disallow_enforced(spark, corpus, tables, tmp_path):
         tables["robots"], tables["pages"],
     )
     state = CrawlState(str(tmp_path / "w4"))
-    urls = [r.url for r in state.trace.read(spark).select("url").collect()]
+    urls = [r.url for r in crawl_trace(spark, state).select("url").collect()]
     assert urls == ["https://news0.example.test/articles/000001"]
 
 
@@ -449,7 +459,7 @@ def test_idle_resurrection_committed_to_oplog(spark, corpus, tables, tmp_path):
                        recrawl_after_waves=2, max_waves=4)
     crawl(spark, cfg3, wh, seeds, tables["sitemaps"], tables["robots"],
           tables["pages"], resume=True)
-    trace = state.trace.read(spark).toPandas()
+    trace = crawl_trace(spark, state).toPandas()
     per_url = trace.groupby("url").wave.apply(lambda s: sorted(s.tolist()))
     assert all(v == [0, 3] for v in per_url), per_url.to_dict()
 
@@ -463,7 +473,7 @@ def test_frontier_plan_bounded_across_waves(
     wave-7 compaction, and no wave's plan outgrows wave 1's (wave 0
     is a bare base scan).
 
-    The discovery seen check runs no Python: every wave's
+    The discovery seen check runs no Python: every discovering wave's
     ``filter_new_urls`` plan holds exactly the Python eval nodes of its
     candidates (the robots match), none over the seen scans."""
     from swspark import driver
@@ -505,7 +515,9 @@ def test_frontier_plan_bounded_across_waves(
     )
     assert totals["waves"] >= 9, totals
     assert max(sizes[1:]) <= sizes[1], sizes
-    assert len(evals) == totals["waves"]
+    # the seen check runs once per wave that discovered something
+    disc = CrawlState(str(tmp_path / "wbound")).discovered.read(spark)
+    assert len(evals) == disc.select("wave").distinct().count() > 0
     for cand, out in evals:
         assert out == cand, evals
 

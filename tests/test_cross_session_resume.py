@@ -16,9 +16,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 RUNNER = textwrap.dedent(
     """
-    import json, sys
+    import json, os, sys
     sys.path.insert(0, {repo!r})
+    sys.path.insert(0, os.path.join({repo!r}, "tests"))
     from swspark.session import get_spark
+    from conftest import crawl_trace
     from swspark.driver import CrawlConfig, CrawlState, crawl
     from swspark.fixtures import generate_corpus
     from pyspark.sql import functions as F
@@ -35,10 +37,9 @@ RUNNER = textwrap.dedent(
           spark.createDataFrame(c.sitemaps),
           spark.createDataFrame(c.robots[["host", "body"]]),
           spark.createDataFrame(c.pages), accept=accept, resume=resume)
-    st = CrawlState(wh)
     rows = sorted(
         (int(r.wave), r.host, r.url, int(r.rank))
-        for r in st.trace.read(spark).collect()
+        for r in crawl_trace(spark, CrawlState(wh)).collect()
     )
     print("TRACE " + json.dumps(rows))
     spark.stop()

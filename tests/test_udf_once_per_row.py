@@ -13,6 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import crawl_trace
 from swspark.driver import CrawlConfig, CrawlState, crawl
 from swspark.extract.specs import load_spec_file
 from swspark.fixtures import DICT_HOST, generate_corpus
@@ -94,7 +95,7 @@ def test_each_page_scraped_and_each_loc_accepted_once(
     state = CrawlState(wh)
     assert totals["waves"] >= 2, totals
 
-    trace = state.trace.read(spark).toPandas()
+    trace = crawl_trace(spark, state).toPandas()
     fetched = set(trace.url) - set(corpus.missing_urls)
     scraped = _calls(log_dir, "scrap")
     assert set(scraped) == fetched

@@ -16,10 +16,11 @@ functions sharing one ``CrawlRun``:
       idle_wave      nothing schedulable: commit the resurrection,
                      stop at quiescence (A28) or wait for an expiry
       fetch_extract  frontier |x| pages (A1) -> Arrow UDF: records +
-                     sendUrl discovery (A32/A22), persisted, once a page
+                     sendUrl discovery (A32/A22), persisted, once a page;
+                     the sendUrl edges counted on the cache
       commit_outputs records, errors
       commit_seen    seen delta = the wave's schedule log (A30 flush)
-      commit_frontier discovered URLs past robots + the exact seen
+      commit_frontier sendUrl targets past robots + the exact seen
                      anti-joins -> frontier
                      op-log delta; every K waves seen and frontier
                      compact into bucketed bases
@@ -43,7 +44,7 @@ import os
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -89,6 +90,9 @@ SALT_BUCKETS = 8
 # at worst unbalances the hot host's buckets for K-1 waves, so the
 # steady-state wave skips the frontier-wide sampling scan)
 RESAMPLE_BOUNDS_WAVES = 8
+# snapshots retained at expiry after each compaction (>=2 keeps the
+# pre-compaction snapshot for time travel)
+SNAPSHOT_KEEP_LAST = 2
 # perfbench's --trace 1 rebinds this name (its trace reads it from this
 # module's __dict__); nothing calls it. Benchmark v2 removes it.
 build_filter_shards = None
@@ -112,13 +116,9 @@ class CrawlConfig:
     # anti-join reads the accumulated base WITHOUT shuffling it
     compact_every_waves: int = 8
     n_storage_buckets: int = 32
-    # snapshots retained at expiry after each compaction (>=2 keeps
-    # the pre-compaction snapshot for time travel; 1 reclaims all)
-    snapshot_keep_last: int = 2
     on_dl_error: str = "skip"  # OnError::{Fail, SkipAndLog} (config.rs:81-86)
     on_xml_error: str = "skip"
     on_scrap_error: str = "skip"
-    robot_url: str | None = None  # explicit robots override (config.rs:44-46)
     # recrawl aging: a URL fetched in wave w becomes schedulable again
     # in wave w + recrawl_after_waves (None = fetch-once, the
     # reference's semantics). Resurrected rows carry a synthetic
@@ -138,7 +138,6 @@ class CrawlState:
         self.frontier = SnapshotTable(os.path.join(warehouse, "frontier"))
         self.seen = SnapshotTable(os.path.join(warehouse, "seen"))
         self.records = SnapshotTable(os.path.join(warehouse, "records"))
-        self.discovered = SnapshotTable(os.path.join(warehouse, "discovered"))
         self.errors = SnapshotTable(os.path.join(warehouse, "errors"))
         # perfbench's crawl_news check reads ``state.trace``; the crawl
         # trace is ``seen``. Benchmark v2 deletes this alias.
@@ -181,18 +180,19 @@ class CrawlRun:
 
 
 def _frontier_rows(df: DataFrame, wave: int, last_fetch_ts=None) -> DataFrame:
-    """Normalize a (url) DataFrame into frontier schema rows; a
-    resurrected row carries its synthetic ``last_fetch_ts`` column."""
+    """Normalize a (url) DataFrame into frontier schema rows, one per
+    canonical URL with its least raw form, whatever the input order
+    (the fetch joins pages on the raw string); a resurrected row
+    carries its synthetic ``last_fetch_ts`` column."""
     if last_fetch_ts is None:
         last_fetch_ts = F.lit(None).cast("timestamp")
-    out = with_url_identity(df.select("url"))
-    return (
-        out.withColumn("host", urlnorm.url_host(F.col("url")))
-        .withColumn("priority", F.lit(0))
-        .withColumn("last_fetch_ts", last_fetch_ts)
-        .withColumn("discovered_wave", F.lit(wave))
-        .dropDuplicates(["url_canon"])
-        .select(FRONTIER_SCHEMA.fieldNames())
+    keys = with_url_identity(df.select("url")).groupBy(*_FRONTIER_KEYS)
+    return keys.agg(F.min("url").alias("url")).select(
+        "url", "url_canon", "url_hash",
+        urlnorm.url_host(F.col("url")).alias("host"),
+        F.lit(0).alias("priority"),
+        last_fetch_ts.alias("last_fetch_ts"),
+        F.lit(wave).alias("discovered_wave"),
     )
 
 
@@ -216,9 +216,6 @@ def init_frontier(spark: SparkSession, config: CrawlConfig, seeds: DataFrame,
     if kind == "SITEMAPS":
         seed_sm = seeds.select(F.col("seed").alias("sitemap_url"))
     elif kind == "ROBOTS_TXT":
-        if config.robot_url is not None:
-            # crawler.rs:229-231 (tested in tests/validate.rs:3-38)
-            raise ValueError("Seed::RobotsTxt conflicts with an explicit robot config")
         hosts = seeds.select(
             urlnorm.url_host(F.col("seed")).alias("host")
         ).distinct()
@@ -299,7 +296,7 @@ def open_crawl(run: CrawlRun, seeds: DataFrame, sitemaps: DataFrame,
         # cross-table reconciliation: a crash between a wave's table
         # commits and the frontier pointer leaves orphan wave>=next
         # snapshots that the replayed wave would double-append
-        for tbl in (state.records, state.errors, state.seen, state.discovered):
+        for tbl in (state.records, state.errors, state.seen):
             tbl.rollback_to_wave_before(run.wave)
         return
     # the spec's acceptUrl always gates sitemap URLs, like
@@ -426,16 +423,21 @@ def idle_wave(run: CrawlRun, resurrected: DataFrame | None) -> bool:
 
 def fetch_extract(run: CrawlRun, scheduled: DataFrame, pages: DataFrame):
     """Stage fetch and extract: join the scheduled URLs to the pages
-    and extract them once (persisted: the records, errors, discovered
-    and frontier commits all read this cache). Returns (records,
-    discovered, errors labelled by stage, fetch observation)."""
+    and extract them once (persisted: the records, errors and frontier
+    commits all read this cache, and its first action counts the
+    sendUrl edges). Returns (records, discovered, errors labelled by
+    stage, the fetch and edge-count observations)."""
     wave = run.wave
     fetched, dl_errs, obs = fetch_pages(scheduled, pages, on_dl_error=run.config.on_dl_error)
     if spec_wants_context(run.spec):
         # ctx.robot() support: ride the host's rules-as-data onto the
         # pages (broadcast-joined; same table politeness uses)
         fetched = fetched.join(run.rules_table.select("host", "rules"), "host", "left")
-    extracted = with_extraction(fetched, run.spec).drop("html").persist()
+    # an error row's null urls array counts 0, whatever sizeOfNull says
+    n_edges = F.sum(F.when(F.col("_ex.urls").isNotNull(), F.size("_ex.urls")))
+    edge_obs = Observation()
+    extracted = with_extraction(fetched, run.spec).drop("html").observe(
+        edge_obs, F.coalesce(n_edges, F.lit(0)).alias("discovered")).persist()
     run.caches.append(extracted)
     rec, disc, scrap_errs = apply_extraction(extracted, run.spec)
     # download errors raise in fetch_pages under on_dl_error="fail"
@@ -448,7 +450,7 @@ def fetch_extract(run: CrawlRun, scheduled: DataFrame, pages: DataFrame):
     ).unionByName(scrap_errs.select(
         F.lit(wave).alias("wave"), "url", F.lit("scrape").alias("stage"), "error"
     ))
-    return rec.withColumn("wave", F.lit(wave)), disc, errs, obs
+    return rec.withColumn("wave", F.lit(wave)), disc, errs, (obs, edge_obs)
 
 
 def commit_outputs(run: CrawlRun, rec: DataFrame, errs: DataFrame) -> int:
@@ -482,26 +484,23 @@ def commit_seen(run: CrawlRun, scheduled: DataFrame) -> DataFrame:
         # manifest must outlive the next cycle (read_wave_range walks
         # them for recrawl expiry, and crash-rollback needs the
         # previous wave's manifest as its anchor)
-        state.seen.expire_snapshots(max(c.snapshot_keep_last, c.compact_every_waves + 2))
+        state.seen.expire_snapshots(max(SNAPSHOT_KEEP_LAST, c.compact_every_waves + 2))
     return seen_delta
 
 
 def commit_frontier(run: CrawlRun, disc: DataFrame, seen_delta: DataFrame,
                     resurrected: DataFrame | None, counts: dict, obs) -> None:
-    """Stage commit frontier: the discovered URLs (sendUrl feedback,
-    A22), counted on their write job, then the next frontier as a
-    wave-sized op-log DELTA (del = scheduled keys, add = new discovered
-    + resurrected rows), never an O(|frontier|) rewrite; every K waves
+    """Stage commit frontier: the next frontier as a wave-sized op-log
+    DELTA (del = scheduled keys, add = new sendUrl targets (A22) +
+    resurrected rows), never an O(|frontier|) rewrite; every K waves
     the fold becomes a new bucketed base. A wave that discovered
     nothing runs no robots match and no seen anti-join. ``counts``
-    (scheduled, errors) and the fetch observation go into the
-    lineage. Advances the wave."""
-    spark, c, state, wave = run.spark, run.config, run.state, run.wave
-    state.discovered.commit(
-        disc.select(F.lit(wave).alias("wave"), "url", "discovered_url"),
-        mode="append", lineage={"wave": wave}, count_rows=True,
-    )
-    n_disc = state.discovered.manifest()["lineage"]["n_rows"]
+    (scheduled, errors) and the observations (pages in and out, the
+    sendUrl edge count ``discovered``) go into the lineage. Advances
+    the wave."""
+    spark, state, wave = run.spark, run.state, run.wave
+    m = {k: v for o in obs for k, v in o.get.items()}
+    n_disc = m["discovered"]
     disc_new = None  # nothing discovered: no robots match, no anti-join
     if n_disc:
         disc_new = robots_filter_distributed(
@@ -511,10 +510,10 @@ def commit_frontier(run: CrawlRun, disc: DataFrame, seen_delta: DataFrame,
         # split read: a shuffle-free sort-merge anti-join against the
         # bucketed base + broadcast anti-joins against the recent deltas
         disc_new = filter_new_urls(spark, disc_new, state.seen.read_split(spark))
-    m = obs.get
     lineage = {"next_wave": wave + 1, "wave": wave, "scheduled": counts["scheduled"],
                "pages_in": m["pages_in"], "pages_out": m["pages_out"],
-               "errors": counts["errors"], "seen_version": state.seen.current_version()}
+               "errors": counts["errors"], "discovered": n_disc,
+               "seen_version": state.seen.current_version()}
     state.frontier.commit(_frontier_delta(seen_delta, disc_new, resurrected, wave),
                           mode="append", lineage=lineage)
     if run.compaction_due:
@@ -525,7 +524,7 @@ def commit_frontier(run: CrawlRun, disc: DataFrame, seen_delta: DataFrame,
             mode="overwrite", bucket=run.key_bucket,
             lineage=dict(lineage, compacted_through=wave),
         )
-        state.frontier.expire_snapshots(c.snapshot_keep_last)
+        state.frontier.expire_snapshots(SNAPSHOT_KEEP_LAST)
     t = run.totals
     t["waves"] += 1
     t["fetched"] += m["pages_out"]

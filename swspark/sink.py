@@ -7,10 +7,6 @@ modes Create/Append/Truncate. Here the sink is a distributed
 ``df.write.csv`` — per-partition streams replace the writer thread;
 ordering within the output is nondeterministic in both systems
 (crawler.rs:167 buffer_unordered).
-
-Records are also persisted as parquet (``write_parquet``) because
-parquet is the engine's native interchange for oracle checks and
-downstream waves.
 """
 
 from __future__ import annotations
@@ -42,10 +38,6 @@ def write_csv(
     if terminator is not None:
         w = w.option("lineSep", terminator)
     w.csv(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
 
 
 def _csv_writer(stream, delimiter: str, escape: str | None, terminator: str):

@@ -287,10 +287,10 @@ class SnapshotTable:
         return len(dropped)
 
     def _purge_orphans(self, versions: list[int]) -> None:
-        """Delete the manifests of ``versions`` and any data dirs only
-        they reference. Retained = union of data_dirs over every
-        OTHER manifest still on disk (covers the current ancestry and
-        any sibling chains)."""
+        """Delete the manifests of ``versions``, any data dirs only
+        they reference and the catalog tables of the bucketed ones.
+        Retained = union of data_dirs over every OTHER manifest still
+        on disk (covers the current ancestry and any sibling chains)."""
         import shutil
 
         drop = set(versions)
@@ -298,9 +298,14 @@ class SnapshotTable:
         for u in self._all_versions():
             if u not in drop:
                 retained.update(self.manifest(u)["data_dirs"])
-        doomed: set[str] = set()
-        for u in versions:
-            doomed.update(self.manifest(u)["data_dirs"])
+        purged = [self.manifest(u) for u in versions]
+        doomed = {d for m in purged for d in m["data_dirs"]}
+        # the catalog is the session's (none active: nothing to drop);
+        # the tables are external, so DROP keeps their files
+        spark = SparkSession.getActiveSession()
+        for m in purged:
+            if "bucket" in m and spark is not None:
+                spark.sql(f"DROP TABLE IF EXISTS {m['bucket']['table']}")
         for d in doomed - retained:
             shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
         for u in versions:

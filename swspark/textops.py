@@ -94,15 +94,9 @@ def lang_id_stopwords(text: Column) -> Column:
 
 def doc_fingerprint(text: Column) -> Column:
     """Content fingerprint: md5 of the word-normalized text (md5 so
-    the DuckDB oracle can reproduce it byte-for-byte; the engine-native
-    variant is xxhash64 of the same normalization)."""
+    the DuckDB oracle can reproduce it byte-for-byte)."""
     normalized = F.array_join(words(text), " ")
     return F.md5(normalized)
-
-
-def doc_fingerprint_fast(text: Column) -> Column:
-    normalized = F.array_join(words(text), " ")
-    return F.xxhash64(normalized)
 
 
 # --- n-gram language ID (the "real" model: char-trigram profiles,

@@ -116,8 +116,10 @@ def test_dict_crawl_golden_trace_and_dedup(spark, corpus, tables, tmp_path):
 
     # the totals come from the waves' commit lineage, not table scans:
     # on a fresh warehouse they equal the tables' row counts
-    for name in ("records", "discovered", "seen"):
+    for name in ("records", "seen"):
         assert totals[name] == getattr(state, name).read(spark).count(), name
+    # the urbandict pages send no URLs
+    assert totals["discovered"] == 0, totals
 
 
 def test_wiki_crawl_discovery_and_budgets(spark, corpus, tables, tmp_path):
@@ -126,11 +128,20 @@ def test_wiki_crawl_discovery_and_budgets(spark, corpus, tables, tmp_path):
     )
     # one wave log: the schedule is committed once, to seen
     assert sorted(os.listdir(tmp_path / "w2")) == [
-        "discovered", "errors", "frontier", "records", "seen",
+        "errors", "frontier", "records", "seen",
     ]
     state = CrawlState(str(tmp_path / "w2"))
     trace = crawl_trace(spark, state).toPandas()
     assert trace.url.is_unique
+    # the sendUrl edges are counted, not written: the total is the
+    # golden edges of the fetched pages, and each fetch wave's frontier
+    # lineage carries its own count
+    edges = corpus.golden_fandom_urls
+    assert totals["discovered"] == edges.url.isin(trace.url).sum() > 0
+    by_wave = {m["lineage"]["wave"]: m["lineage"]["discovered"]
+               for m in state.frontier.history() if "pages_in" in m["lineage"]}
+    assert by_wave == trace.groupby("wave").url.apply(
+        lambda us: int(edges.url.isin(us).sum())).to_dict()
 
     # wave 0 = the 7 faction seeds; creatures appear only later
     w0 = trace[trace.wave == 0]
@@ -515,9 +526,11 @@ def test_frontier_plan_bounded_across_waves(
     )
     assert totals["waves"] >= 9, totals
     assert max(sizes[1:]) <= sizes[1], sizes
-    # the seen check runs once per wave that discovered something
-    disc = CrawlState(str(tmp_path / "wbound")).discovered.read(spark)
-    assert len(evals) == disc.select("wave").distinct().count() > 0
+    # the seen check runs once per wave that discovered something: a
+    # wave whose schedule holds a page with golden sendUrl edges
+    trace = crawl_trace(spark, CrawlState(str(tmp_path / "wbound"))).toPandas()
+    linking = trace[trace.url.isin(corpus.golden_fandom_urls.url)]
+    assert len(evals) == linking.wave.nunique() > 0
     for cand, out in evals:
         assert out == cand, evals
 
@@ -630,3 +643,16 @@ def test_frontier_stage_resurrects_at_ttl(spark, tmp_path):
     assert sorted(r.url for r in frontier.collect()) == [
         "https://A.TEST/y#top", "https://a.test/p",
     ]
+
+
+def test_frontier_rows_keep_least_raw_form(spark):
+    """One frontier row per canonical URL, and the raw form it keeps is
+    the least, whatever the input order: the fetch joins pages on the
+    raw string, so the pick decides between a fetch and a 404."""
+    from swspark.driver import _frontier_rows
+
+    forms = ["https://example.test/a", "https://Example.test/a"]
+    for urls in (forms, forms[::-1]):
+        df = spark.createDataFrame([(u,) for u in urls], "url string").coalesce(1)
+        got = [(r.url, r.host) for r in _frontier_rows(df, 0).collect()]
+        assert got == [("https://Example.test/a", "example.test")], urls

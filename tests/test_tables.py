@@ -127,6 +127,19 @@ def test_expire_snapshots_reclaims_superseded_dirs(spark, tmp_path):
     # version ids still never reused after expiry (HWM survives)
     v = _commit(spark, t, [9], 4)
     assert v > 4  # 5 snapshots existed before expiry
+    # each expired compaction's catalog table goes with it: without
+    # that, the catalog keeps every wave-partitioned base ever written
+    for w in range(5, 8):
+        _commit(spark, t, [w], w)
+        t.compact(spark, dict(B, partition=["wave"]),
+                  lineage={"wave": w, "compacted_through": w})
+        t.expire_snapshots(keep_last=2)
+    assert _xs(spark, t) == [0, 1, 2, 3, 5, 6, 7, 9]
+    prefix = t._bucket_table_name(0).rsplit("_v", 1)[0] + "_v"
+    live = {t.manifest(u)["bucket"]["table"] for u in t._all_versions()
+            if "bucket" in t.manifest(u)}
+    tables = {x.name for x in spark.catalog.listTables() if x.name.startswith(prefix)}
+    assert len(live) == 1 and tables == live, (tables, live)
 
 
 def test_read_refuses_oplog_deltas(spark, tmp_path):

@@ -112,8 +112,11 @@ def test_each_page_scraped_and_each_loc_accepted_once(
             locs.update(f"{kind} {u}" for u in urls)
         assert len(locs) > 40
     else:
-        # wave 0's discoveries are what the later waves fetch
-        disc = state.discovered.read(spark).toPandas()
-        assert len(disc) and set(disc.wave) == {0}
-        assert set(disc.discovered_url) <= set(trace[trace.wave >= 1].url)
+        # wave 0's discoveries are what the later waves fetch: the
+        # pages with golden sendUrl edges are all fetched in wave 0
+        edges = corpus.golden_fandom_urls
+        linking = trace[trace.url.isin(edges.url)]
+        assert len(linking) and set(linking.wave) == {0}
+        assert totals["discovered"] == len(edges[edges.url.isin(linking.url)])
+        assert set(edges.discovered_url) <= set(trace[trace.wave >= 1].url)
     assert _calls(log_dir, "accept") == locs

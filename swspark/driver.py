@@ -93,6 +93,8 @@ RESAMPLE_BOUNDS_WAVES = 8
 # snapshots retained at expiry after each compaction (>=2 keeps the
 # pre-compaction snapshot for time travel)
 SNAPSHOT_KEEP_LAST = 2
+# hash buckets of the compacted seen + frontier snapshots
+N_STORAGE_BUCKETS = 32
 # perfbench's --trace 1 rebinds this name (its trace reads it from this
 # module's __dict__); nothing calls it. Benchmark v2 removes it.
 build_filter_shards = None
@@ -111,11 +113,11 @@ class CrawlConfig:
     max_urls_per_wave: int | None = None
     # state-table layout: every K waves the seen + frontier tables are
     # compacted into ONE hash-bucketed snapshot (bucket keys = the
-    # join keys), so (a) the per-wave frontier commit is a wave-sized
-    # DELTA, never an O(|frontier|) rewrite, and (b) the discovery
-    # anti-join reads the accumulated base WITHOUT shuffling it
+    # join keys, N_STORAGE_BUCKETS buckets), so (a) the per-wave
+    # frontier commit is a wave-sized DELTA, never an O(|frontier|)
+    # rewrite, and (b) the discovery anti-join reads the accumulated
+    # base WITHOUT shuffling it
     compact_every_waves: int = 8
-    n_storage_buckets: int = 32
     on_dl_error: str = "skip"  # OnError::{Fail, SkipAndLog} (config.rs:81-86)
     on_xml_error: str = "skip"
     on_scrap_error: str = "skip"
@@ -171,7 +173,7 @@ class CrawlRun:
         # state-table layout: bucket keys ARE the join keys, so the
         # discovery anti-join and resume reconstruction stream the
         # compacted base straight from its bucket files (no shuffle)
-        self.key_bucket = {"by": _FRONTIER_KEYS, "n": c.n_storage_buckets,
+        self.key_bucket = {"by": _FRONTIER_KEYS, "n": N_STORAGE_BUCKETS,
                            "sort": _FRONTIER_KEYS}
 
     @property

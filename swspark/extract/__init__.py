@@ -8,7 +8,7 @@ vectorized Arrow pandas UDFs — the DOM never becomes a Spark type
 
 from swspark.extract.dom import Html, Node, NodeKind
 from swspark.extract.selectors import Selector, select
-from swspark.extract.udf import extraction_schema, make_extract_udf
+from swspark.extract.udf import make_extract_udf
 
 __all__ = [
     "Html",
@@ -16,6 +16,5 @@ __all__ = [
     "NodeKind",
     "Selector",
     "select",
-    "extraction_schema",
     "make_extract_udf",
 ]

@@ -47,7 +47,6 @@ from __future__ import annotations
 from html.parser import HTMLParser
 
 from swspark.extract.htmltok import tokenize as _fast_tokenize
-from swspark.extract.htmltok import tokenize_text as _fast_tokenize_text
 
 DOCUMENT = 0
 DOCTYPE = 1
@@ -326,28 +325,37 @@ class _EventCollector(HTMLParser):
         pass
 
 
-class _TextStream(HTMLParser):
-    """Tree-free fulltext extractor. Document-root inner_text is the
-    pre-order concat of TEXT nodes (element_ref/mod.rs:87-99), and the
-    tree builder appends text nodes in handle_data event order — so
-    joining the data events directly is byte-identical to
-    parse_document(...).root.inner_text() while skipping every Node
-    allocation (the fulltext hot path at corpus scale; equality is
-    pinned by the extract_identity oracle and the golden tests)."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.parts: list[str] = []
-
-    def handle_data(self, data: str) -> None:
-        if data:
-            self.parts.append(data)
+def _events(html: str | bytes) -> list[tuple]:
+    """The document's event list, from the one tokenizer both
+    extraction paths read. htmltok.tokenize is event-identical to
+    html.parser (differential-fuzzed in tests); a None return means the
+    document hit a construct only stdlib handles, so it is retokenized
+    whole with html.parser."""
+    if isinstance(html, (bytes, bytearray)):
+        html = bytes(html).decode("utf-8", errors="replace")
+    evs = _fast_tokenize(html)
+    if evs is None:
+        ec = _EventCollector()
+        try:
+            ec.feed(html)
+            ec.close()
+        except Exception:  # never fatal (html/mod.rs:19-22)
+            pass
+        evs = ec.events
+    return evs
 
 
 _TABLE_RX = __import__("re").compile(r"<[tT][aA][bB][lL][eE]")
 
 
 def stream_fulltext(html: str | bytes) -> str:
+    """Tree-free fulltext: parse_document(html).root.inner_text()
+    without building the tree. Document-root inner_text is the
+    pre-order concat of TEXT nodes (element_ref/mod.rs:87-99), and the
+    tree builder appends text nodes in data-event order, so joining
+    the data events is byte-identical while skipping every Node
+    allocation (equality is pinned by the extract_identity oracle and
+    the golden tests)."""
     if isinstance(html, (bytes, bytearray)):
         html = bytes(html).decode("utf-8", errors="replace")
     if _TABLE_RX.search(html) is not None:
@@ -360,16 +368,7 @@ def stream_fulltext(html: str | bytes) -> str:
         # and formatting reconstruction only move element boundaries,
         # never the relative order of character data.
         return Html.parse_document(html).root.inner_text()
-    parts = _fast_tokenize_text(html)
-    if parts is not None:
-        return "".join(parts)
-    ts = _TextStream()
-    try:
-        ts.feed(html)
-        ts.close()
-    except Exception:  # parse problems are never fatal (html/mod.rs:19-22)
-        pass
-    return "".join(ts.parts)
+    return "".join(ev[1] for ev in _events(html) if ev[0] == "d")
 
 
 # html5 tree-construction vocabulary (all sets straight from the
@@ -1150,23 +1149,9 @@ class Html:
 
     @classmethod
     def parse_document(cls, html: str | bytes) -> "Html":
-        if isinstance(html, (bytes, bytearray)):
-            html = bytes(html).decode("utf-8", errors="replace")
-        # fast tokenizer (event-identical to html.parser; differential-
-        # fuzzed in tests) — a None return means the document hit a
-        # construct only stdlib handles, so retokenize with html.parser.
-        # BOTH paths build through the same _build_tree, so the html5
-        # insertion rules apply identically whatever tokenized.
-        evs = _fast_tokenize(html)
-        if evs is None:
-            ec = _EventCollector()
-            try:
-                ec.feed(html)
-                ec.close()
-            except Exception:  # never fatal (html/mod.rs:19-22)
-                pass
-            evs = ec.events
-        root, errors = _build_tree(evs)
+        # both tokenizer paths build through the same _build_tree, so
+        # the html5 insertion rules apply identically whatever tokenized
+        root, errors = _build_tree(_events(html))
         return cls(root, errors)
 
     def select(self, selector_str: str):

@@ -208,136 +208,6 @@ def tokenize(html: str):  # noqa: C901 - one hot loop, kept flat on purpose
     return events
 
 
-def tokenize_text(html: str):
-    """Data events only — the whole-document inner_text fast path.
-
-    Consumes exactly the spans :func:`tokenize` consumes (same regexes,
-    same recovery rules — pinned by tests/test_htmltok_textonly.py) but
-    skips everything tags carry: no attribute finditer, no attribute
-    unescape, no event tuples. Returns the list of text parts whose
-    concatenation equals the data-event stream of :func:`tokenize`, or
-    None when the caller must fall back to stdlib ``html.parser``.
-    """
-    parts: list = []
-    ap = parts.append
-    find = html.find
-    startswith = html.startswith
-    i, n = 0, len(html)
-    while i < n:
-        j = find("<", i)
-        if j < 0:
-            ap(unescape(html[i:]))
-            break
-        if i < j:
-            ap(unescape(html[i:j]))
-        i = j
-        c = html[i + 1] if i + 1 < n else ""
-        if ("a" <= c <= "z") or ("A" <= c <= "Z"):
-            # ---- start tag: advance past it, no attr work -------------
-            selfclose = False
-            m = _SIMPLE_TAG.match(html, i + 1)
-            if m is not None:
-                tag = m.group(1).lower()
-                selfclose = bool(m.group(3))
-                i = m.end()
-            else:
-                tm = _TAGFIND.match(html, i + 1)
-                if tm is None:
-                    return None
-                tag = tm.group(1).lower()
-                k = tm.end()
-                while k < n:
-                    am = _ATTRFIND.match(html, k)
-                    if am is None:
-                        break
-                    k = am.end()
-                if startswith(">", k):
-                    i = k + 1
-                elif startswith("/>", k):
-                    selfclose = True
-                    i = k + 2
-                elif k >= n:
-                    i = _eof_flush_text(html, i, ap)
-                    continue
-                else:
-                    return None
-            if selfclose:
-                continue
-            if tag in ("script", "style"):
-                em = _CDATA_CLOSE[tag].search(html, i)
-                if em is None:
-                    break
-                if em.start() > i:
-                    ap(html[i:em.start()])
-                i = em.end()
-        elif c == "/":
-            gt = find(">", i + 1)
-            if gt < 0:
-                i = _eof_flush_text(html, i, ap)
-                continue
-            em = _ENDTAGFIND.match(html, i)
-            if em is not None:
-                i = em.end()
-            elif startswith("</>", i):
-                i += 3
-            else:
-                nm = _TAGFIND.match(html, i + 2)
-                if nm is not None:
-                    gt2 = find(">", nm.end())
-                    if gt2 < 0:
-                        return None
-                    i = gt2 + 1
-                else:
-                    i = gt + 1  # bogus comment: no text
-        elif c == "!":
-            if startswith("<!--", i):
-                cm = _COMMENTCLOSE.search(html, i + 4)
-                if cm is None:
-                    i = _eof_flush_text(html, i, ap)
-                    continue
-                i = cm.end()
-            elif startswith("<![", i):
-                return None
-            elif html[i:i + 9].lower() == "<!doctype":
-                gt = find(">", i + 9)
-                if gt < 0:
-                    i = _eof_flush_text(html, i, ap)
-                    continue
-                i = gt + 1
-            else:
-                gt = find(">", i + 2)
-                if gt < 0:
-                    i = _eof_flush_text(html, i, ap)
-                    continue
-                i = gt + 1
-        elif c == "?":
-            gt = find(">", i + 2)
-            if gt < 0:
-                i = _eof_flush_text(html, i, ap)
-                continue
-            i = gt + 1
-        elif i + 1 < n:
-            ap("<")
-            i += 1
-        else:
-            ap("<")
-            break
-    return parts
-
-
-def _eof_flush_text(html: str, i: int, ap) -> int:
-    """_eof_flush emitting the bare text part."""
-    k = html.find(">", i + 1)
-    if k < 0:
-        k = html.find("<", i + 1)
-        if k < 0:
-            k = i + 1
-    else:
-        k += 1
-    ap(unescape(html[i:k]))
-    return k
-
-
 def _eof_flush(html: str, i: int, ap) -> int:
     """stdlib goahead(end=1) recovery for a construct with no
     terminator: data up to (and including) the next '>', else up to

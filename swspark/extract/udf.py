@@ -30,7 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from swspark.extract.dom import Html
+from swspark.extract.dom import Html, stream_fulltext
 from swspark.extract.specs import SPECS, ExtractionSpec
 from swspark.extract.specs import _fulltext_scrap as _FULLTEXT_SCRAP
 
@@ -111,12 +111,6 @@ def spec_wants_context(spec: ExtractionSpec | str) -> bool:
         return False
 
 
-def extraction_schema(spec: ExtractionSpec) -> StructType:
-    """Fixed output schema for a spec's records (the reference's CSV
-    is headerless/untyped — writer.rs:9-12; we pin names instead)."""
-    return StructType([StructField(f, StringType()) for f in spec.fields])
-
-
 def make_extract_udf(spec: ExtractionSpec | str):
     """Build the Arrow pandas UDF for a spec (broadcast via closure).
     Context-aware specs (scrap_page(page, url, ctx)) get a
@@ -126,6 +120,9 @@ def make_extract_udf(spec: ExtractionSpec | str):
         spec = SPECS[spec]
     scrap = spec.scrap_page
     wants_ctx = spec_wants_context(spec)
+    # whole-document inner_text needs no DOM: stream the tokenizer's
+    # data events instead (byte-identical, see dom.stream_fulltext)
+    fulltext = spec.name == "fulltext" and scrap is _FULLTEXT_SCRAP
 
     def _run_batch(url, html, rules=None, loc_kind=None):
         from pyspark import TaskContext
@@ -143,16 +140,17 @@ def make_extract_udf(spec: ExtractionSpec | str):
             try:
                 if h is None:
                     raise ValueError("null html")
-                doc = Html.parse_document(h)
-                if wants_ctx:
+                if fulltext:
+                    recs, urls = [[stream_fulltext(h)]], []
+                elif wants_ctx:
                     robot = compile_raw_rules(rl) if rl is not None else None
                     recs, urls = scrap(
-                        doc, u,
+                        Html.parse_document(h), u,
                         ScrapingContext(u, worker_id, robot,
                                         location_kind=lk),
                     )
                 else:
-                    recs, urls = scrap(doc, u)
+                    recs, urls = scrap(Html.parse_document(h), u)
                 records_out.append(recs)
                 urls_out.append(urls)
                 errors_out.append(None)
@@ -170,29 +168,6 @@ def make_extract_udf(spec: ExtractionSpec | str):
         def extract(url: pd.Series, html: pd.Series, rules: pd.Series,
                     loc_kind: pd.Series) -> pd.DataFrame:
             return _run_batch(url, html, rules, loc_kind)
-
-    elif spec.name == "fulltext" and spec.scrap_page is _FULLTEXT_SCRAP:
-        # fast path: whole-document inner_text needs no DOM at all —
-        # stream the tokenizer events (byte-identical, see
-        # dom.stream_fulltext; ~2x fewer allocations per page)
-        from swspark.extract.dom import stream_fulltext
-
-        @F.pandas_udf(EXTRACT_RESULT_TYPE)
-        def extract(url: pd.Series, html: pd.Series) -> pd.DataFrame:
-            records_out, urls_out, errors_out = [], [], []
-            for h in html:
-                if h is None:
-                    records_out.append(None)
-                    urls_out.append(None)
-                    errors_out.append("ValueError: null html")
-                    continue
-                records_out.append([[stream_fulltext(h)]])
-                urls_out.append([])
-                errors_out.append(None)
-            return pd.DataFrame(
-                {"records": records_out, "urls": urls_out,
-                 "error": errors_out}
-            )
 
     else:
 

@@ -437,9 +437,6 @@ def schedule_wave(
     max_urls_per_wave: int | None = None,
     host_col: str = "host",
     strategy: str = "distributed",
-    n_buckets: int | None = None,
-    boundary_source: DataFrame | None = None,
-    approx_count: int | None = None,
     bounds: "HostBounds | None" = None,
 ) -> DataFrame:
     """Select this wave's URLs: rank per host, cut at the politeness
@@ -458,20 +455,22 @@ def schedule_wave(
     caps scaling at any cluster size (measured: 0.45 stage efficiency
     8->32 cores, BENCH.md r4). ``strategy`` picks the rank:
 
-    - "distributed" (default): sample boundary tuples on the order
-      key (from ``boundary_source`` if given — any cheap superset
-      scan, e.g. the frontier table before the seen anti-join — else
-      the frontier itself), then rank_frontier_distributed: one full
-      shuffle with hot hosts bucketed into bounded parallel sorts,
-      a cheap numeric re-rank, and an exact pre-shuffle budget cut.
-      Exact for any priority / timestamp / url values (the bucket
-      key is a monotone coarsening; ties merge buckets, never
-      reorder).
-    - any other value (e.g. "two_phase"): the exact reference — one
-      plain per-host ``row_number`` window over the schedule order,
-      cut at the budget (rank_frontier_distributed with no bounds).
-      Each host sorts in one task; tests and the benchmark compare
-      the distributed rank against it.
+    - "distributed" (default) with ``bounds`` (sample_order_bounds
+      boundary tuples on the order key, sampled from the frontier or
+      any cheap superset scan, e.g. the frontier table before the
+      seen anti-join): rank_frontier_distributed — one full shuffle
+      with hot hosts bucketed into bounded parallel sorts, a cheap
+      numeric re-rank, and an exact pre-shuffle budget cut. Exact for
+      any priority / timestamp / url values (the bucket key is a
+      monotone coarsening; ties merge buckets, never reorder).
+      Boundaries only steer balance, never results, so ``bounds`` may
+      be sampled on an earlier wave (the driver resamples every K
+      waves): stale bounds at worst unbalance the hot host's buckets.
+    - no ``bounds``, or any other strategy (e.g. "two_phase"): the
+      exact reference — one plain per-host ``row_number`` window over
+      the schedule order, cut at the budget (rank_frontier_distributed
+      with no bounds). Each host sorts in one task; tests and the
+      benchmark compare the distributed rank against it.
 
     Both produce byte-identical schedules (golden tests pin it).
     """
@@ -493,20 +492,8 @@ def schedule_wave(
             ),
         ).drop("backoff_k")
 
-    if strategy != "distributed":
+    if bounds is None or strategy != "distributed":
         bounds = HostBounds({})
-    elif bounds is None:
-        if n_buckets is None:
-            n_buckets = default_n_buckets(frontier.sparkSession)
-        # boundaries only steer balance, never results, so a caller
-        # may pass ``bounds`` sampled on an earlier wave (the driver
-        # resamples every K waves): stale bounds at worst unbalance
-        # the hot host's buckets for a few waves
-        bounds = sample_order_bounds(
-            boundary_source if boundary_source is not None else frontier,
-            n_buckets,
-            approx_count=approx_count,
-        )
     picked = rank_frontier_distributed(
         base, bounds, host_col=host_col, budget_col="_budget"
     ).drop("crawl_delay", "_budget")

@@ -82,8 +82,7 @@ def get_spark(
         # rewrite SMJ -> SHJ for post-shuffle partitions < 64 MB.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "64m"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m"
         )
         # (r6 note: a global openCostInBytes cut was measured and
         # REVERTED — it split every small single-row-group input into

@@ -315,44 +315,25 @@ class SnapshotTable:
                 pass
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        m = self.manifest(version)
-        if m is None:
-            raise FileNotFoundError(f"no snapshot in {self.root}")
-        bv = self.base_version(m["version"])
-        if bv is None and m.get("base") is not None:
-            # the base's dirs may still be on disk (later snapshots
-            # name them), but without its manifest they would be
-            # globbed flat with the deltas, op-log rows and all
-            raise FileNotFoundError(
-                f"{self.root}: snapshot v{m['version']} rests on the "
-                f"compacted base v{m['base']}, which has been expired"
-            )
-        if bv is not None:
-            # a compacted base may be dir-partitioned; its dirs cannot
-            # be globbed together with flat delta dirs — route the
-            # base through the catalog and union the deltas by name
-            base_dirs = set(self.manifest(bv)["data_dirs"])
-            df = self.read_bucketed(spark, bv)
-            delta_dirs = [d for d in m["data_dirs"] if d not in base_dirs]
-            if delta_dirs:
-                deltas = self._read_dirs(
-                    spark, delta_dirs, self._writers(m, stop=bv)
+        """The snapshot as one DataFrame: the union of read_split's
+        parts (a compacted base may be dir-partitioned, so its dirs
+        cannot be globbed together with flat delta dirs)."""
+        df, *deltas = self.read_split(spark, version)
+        for d in deltas:
+            extra = set(d.columns) - set(df.columns)
+            if extra:
+                # op-log deltas (frontier: op/delta_wave) are NOT
+                # plain appended rows — a naive union would surface
+                # del markers as data. Fail loudly instead of
+                # AnalysisException-ing deep inside unionByName.
+                raise ValueError(
+                    f"{self.root}: delta commits carry op-log columns "
+                    f"{sorted(extra)}; read()/compact() cannot fold "
+                    "an op log — reconstruct via "
+                    "driver._reconstruct_frontier / fold_frontier_ops"
                 )
-                extra = set(deltas.columns) - set(df.columns)
-                if extra:
-                    # op-log deltas (frontier: op/delta_wave) are NOT
-                    # plain appended rows — a naive union would surface
-                    # del markers as data. Fail loudly instead of
-                    # AnalysisException-ing deep inside unionByName.
-                    raise ValueError(
-                        f"{self.root}: delta commits carry op-log columns "
-                        f"{sorted(extra)}; read()/compact() cannot fold "
-                        "an op log — reconstruct via "
-                        "driver._reconstruct_frontier / fold_frontier_ops"
-                    )
-                df = df.unionByName(deltas)
-            return df
-        return self._read_dirs(spark, m["data_dirs"], self._writers(m))
+            df = df.unionByName(d)
+        return df
 
     def read_bucketed(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Read a bucketed snapshot THROUGH the catalog so Spark knows
@@ -404,14 +385,22 @@ class SnapshotTable:
         """The scale read path: [bucketed base, delta-dirs...] as
         SEPARATE DataFrames so callers can join each with the right
         strategy — shuffle-free sort-merge against the base, broadcast
-        against the (wave-sized) deltas. Falls back to [read()] when
-        no compaction has happened yet."""
+        against the (wave-sized) deltas. One part, the snapshot's own
+        dirs, when no compaction has happened yet."""
         m = self.manifest(version)
         if m is None:
             raise FileNotFoundError(f"no snapshot in {self.root}")
         bv = self.base_version(m["version"])
         if bv is None:
-            return [self.read(spark, m["version"])]
+            if m.get("base") is not None:
+                # the base's dirs may still be on disk (later snapshots
+                # name them), but without its manifest they would be
+                # globbed flat with the deltas, op-log rows and all
+                raise FileNotFoundError(
+                    f"{self.root}: snapshot v{m['version']} rests on the "
+                    f"compacted base v{m['base']}, which has been expired"
+                )
+            return [self._read_dirs(spark, m["data_dirs"], self._writers(m))]
         base_dirs = set(self.manifest(bv)["data_dirs"])
         delta_dirs = [d for d in m["data_dirs"] if d not in base_dirs]
         out = [self.read_bucketed(spark, bv)]

@@ -115,11 +115,59 @@ def test_unsupported_pseudo_classes_rejected():
 
 # --- inner_text / inner_html semantics ------------------------------------
 
+# tokenizer edge cases: quoted '>', rawtext, unterminated constructs
+# at EOF (stdlib's goahead recovery), bogus comments and end tags,
+# entities, marked sections (the stdlib fallback), control characters
+TOKENIZER_ADVERSARIAL = [
+    "",
+    "plain text only",
+    "a < b and c > d",
+    "<p>hello</p>",
+    "<p class='x'>a<b>c</b></p>",
+    '<a href="x>y">quoted gt</a>',
+    "<a href='x>y' title=\"z>w\">both</a>",
+    "<br/><hr />text",
+    "<script>var x = '<p>not a tag</p>';</script>after",
+    "<script>unterminated",
+    "<style>p { color: red; }</style>tail",
+    "<SCRIPT>UPPER</SCRIPT>ok",
+    "<!-- comment -->text<!-- unterminated",
+    "<!doctype html><p>x</p>",
+    "<!DOCTYPE HTML PUBLIC '-//W3C//DTD HTML 4.01//EN'>y",
+    "<?php echo 1; ?>text",
+    "<?incomplete",
+    "</p>stray end</p>",
+    "</>empty end tag</>x",
+    "</ bogus>text",
+    "<div<div>nested lt</div>",
+    "<p>&amp; &lt; &gt; &#65; &#x41; &unknown;</p>",
+    "< notatag>",
+    "<",
+    "text<",
+    "<p",
+    "<p class",
+    "<p class=",
+    "<p class='unterminated",
+    "<input value=no-quotes x>",
+    "<input checked>",
+    "<weird-tag:ns.dotted attr=1>t</weird-tag:ns.dotted>",
+    "<p / >slash sep</p>",
+    "<p a='1'/>selfclose attr",
+    "<p\ta='1'\nb=2>ws attrs</p>",
+    "<![CDATA[not replicated]]>",
+    "<b>&euro;100&nbsp;&copy;</b>",
+    "<p>multi\nline\ttext</p>",
+    "\x00null<p>\x00</p>",
+]
+
+
 def test_stream_fulltext_equals_dom_inner_text():
     """The tree-free fulltext path must be byte-identical to the DOM
     path on adversarial inputs (rawtext, entities, broken nesting,
-    stray end tags, PIs, CDATA-ish, unicode, empty)."""
+    stray end tags, PIs, CDATA-ish, unicode, empty, the tokenizer's
+    edge cases) and on every page of the tiny fixture corpus."""
     from swspark.extract.dom import stream_fulltext
+    from swspark.fixtures import generate_corpus
 
     cases = [
         b"<script>var a = '<b>x</b>';</script>after",
@@ -133,9 +181,28 @@ def test_stream_fulltext_equals_dom_inner_text():
         b"<br/><img src=x>t<textarea><b>raw</b></textarea>",
         b"",
         b"<title>t</title><pre>  spaced\n\n</pre>",
+        *TOKENIZER_ADVERSARIAL,
+        *generate_corpus("tiny").pages["html"],
     ]
     for h in cases:
         assert stream_fulltext(h) == Html.parse_document(h).root.inner_text(), h
+
+
+def test_fulltext_udf_null_html_is_an_error_row(spark):
+    """The fulltext spec runs through the shared batch loop: a null
+    page is an error row, the others one record and no URLs."""
+    from swspark.extract.udf import apply_extraction
+
+    pages = spark.createDataFrame(
+        [("https://ex.test/a", b"<p>a &amp; b</p>"), ("https://ex.test/b", None)],
+        "url string, html binary",
+    )
+    rec, urls, errs = apply_extraction(pages, "fulltext")
+    assert [tuple(r) for r in rec.collect()] == [("https://ex.test/a", "a & b")]
+    assert urls.count() == 0
+    assert [tuple(r) for r in errs.collect()] == [
+        ("https://ex.test/b", "ValueError: null html")
+    ]
 
 
 def test_stream_fulltext_property():

@@ -98,7 +98,9 @@ def test_distributed_rank_exact_vs_single_window(spark, frontier):
 def test_distributed_schedule_identical_to_two_phase(spark, frontier, budgets):
     kw = dict(wave_period=10.0, throttle=Throttle("CONCURRENT", 7))
     plain = schedule_wave(frontier, budgets, strategy="two_phase", **kw)
-    dist = schedule_wave(frontier, budgets, n_buckets=23, **kw)
+    dist = schedule_wave(
+        frontier, budgets, bounds=sample_order_bounds(frontier, 23), **kw
+    )
     a, b = _collect(plain), _collect(dist)
     assert a == b
     assert len(a) > 0
@@ -112,7 +114,9 @@ def test_distributed_with_backoff_and_cap(spark, frontier, budgets):
         F.when(F.col("host") == "h1.test", F.lit(2)).otherwise(F.lit(None)),
     )
     plain = schedule_wave(frontier, bb, strategy="two_phase", **kw)
-    dist = schedule_wave(frontier, bb, n_buckets=23, **kw)
+    dist = schedule_wave(
+        frontier, bb, bounds=sample_order_bounds(frontier, 23), **kw
+    )
     assert _collect(plain) == _collect(dist)
 
 
@@ -122,7 +126,9 @@ def test_budget_prune_cuts_shuffle_rows_exactly(spark, frontier, budgets):
     budget)."""
     kw = dict(wave_period=10.0, throttle=Throttle("CONCURRENT", 3))
     plain = schedule_wave(frontier, budgets, strategy="two_phase", **kw)
-    dist = schedule_wave(frontier, budgets, n_buckets=64, **kw)
+    dist = schedule_wave(
+        frontier, budgets, bounds=sample_order_bounds(frontier, 64), **kw
+    )
     assert _collect(plain) == _collect(dist)
     # every host's schedule is exactly its budget (3000 pending >> 3)
     per_host = {
@@ -138,7 +144,9 @@ def test_budget_spanning_multiple_buckets(spark, frontier, budgets):
     apply — the case a budget << bucket_size run never exercises."""
     kw = dict(wave_period=10.0, throttle=Throttle("CONCURRENT", 700))
     plain = schedule_wave(frontier, budgets, strategy="two_phase", **kw)
-    dist = schedule_wave(frontier, budgets, n_buckets=64, **kw)
+    dist = schedule_wave(
+        frontier, budgets, bounds=sample_order_bounds(frontier, 64), **kw
+    )
     assert _collect(plain) == _collect(dist)
     # and per host exactly budget rows (3000 pending >> 700)
     per_host = {
@@ -168,8 +176,6 @@ def test_boundary_source_superset_is_exact(spark, frontier, budgets):
     sub = frontier.where(F.pmod(F.xxhash64("url"), F.lit(3)) != 0)
     kw = dict(wave_period=10.0, throttle=Throttle("CONCURRENT", 9))
     plain = schedule_wave(sub, budgets, strategy="two_phase", **kw)
-    dist = schedule_wave(
-        sub, budgets, n_buckets=23, boundary_source=frontier,
-        approx_count=3 * N_PER_HOST, **kw
-    )
+    bounds = sample_order_bounds(frontier, 23, approx_count=3 * N_PER_HOST)
+    dist = schedule_wave(sub, budgets, bounds=bounds, **kw)
     assert _collect(plain) == _collect(dist)
